@@ -1,26 +1,7 @@
-"""Scale-adaptive partition pinning for exploding operators.
-
-AQE's partition coalescing decides partition counts from the MAP
-OUTPUT BYTES of a shuffle. That is the right signal for ordinary
-operators, but it serializes two shapes this engine uses heavily
-(measured r11, guide §2.5 "exploding joins"):
-
-- a self-join whose *input* is a few hundred KB of banded keys but
-  whose *output* is the quadratic candidate-pair set: AQE folds the
-  tiny input shuffle to one partition and the entire pair generation
-  runs single-threaded (q_embedding_neardup_lsh at sf0.1: 1.36M pairs
-  generated and verified on one core, 12-44 s; 2 s once pinned);
-- a compute-heavy verify (dot products, array intersections) running
-  on the coalesced partitioning of an upstream tiny shuffle.
-
-``repartition(n, keys)`` / ``repartition(n)`` with an EXPLICIT n is
-exempt from AQE coalescing, so these helpers pin parallelism at the
-session's ``defaultParallelism`` — the executor-core count locally
-and the cluster-wide core count on a real deployment, so the pin
-scales with the hardware instead of hard-coding either.  At sizes
-where AQE would not have coalesced anyway the pin is a no-op in
-practice: the exchange it introduces is the same exchange the
-downstream join/window required.
+"""Size-aware attach side for verify joins (``attach_small``): broadcast
+the per-doc payload side while the optimizer's size estimate stays
+under ``spark.nimble.verifyAttach.maxBroadcastBytes``, else fall back to
+a shuffle-hash attach that scales with the input.
 """
 
 from __future__ import annotations
@@ -61,10 +42,7 @@ def attach_small(df: DataFrame) -> DataFrame:
     either way); only the physical strategy differs.
     """
     spark = df.sparkSession
-    try:
-        thr = int(spark.conf.get(VERIFY_ATTACH_CONF, str(VERIFY_ATTACH_DEFAULT_BYTES)))
-    except ValueError:
-        thr = VERIFY_ATTACH_DEFAULT_BYTES
+    thr = int(spark.conf.get(VERIFY_ATTACH_CONF, str(VERIFY_ATTACH_DEFAULT_BYTES)))
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # noqa: BLE001 — unestimable ⇒ assume large
@@ -72,18 +50,3 @@ def attach_small(df: DataFrame) -> DataFrame:
     if est is not None and 0 <= est <= thr:
         return F.broadcast(df)
     return df.hint("shuffle_hash")
-
-
-def pinned_repartition(df: DataFrame, *cols: str) -> DataFrame:
-    """Hash-repartition on ``cols`` (or round-robin with no cols) into
-    ``defaultParallelism`` partitions, pinned against AQE coalescing.
-
-    Use keyed form directly below a join/window that needs that key
-    partitioning (the exchange is then the one the operator required,
-    just with a pinned width); use the keyless form to spread an
-    already-generated candidate set before an embarrassingly parallel
-    verify."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if cols:
-        return df.repartition(n, *cols)
-    return df.repartition(n)

@@ -2475,7 +2475,7 @@ def q_alter_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema is then widened to bigint/double metadata-only (no byte
     rewritten), and the other half appends ALREADY WIDE — every read
     upcasts the narrow files to the declared types per file
-    (_restore_aliases; the reference's UPCAST reads,
+    (table._plan_parquet's declared-schema scan; the reference's UPCAST reads,
     velox/selective/ColumnReader.cpp int stream → BIGINT vector,
     made durable in the manifest rather than per-read
     ``evolved_types``). The oracle recomputes over the whole raw

@@ -178,8 +178,8 @@ def _path_partition_values(file_path: str) -> dict:
 def _parse_partition_value(raw, dtype: str):
     """Path-string → typed Python value per the DECLARED Spark type.
     STRING is identity (no lossy re-inference: '01' stays '01' — the
-    same fidelity contract as table._plan_parquet's declared-schema
-    replan)."""
+    same fidelity contract as table._plan_parquet, which plans every
+    scan with the manifest's declared schema)."""
     if raw is None:
         return None
     if dtype in ("tinyint", "smallint", "int", "bigint"):

@@ -41,14 +41,6 @@ from nimble_spark.sources.table import (
 )
 
 
-def _to_logical(df: DataFrame, manifest: dict) -> DataFrame:
-    """Physical file scan → the table's logical view: schema mapping
-    applied AND schema-completed (an affected file may predate an
-    alter_table ADD — its missing logical fields fill as typed nulls,
-    exactly as a read would surface them)."""
-    return _restore_aliases(df, manifest, complete=True)
-
-
 def _to_physical(df: DataFrame, manifest: dict) -> DataFrame:
     """Logical → physical names before staging a rewrite's rows:
     files must stay physically consistent with the manifest schema
@@ -278,7 +270,7 @@ def merge_into(
             if (b := _bucket_of(f["path"])) in hit or b is None
         ]
         scan = (
-            _to_logical(
+            _restore_aliases(
                 _plan_parquet(
                     spark, [os.path.join(path, f) for f in cand], path, "merge discovery", manifest
                 ),
@@ -302,7 +294,7 @@ def merge_into(
         # as directory strings, and re-inferring their type here would
         # REWRITE '01' as the integer 1 — durable corruption, not a
         # read-side glitch (see table._plan_parquet).
-        aff_df = _to_logical(
+        aff_df = _restore_aliases(
             _plan_parquet(
                 spark, [os.path.join(path, f) for f in affected], path, "merge rewrite", manifest
             ),
@@ -554,7 +546,7 @@ def update_where(
         return manifest
     # _plan_parquet keeps partition values at their declared type —
     # a raw re-inferring reader here would REWRITE '01' as 1.
-    aff_df = _to_logical(
+    aff_df = _restore_aliases(
         _plan_parquet(
             spark, [os.path.join(path, f) for f in affected], path, "update rewrite", manifest
         ),

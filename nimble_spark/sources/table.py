@@ -2105,7 +2105,7 @@ def read_table(
                 f"snapshot at commit {as_of_commit} is gone (compaction/vacuum removed {missing[:3]}…)"
             )
         if not snap:
-            return _restore_aliases(_empty_df(spark, manifest), manifest, complete=True)
+            return _restore_aliases(_empty_df(spark, manifest), manifest)
         df = _plan_grouped_parquet(
             spark,
             list(zip(snap, resolved)),
@@ -2114,12 +2114,12 @@ def read_table(
         )
         if BUCKET_COL in df.columns:
             df = df.drop(BUCKET_COL)
-        df = _restore_aliases(df, manifest, complete=True)
+        df = _restore_aliases(df, manifest)
         if columns:
             df = _project_with_evolution(df, manifest, columns, evolved_types)
         return df
     if row_range is not None:
-        df = _restore_aliases(_read_row_range(spark, path, _full(), *row_range), manifest, complete=True)
+        df = _restore_aliases(_read_row_range(spark, path, _full(), *row_range), manifest)
         if columns:
             df = _project_with_evolution(df, manifest, columns, evolved_types)
         return df
@@ -2162,7 +2162,6 @@ def read_table(
             df = _restore_aliases(
                 df.filter(F.col(BUCKET_COL).isin(buckets)).filter(residual).drop(BUCKET_COL),
                 manifest,
-                complete=True,
             )
             if columns:
                 # same evolution contract as every other path: absent
@@ -2214,13 +2213,13 @@ def read_table(
         df = df.drop(BUCKET_COL)
     if residual is not None:
         df = df.filter(residual)
-    df = _restore_aliases(df, manifest, complete=True)
+    df = _restore_aliases(df, manifest)
     if columns:
         df = _project_with_evolution(df, manifest, columns, evolved_types)
     return df
 
 
-def _restore_aliases(df: DataFrame, manifest: dict, complete: bool = False) -> DataFrame:
+def _restore_aliases(df: DataFrame, manifest: dict) -> DataFrame:
     """Restore deduplicated columns (manifest ``column_aliases``) on a
     frame read from the physical files: each duplicate re-materializes
     as a zero-cost reference to its stored twin (Catalyst projects it;
@@ -2249,51 +2248,6 @@ def _restore_aliases(df: DataFrame, manifest: dict, complete: bool = False) -> D
             out = out.withColumn(dup, F.col(kept))
             cols.add(dup)
     out = apply_schema_mapping(out, manifest)
-    if complete:
-        # Schema-complete scans: logical fields absent from every
-        # scanned file (alter_table ADD, or a narrow append) surface
-        # as typed nulls — the NullColumnReader evolution contract,
-        # applied to plain scans, not just explicit projections.
-        mapping = manifest.get("schema_mapping") or {}
-        ren = mapping.get("renames") or {}
-        gone = set(mapping.get("dropped", []))
-        have = set(out.columns)
-        fills = [
-            F.lit(None)
-            .cast(T.StructField.fromJson(f).dataType)
-            .alias(ren.get(f["name"], f["name"]))
-            for f in manifest.get("schema", {}).get("fields", [])
-            if f["name"] not in gone
-            and ren.get(f["name"], f["name"]) not in have
-        ]
-        if fills:
-            out = out.select(*out.columns, *fills)
-    # Persisted type widening (alter_table widen): the manifest's
-    # declared type is the read contract — columns whose scan dtype is
-    # a LOSSLESS narrowing of it upcast here (per-file narrow bytes,
-    # declared-width vectors: the reference's UPCAST read). Applied
-    # only when the (stored → declared) pair is a safe widening, so
-    # incidental representation mismatches are left untouched.
-    mapping_w = manifest.get("schema_mapping") or {}
-    ren_w = mapping_w.get("renames") or {}
-    gone_w = set(mapping_w.get("dropped", []))
-    scan_types = dict(out.dtypes)
-    casts = {}
-    for f in manifest.get("schema", {}).get("fields", []):
-        if f["name"] in gone_w:
-            continue
-        logical = ren_w.get(f["name"], f["name"])
-        stored = scan_types.get(logical)
-        declared = T.StructField.fromJson(f).dataType.simpleString()
-        if stored is not None and stored != declared and _safe_widening(stored, declared):
-            casts[logical] = declared
-    if casts:
-        out = out.select(
-            *[
-                F.col(c).cast(casts[c]).alias(c) if c in casts else F.col(c)
-                for c in out.columns
-            ]
-        )
     order = logical_field_names(manifest)
     out_cols = list(out.columns)
     out_colset = set(out_cols)
@@ -2643,54 +2597,31 @@ def materialize_columns(spark: SparkSession, path: str) -> dict:
         return staged_swap_rewrite(spark, path, df, opts)
 
 
-def _partition_declared_types(manifest: Optional[dict]) -> dict[str, T.DataType]:
-    """Declared types of the table's Hive partition columns (manifest
-    ``indexes.partition.keys`` ∩ schema). Partition values live only
-    in directory NAMES, so Spark re-infers their type from the
-    rendered strings at every plan — lossily: a STRING column of
-    '01','02' infers INT 1,2 and the leading zero is unrecoverable.
-    Scans must re-plan with the declared type when inference
-    disagrees (see _plan_parquet)."""
-    if not manifest:
-        return {}
-    keys = manifest.get("indexes", {}).get("partition", {}).get("keys") or []
-    if not keys:
-        return {}
-    types = {
-        f["name"]: T.StructField.fromJson(f).dataType
-        for f in manifest.get("schema", {}).get("fields", [])
-    }
-    return {k: types[k] for k in keys if k in types}
-
-
 def _plan_parquet(
     spark: SparkSession,
     paths: list[str],
     base_path: str | None,
     what: str,
-    manifest: Optional[dict] = None,
+    manifest: dict,
 ) -> DataFrame:
-    """Plan a parquet scan over explicit file paths, translating the
-    plan-time schema-inference failure Spark raises when EVERY listed
-    file vanished mid-plan (UNABLE_TO_INFER_SCHEMA — a concurrent
-    rewrite moved them to trash between the manifest read and this
-    call) into the standard retryable gone-window error the
-    consistency contract documents (USAGE.md: a racing read either
-    returns a full snapshot or fails cleanly; retry it). Execution-
-    time file loss already surfaces cleanly (FILE_NOT_EXIST).
+    """Plan a parquet scan over explicit file paths with the manifest's
+    DECLARED schema — the table's schema is fixed in its metadata, as
+    Nimble's is in the file's (SchemaReader.h), so no footer is read
+    to infer it and planning starts no Spark job. Every declared
+    column resolves per file: present ones read for real (narrower
+    stored integer/float widths decode into declared-width vectors,
+    the alter_table widen contract), absent ones read as typed nulls
+    (alter_table ADD; the NullColumnReader analogue,
+    selective/ColumnReader.cpp:57-62). Hive partition columns stay in
+    the schema, so Spark parses their directory strings at the
+    declared type — p STRING '01' stays '01', never INT 1.
 
-    When ``manifest`` is given, Hive partition columns keep their
-    DECLARED types and exact values: partition values exist only as
-    directory-name strings, and Spark's per-plan type inference is
-    lossy — p STRING of '01','02' infers INT 1,2, silently retyping
-    the column AND destroying the leading zero (a '01' vs '1' key
-    mismatch downstream). On a declared-vs-inferred conflict the scan
-    re-plans with an explicit schema (inferred data columns + declared
-    partition columns), under which Spark parses the raw path string
-    with the declared type — identity for STRING, so values survive
-    verbatim. Conflict-free tables (non-string partition keys, or
-    string values that don't look numeric/boolean) stay on the
-    single-pass inference plan."""
+    A file that vanished between the manifest read and this call (a
+    concurrent rewrite moved it to trash) raises the standard
+    retryable gone-window error the consistency contract documents
+    (USAGE.md: a racing read either returns a full snapshot or fails
+    cleanly; retry it). Execution-time file loss already surfaces
+    cleanly (FILE_NOT_EXIST)."""
     from pyspark.errors import AnalysisException
 
     if base_path is not None:
@@ -2702,70 +2633,18 @@ def _plan_parquet(
         bp = os.path.normpath(base_path) + os.sep
         if any(not os.path.normpath(p).startswith(bp) for p in paths):
             base_path = None
-    reader = spark.read
+    reader = spark.read.schema(T.StructType.fromJson(manifest["schema"]))
     if base_path is not None:
         reader = reader.option("basePath", base_path)
     try:
         df = reader.parquet(*paths)
     except AnalysisException as exc:
-        if "UNABLE_TO_INFER_SCHEMA" in str(exc) or "PATH_NOT_FOUND" in str(exc):
+        if "PATH_NOT_FOUND" in str(exc):
             raise ValueError(
                 f"{what} planned against files that are gone (concurrent "
                 f"rewrite/compaction moved them; retry the read)"
             ) from exc
         raise
-    declared = _partition_declared_types(manifest)
-    conflicts = {
-        f.name: declared[f.name]
-        for f in df.schema.fields
-        if f.name in declared and f.dataType != declared[f.name]
-    }
-    # alter-widen: inference samples ONE footer, so a legally
-    # mixed-width table's scan schema depends on file order — and a
-    # WIDE file read under a narrow sampled schema is a NARROWING the
-    # parquet reader refuses (nondeterministic
-    # PARQUET_COLUMN_DATA_TYPE_MISMATCH, caught by the full-suite
-    # ordering). Re-plan with the DECLARED type for every safely
-    # widened column: under the wide explicit schema the vectorized
-    # reader's widening promotions decode narrow files into
-    # declared-width vectors deterministically.
-    if manifest and manifest.get("schema"):
-        _mtypes = {
-            f["name"]: T.StructField.fromJson(f).dataType
-            for f in manifest["schema"]["fields"]
-        }
-        for f in df.schema.fields:
-            want = _mtypes.get(f.name)
-            if (
-                want is not None
-                and f.dataType != want
-                and _safe_widening(f.dataType.simpleString(), want.simpleString())
-            ):
-                conflicts[f.name] = want
-    # Mixed-schema file sets: Spark's single-pass inference samples ONE
-    # file, so a column only newer files carry (alter_table ADD, or a
-    # widened append) silently reads as ABSENT — its real values in the
-    # newer files lost, not nulled. The manifest's declared schema is
-    # the union authority: re-plan with it explicit, under which every
-    # file's missing columns read as nulls and present ones read for
-    # real (same resolution rule Spark applies to any explicit schema).
-    missing_declared = []
-    if manifest and manifest.get("schema"):
-        have = {f.name for f in df.schema.fields}
-        missing_declared = [
-            T.StructField.fromJson(f)
-            for f in manifest["schema"]["fields"]
-            if f["name"] not in have
-        ]
-    if conflicts or missing_declared:
-        fixed = T.StructType(
-            [
-                T.StructField(f.name, conflicts.get(f.name, f.dataType), f.nullable)
-                for f in df.schema.fields
-            ]
-            + [T.StructField(f.name, f.dataType, True) for f in missing_declared]
-        )
-        df = reader.schema(fixed).parquet(*paths)
     # Above spark.sql.sources.parallelPartitionDiscovery.threshold
     # (default 32) root paths, Spark lists them with a distributed job
     # that SILENTLY DROPS files vanishing mid-listing ("deleted during
@@ -2790,32 +2669,16 @@ def _plan_grouped_parquet(
     reads): grouping by resolution base keeps Hive partition columns
     recoverable (the relative path preserves its p=X/ shape in both
     locations — a delete event or snapshot row with NULL partition
-    values could never be matched downstream). Each group's columns
-    then cast to the DECLARED schema: partition-type inference runs
-    per group and can disagree — a live group of p='x' infers STRING
-    while a trash group of p='1' infers INT — which would crash the
-    union (CAST_INVALID_INPUT under ANSI) or silently retype p."""
-    schema = T.StructType.fromJson(manifest["schema"])
-    types = {f.name: f.dataType for f in schema.fields}
+    values could never be matched downstream). Every group plans with
+    the declared schema, so the groups union column for column."""
     groups: dict[str, list[str]] = {}
     for f, r in pairs:
         base = r[: len(r) - len(f)].rstrip("/") or "/"
         groups.setdefault(base, []).append(r)
-    dfs = []
-    for base, paths in sorted(groups.items()):
-        df = _plan_parquet(spark, paths, base, what, manifest)
-        # dict lookup, not StructType[name] per column — the name
-        # scan is O(width) and this path serves 5,000-column tables
-        scan_types = {f.name: f.dataType for f in df.schema.fields}
-        df = df.select(
-            *[
-                F.col(c).cast(types[c]).alias(c)
-                if c in types and scan_types[c] != types[c]
-                else F.col(c)
-                for c in df.columns
-            ]
-        )
-        dfs.append(df)
+    dfs = [
+        _plan_parquet(spark, paths, base, what, manifest)
+        for base, paths in sorted(groups.items())
+    ]
     out = dfs[0]
     for d2 in dfs[1:]:
         out = out.unionByName(d2, allowMissingColumns=True)
@@ -3526,7 +3389,7 @@ def read_changes(
         )
         if BUCKET_COL in df.columns:
             df = df.drop(BUCKET_COL)
-        df = _restore_aliases(df, manifest, complete=True)
+        df = _restore_aliases(df, manifest)
         if with_commit:
             df = df.withColumn("_commit", F.lit(ci).cast("long"))
         if with_change_type:
@@ -3539,7 +3402,7 @@ def read_changes(
         if del_resolved:
             parts.append(_part(ci, del_resolved, "delete"))
     if not parts:
-        df = _restore_aliases(_empty_df(spark, manifest), manifest, complete=True)
+        df = _restore_aliases(_empty_df(spark, manifest), manifest)
         if with_commit:
             df = df.withColumn("_commit", F.lit(None).cast("long"))
         if with_change_type:

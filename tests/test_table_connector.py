@@ -8,6 +8,7 @@ import tempfile
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nimble_spark.sources.table import (
     WriteOptions,
@@ -612,17 +613,132 @@ def test_plan_over_vanished_files_raises_not_partial(spark, tmpdir):
     write_table(
         spark.range(4000).selectExpr("id AS k").repartition(40), path, WriteOptions()
     )
-    entries = read_manifest(path)["files"]
+    manifest = read_manifest(path)
+    entries = manifest["files"]
     files = [os.path.join(path, f["path"]) for f in entries]
     assert len(files) == 40  # > the 32-path parallel-listing threshold
     for f in files[:2]:
         os.remove(f)
     with pytest.raises(ValueError, match="are gone"):
-        _plan_parquet(spark, files, path, "scan")
+        _plan_parquet(spark, files, path, "scan", manifest)
     # intact list still plans cleanly and completely
-    df = _plan_parquet(spark, files[2:], path, "scan")
+    df = _plan_parquet(spark, files[2:], path, "scan", manifest)
     want = sum(f["rows"] for f in entries[2:])
     assert len(df.inputFiles()) == 38 and df.count() == want
+
+
+def _build_plain(spark, path):
+    write_table(spark.range(200).selectExpr("id AS k", "id * 2 AS v"), path, WriteOptions())
+    return {}, [(k, 2 * k) for k in range(200)]
+
+
+def _write_clustered(spark, path):
+    write_table(
+        spark.range(400).selectExpr("id AS k", "id % 7 AS v"),
+        path,
+        WriteOptions(cluster_by=["k"], n_cluster_files=4),
+    )
+
+
+def _build_clustered(spark, path):
+    _write_clustered(spark, path)
+    return {"range_scan": ("k", 100, 149)}, [(k, k % 7) for k in range(100, 150)]
+
+
+def _build_clustered_point(spark, path):
+    _write_clustered(spark, path)
+    return {"point_lookup": ("k", [5, 250])}, [(5, 5), (250, 250 % 7)]
+
+
+def _build_hive_string(spark, path):
+    rows = [(i, ("01", "02", "10")[i % 3]) for i in range(60)]
+    write_table(
+        spark.createDataFrame(rows, "k LONG, p STRING"),
+        path,
+        WriteOptions(partition_by=["p"]),
+    )
+    return {}, rows
+
+
+def _build_bucketed(spark, path):
+    write_table(
+        spark.range(120).selectExpr("id AS k", "cast(id AS string) AS s"),
+        path,
+        WriteOptions(bucket_by="k", n_buckets=4),
+    )
+    return {}, [(k, str(k)) for k in range(120)]
+
+
+def _build_widened(spark, path):
+    from nimble_spark.sources.alter import alter_table
+
+    write_table(
+        spark.createDataFrame([(i, float(i)) for i in range(50)], "k INT, v FLOAT"),
+        path,
+        WriteOptions(),
+    )
+    alter_table(path, widen={"k": "bigint", "v": "double"})
+    write_table(
+        spark.createDataFrame([(i, i + 0.5) for i in range(50, 80)], "k LONG, v DOUBLE"),
+        path,
+        mode="append",
+    )
+    return {}, [(i, float(i)) for i in range(50)] + [(i, i + 0.5) for i in range(50, 80)]
+
+
+def _build_added(spark, path):
+    from nimble_spark.sources.alter import alter_table
+
+    write_table(spark.range(40).selectExpr("id AS k"), path, WriteOptions())
+    alter_table(path, add={"w": "int"})
+    write_table(
+        spark.range(40, 70).selectExpr("id AS k", "cast(id AS int) AS w"),
+        path,
+        mode="append",
+    )
+    return {}, [(k, None) for k in range(40)] + [(k, k) for k in range(40, 70)]
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        _build_plain,
+        _build_clustered,
+        _build_clustered_point,
+        _build_hive_string,
+        _build_bucketed,
+        _build_widened,
+        _build_added,
+    ],
+    ids=[
+        "plain", "cluster_range", "cluster_point", "hive_string_partition",
+        "bucketed", "alter_widen", "alter_add_mixed",
+    ],
+)
+def test_read_table_plans_with_zero_jobs(spark, tmpdir, build):
+    """read_table plans from the manifest's declared schema: building
+    the frame reads no footer, so it starts no Spark job, and the
+    declared types (widened columns, a STRING partition holding '01',
+    a column only newer files carry) come back exactly."""
+    import uuid
+
+    path = f"{tmpdir}/zero_jobs_{build.__name__}"
+    kwargs, want = build(spark, path)
+    sc = spark.sparkContext
+    group = f"zero-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read_table planning")
+    try:
+        df = read_table(spark, path, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert sorted(tuple(r) for r in df.collect()) == sorted(want)  # keys are unique
+    declared = {
+        f["name"]: T.StructField.fromJson(f).dataType
+        for f in read_manifest(path)["schema"]["fields"]
+    }
+    assert all(df.schema[c].dataType == t for c, t in declared.items())
 
 
 def test_read_changes_bounds(spark, tmpdir):

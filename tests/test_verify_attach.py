@@ -50,6 +50,18 @@ def test_attach_small_picks_shuffle_above_cap(spark, force_large):
     assert "ShuffledHashJoin" in p or "SortMergeJoin" in p
 
 
+def test_attach_small_malformed_cap_raises(spark):
+    """A cap that is not an integer byte count ('256m') raises
+    instead of silently falling back to the default."""
+    small = spark.range(100).withColumnRenamed("id", "k")
+    spark.conf.set(VERIFY_ATTACH_CONF, "256m")
+    try:
+        with pytest.raises(ValueError):
+            attach_small(small)
+    finally:
+        spark.conf.unset(VERIFY_ATTACH_CONF)
+
+
 @pytest.mark.parametrize(
     "qname",
     [
