@@ -736,10 +736,10 @@ def q_serve_lookups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched index-lookup serving, full transport loop
     (NimbleIndexProjector analogue): a 4-request batch (3 present
     keys, 1 absent) probes a cluster-indexed orders table;
-    ``serve_lookups`` prunes the scan by the batch's distinct keys
-    (hard-capped driver probe), groups per request, and encodes each
-    request's projected rows as ONE Arrow IPC payload executor-side.
-    The payloads are then decoded back (mapInPandas, still
+    ``serve_lookups`` prunes the scan by the batch's distinct keys and,
+    since the batch is far below its cap, reads the hits and encodes
+    each request's projected rows as ONE Arrow IPC payload on the
+    driver. The payloads are then decoded back (mapInPandas,
     executor-side) and aggregated — proving the bytes on the wire
     carry exactly the index-located rows. Absent keys round-trip as
     n_rows=0 / total=0."""

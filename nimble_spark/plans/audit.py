@@ -61,7 +61,7 @@ class PlanAudit:
     has_partial_agg: bool = False
     has_pushed_filters: bool = False
     n_codegen_spans: int = 0
-    n_python_evals: int = 0  # ArrowEvalPython / BatchEvalPython / FlatMapsInPandas
+    n_python_evals: int = 0  # ArrowEvalPython / BatchEvalPython / FlatMapGroupsIn{Pandas,Arrow} / ...
     plan: str = field(default="", repr=False)
 
 
@@ -91,7 +91,8 @@ def audit(df: DataFrame, execute: bool = True) -> PlanAudit:
     a.n_python_evals = sum(
         p.count(tok)
         for tok in ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas",
-                    "MapInPandas", "FlatMapsInPandas", "PythonMapInArrow")
+                    "FlatMapGroupsInArrow", "MapInPandas", "FlatMapsInPandas",
+                    "PythonMapInArrow")
     )
     return a
 

@@ -5,28 +5,38 @@ vectors to a transport format and back).
 Spark's internal shuffle serde is built-in; the *external* transport
 capability maps to Arrow IPC: DataFrame → Arrow stream bytes →
 DataFrame, zero-copy columnar, readable by any Arrow-speaking engine
-(DuckDB, pandas, Rust, browsers). Used for index-projection transport
-(NimbleIndexProjector analogue) and cross-process handoff.
+(DuckDB, pandas, Rust, browsers). Used for cross-process handoff and
+for index-projection transport (NimbleIndexProjector analogue,
+``serve_lookups``): a lookup batch that fits ``max_batch_keys`` is
+read and encoded on the driver, the way the reference's projector
+serves an in-memory request batch in-process; larger batches encode
+executor-side.
 """
 
 from __future__ import annotations
 
 import io
+import itertools
 
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _ipc_bytes(table: pa.Table) -> bytes:
+    """``table`` as one self-contained Arrow IPC stream."""
+    sink = io.BytesIO()
+    with pa.ipc.new_stream(sink, table.schema) as writer:
+        writer.write_table(table)
+    return sink.getvalue()
 
 
 def serialize(df: DataFrame) -> bytes:
     """DataFrame → Arrow IPC stream bytes (collects to the driver —
     transport serde for batches/slices, not bulk data movement; bulk
     stays in parquet)."""
-    table = df.toArrow()
-    sink = io.BytesIO()
-    with pa.ipc.new_stream(sink, table.schema) as writer:
-        writer.write_table(table)
-    return sink.getvalue()
+    return _ipc_bytes(df.toArrow())
 
 
 def deserialize(spark: SparkSession, payload: bytes) -> DataFrame:
@@ -45,13 +55,8 @@ def serialize_partitioned(df: DataFrame) -> DataFrame:
 
     def per_batch(batches):
         for pdf in batches:
-            table = pa.Table.from_pandas(pdf, preserve_index=False)
-            sink = io.BytesIO()
-            with pa.ipc.new_stream(sink, table.schema) as w:
-                w.write_table(table)
-            yield pd.DataFrame(
-                {"n_rows": [len(pdf)], "payload": [sink.getvalue()]}
-            )
+            payload = _ipc_bytes(pa.Table.from_pandas(pdf, preserve_index=False))
+            yield pd.DataFrame({"n_rows": [len(pdf)], "payload": [payload]})
 
     return df.mapInPandas(per_batch, "n_rows long, payload binary")
 
@@ -81,12 +86,49 @@ def deserialize_partitioned(payloads: DataFrame, schema) -> DataFrame:
 
 # Serving request batches are metadata-sized by contract (the
 # reference's NimbleIndexProjector also takes an in-memory request
-# batch, velox/index/NimbleIndexProjector.h:35-43). The cap ENFORCES
-# the contract: the key probe collects at most cap+1 distinct keys, so
-# a caller passing a 100M-row request frame gets a clear error instead
-# of a silent driver OOM. 100k keys ≈ a few MB — far below any
-# realistic driver heap, far above any realistic serving batch.
+# batch, velox/index/NimbleIndexProjector.h:35-43). The cap bounds
+# what the driver holds: a batch is read whole only when its request
+# rows and its hit rows each fit, and a request frame with more than
+# this many distinct keys raises instead of collecting them. 100k
+# narrow rows are a few MB — far below any realistic driver heap, far
+# above any realistic serving batch.
 SERVE_MAX_BATCH_KEYS = 100_000
+
+
+def _response(rids: list, counts: list, payloads: list) -> pa.Table:
+    return pa.table(
+        {
+            "request_id": pa.array(rids, pa.int64()),
+            "n_rows": pa.array(counts, pa.int64()),
+            "payload": pa.array(payloads, pa.binary()),
+        }
+    )
+
+
+def _encode_batch(batch: pa.Table, hits: pa.Table, key: str) -> pa.Table:
+    """One response row per ``request_id`` of ``batch``: its payload
+    holds the hit rows of every key the request lists, in request
+    order (a key listed twice is served twice, as a join would).
+    ``hits`` is sorted by key so each key's rows are one zero-copy
+    slice."""
+    hits = hits.sort_by(key)
+    runs: dict = {}
+    offset = 0
+    for k, group in itertools.groupby(hits.column(key).to_pylist()):
+        n = sum(1 for _ in group)
+        runs[k] = (offset, n)
+        offset += n
+    slices: dict = {}
+    for rid, k in zip(batch.column("request_id").to_pylist(), batch.column(key).to_pylist()):
+        found = slices.setdefault(rid, [])
+        if k in runs:
+            found.append(runs[k])
+    counts, payloads = [], []
+    for spans in slices.values():
+        parts = [hits.slice(o, n) for o, n in spans]
+        counts.append(sum(n for _, n in spans))
+        payloads.append(_ipc_bytes(pa.concat_tables(parts) if parts else hits.slice(0, 0)))
+    return _response(list(slices), counts, payloads)
 
 
 def serve_lookups(
@@ -103,65 +145,65 @@ def serve_lookups(
     serialized for transport).
 
     ``requests`` is a DataFrame ``(request_id, <key value>)`` (second
-    column named ``key``). The distinct probe keys (bounded by
-    ``max_batch_keys`` — the collect is a ``limit(cap+1)`` probe, so
-    driver memory is capped no matter how large the request frame is)
-    prune the scan through whatever index the table has — hash
-    buckets, sorted index, bloom sidecar, or cluster ranges — then
-    each request's projected rows serialize to ONE Arrow IPC payload
-    row ``(request_id, n_rows, payload)``, grouped and encoded
-    executor-side (applyInPandas; no driver collect of data rows).
-    Requests matching nothing yield n_rows=0 with an empty-schema
-    payload, so the response always covers the batch.
+    column named ``key``). The batch's distinct non-null keys prune the
+    scan through whatever index the table has — hash buckets, sorted
+    index, bloom sidecar, or cluster ranges — and each request's
+    projected rows serialize to ONE Arrow IPC payload row
+    ``(request_id, n_rows, payload)``. Requests matching nothing (a
+    missing or null key) yield n_rows=0 with an empty payload of the
+    projected schema, so the response always covers the batch.
 
-    Raises ``ValueError`` when the batch exceeds ``max_batch_keys``
-    distinct keys: that is no longer a serving workload — run a
-    distributed semi-join (``read_table(...).join(requests, key,
-    'left_semi')``) instead."""
-    import pandas as pd
+    Two paths, chosen from the sizes observed against
+    ``max_batch_keys``:
 
+    - the batch's request rows and its hit rows each fit: both are read
+      to the driver (one Spark job each), sliced per key and encoded
+      there; the result is a local frame, so collecting it starts no
+      job;
+    - otherwise the hits join the requests and each request group is
+      encoded executor-side (``applyInArrow``).
+
+    Both emit the same payloads. Raises ``ValueError`` when the request
+    frame holds more than ``max_batch_keys`` distinct keys: that is no
+    longer a serving workload — run a distributed semi-join
+    (``read_table(...).join(requests, key, 'left_semi')``) instead."""
     from pyspark.sql import functions as F
 
     from nimble_spark.sources.table import read_table
 
-    probe = requests.select(key).distinct().limit(max_batch_keys + 1).collect()
-    if len(probe) > max_batch_keys:
-        raise ValueError(
-            f"serve_lookups request batch exceeds {max_batch_keys} distinct "
-            f"keys — this is a bulk-join workload, not a serving batch; use "
-            f"read_table(...).join(requests, {key!r}, 'left_semi') or raise "
-            f"max_batch_keys explicitly"
-        )
-    keys = [r[0] for r in probe]
     proj = list(dict.fromkeys([key, *columns]))
-    hits = read_table(spark, path, columns=proj, point_lookup=(key, keys))
+    schema = "request_id long, n_rows long, payload binary"
+    batch = requests.select("request_id", key).limit(max_batch_keys + 1).toArrow()
+    if batch.num_rows <= max_batch_keys:
+        keys = batch.column(key).drop_null().unique().to_pylist()
+        hits = read_table(spark, path, columns=proj, point_lookup=(key, keys))
+        found = hits.limit(max_batch_keys + 1).toArrow()
+        if found.num_rows <= max_batch_keys:
+            return spark.createDataFrame(_encode_batch(batch, found, key), schema)
+    else:
+        probe = requests.select(key).dropna().distinct().limit(max_batch_keys + 1).collect()
+        if len(probe) > max_batch_keys:
+            raise ValueError(
+                f"serve_lookups request batch exceeds {max_batch_keys} distinct "
+                f"keys — this is a bulk-join workload, not a serving batch; use "
+                f"read_table(...).join(requests, {key!r}, 'left_semi') or raise "
+                f"max_batch_keys explicitly"
+            )
+        keys = [r[0] for r in probe]
+        hits = read_table(spark, path, columns=proj, point_lookup=(key, keys))
+
+    def encode(group: pa.Table) -> pa.Table:
+        rows = group.filter(pc.is_valid(group.column("__hit"))).select(proj)
+        return _response([group.column("request_id")[0].as_py()], [rows.num_rows], [_ipc_bytes(rows)])
+
     # explicit hit marker: a left-join miss and a matched row that
     # happens to contain NULLs in projected columns must be
-    # distinguishable (dropna over data columns would conflate them)
-    joined = requests.join(hits.withColumn("__hit", F.lit(1)), key, "left")
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        rid = pdf["request_id"].iloc[0]
-        rows = pdf[pdf["__hit"].notna()]
-        tbl = pa.Table.from_pandas(rows[proj], preserve_index=False)
-        sink = io.BytesIO()
-        with pa.ipc.new_stream(sink, tbl.schema) as w:
-            w.write_table(tbl)
-        return pd.DataFrame(
-            {"request_id": [rid], "n_rows": [len(rows)], "payload": [sink.getvalue()]}
-        )
-
-    # groupBy alone enforces the request_id clustering (AQE sizes the
-    # exchange); the explicit projection keeps request-frame extras
-    # out of the shuffle — only (request_id, proj, __hit) cross. An
-    # r11 A/B also tried repartition+sortWithinPartitions+mapInPandas
-    # batch-coalesced encoding here: measured 1.5-1.9 s vs 1.0 s for
-    # this shape on a 1k-request batch at every partition count (2-32)
-    # — the forced exchange + per-task overhead cost more than the
-    # per-group applyInPandas invocations it saved, so the grouped
-    # encode stays.
+    # distinguishable. The request key is renamed so the hit rows keep
+    # the table's key column and type, as the driver path does.
+    req = requests.select("request_id", F.col(key).alias("__req_key"))
+    joined = req.join(hits.withColumn("__hit", F.lit(1)), F.col("__req_key") == F.col(key), "left")
     return (
         joined.select("request_id", *proj, "__hit")
         .groupBy("request_id")
-        .applyInPandas(encode, "request_id long, n_rows long, payload binary")
+        .applyInArrow(encode, schema)
     )

@@ -25,6 +25,7 @@ any Hadoop-compatible FS (the manifest is one small JSON object).
 
 from __future__ import annotations
 
+import bisect
 import hashlib
 import json
 import os
@@ -1918,13 +1919,20 @@ def _entries_for_bounds(manifest: dict, root: str, key: str, lo: Any, hi: Any) -
     return out
 
 
-def _prune_files(manifest: dict, root: str, key: str, lo: Any, hi: Any) -> list[str] | None:
+def _prune_files(
+    manifest: dict, root: str, key: str, lo: Any, hi: Any, points: list | None = None
+) -> list[str] | None:
     """Cluster/zorder-index pruning: keep files whose [min,max] for
     `key` intersects [lo,hi] (binary-search-over-boundary-keys
     analogue, dwio/nimble/index/ClusterIndex.h:76-197). Cluster files
     have disjoint ranges (exact pruning); zorder files have selective
     but overlapping ranges on every zorder key. Accepts a sharded
-    ROOT manifest (page-granular skipping via _entries_for_bounds)."""
+    ROOT manifest (page-granular skipping via _entries_for_bounds).
+
+    ``points`` (sorted point-lookup values, lo/hi their ends) keeps a
+    file only when some value falls inside its [min,max], found by
+    bisecting the values — so keys 3 and 998 read two files, not every
+    file between them."""
     idx = manifest.get("indexes", {})
     indexed_keys = list((idx.get("cluster") or {}).get("keys", [])) + list(
         (idx.get("zorder") or {}).get("keys", [])
@@ -1937,7 +1945,11 @@ def _prune_files(manifest: dict, root: str, key: str, lo: Any, hi: Any) -> list[
         if fmin is None or fmax is None:
             keep.append(os.path.join(root, f["path"]))
             continue
-        if (hi is None or fmin <= hi) and (lo is None or fmax >= lo):
+        if points is not None:
+            i = bisect.bisect_left(points, fmin)
+            if i < len(points) and points[i] <= fmax:
+                keep.append(os.path.join(root, f["path"]))
+        elif (hi is None or fmin <= hi) and (lo is None or fmax >= lo):
             keep.append(os.path.join(root, f["path"]))
     return keep
 
@@ -2014,6 +2026,8 @@ def read_table(
       pushed-down residual filter (lo/hi inclusive, None = open).
     - ``point_lookup=(key, values)``: hash-index bucket pruning when
       the table is bucketed on ``key``, else cluster pruning per value.
+      SQL ``IN`` semantics: a null value matches nothing, and an empty
+      (or all-null) value list reads as an empty frame.
     - ``row_range=(start, end)``: rows [start, end) in manifest file
       order — the seekToRow/skipRows analogue
       (dwio/nimble/velox/VeloxReader.h:114-153). Whole files outside
@@ -2140,9 +2154,11 @@ def read_table(
 
     if point_lookup is not None:
         key, values = point_lookup
-        values = list(values)
-        residual = _in_predicate(key, values)
-        if hash_idx and hash_idx["key"] == key:
+        values = [v for v in values if v is not None]
+        residual = _in_predicate(key, values) if values else None
+        if not values:
+            file_list = []
+        elif hash_idx and hash_idx["key"] == key:
             # Bucket pruning via partition-column filter: Spark prunes
             # the __nimble_bucket=N directories before listing files.
             n = hash_idx["n_buckets"]
@@ -2197,8 +2213,8 @@ def read_table(
                 else None
             )
             if file_list is None:
-                lo, hi = min(values), max(values)
-                file_list = _prune_files(manifest, path, key, lo, hi)
+                points = sorted(values)
+                file_list = _prune_files(manifest, path, key, points[0], points[-1], points)
 
     if file_list is not None:
         if file_list:

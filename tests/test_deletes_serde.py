@@ -4,6 +4,7 @@ and Serializer/Deserializer, dwio/nimble/serializer/Serializer.h:33-56)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -74,8 +75,8 @@ def test_serde_partitioned_distributed(spark):
 
 def test_serve_lookups_batched_index_projection(spark, tmpdir):
     """serve_lookups: a BATCH of point-lookup requests against a
-    cluster-indexed table returns one Arrow IPC payload per request,
-    encoded executor-side; missing keys come back n_rows=0."""
+    cluster-indexed table returns one Arrow IPC payload per request;
+    missing keys come back n_rows=0."""
     import pyarrow as pa
     import io as _io
 
@@ -104,7 +105,9 @@ def test_serve_lookups_batched_index_projection(spark, tmpdir):
 def test_serve_lookups_multi_row_requests_roundtrip(spark, tmpdir):
     """r11: every payload must carry ALL of its request's rows exactly
     once even when requests match many rows and the Python boundary
-    streams tiny Arrow batches (2-row batches over 5-row groups)."""
+    streams tiny Arrow batches (2-row batches over 5-row groups). The
+    cap of 40 fits the 40 keys but not the 200 hit rows, so the batch
+    takes the executor-side encode, where those batches arise."""
     import io as _io
 
     import pyarrow as pa
@@ -122,7 +125,7 @@ def test_serve_lookups_multi_row_requests_roundtrip(spark, tmpdir):
     try:
         got = {
             r["request_id"]: r
-            for r in serve_lookups(spark, path, reqs, "k", ["v"]).collect()
+            for r in serve_lookups(spark, path, reqs, "k", ["v"], max_batch_keys=40).collect()
         }
     finally:
         if old is None:
@@ -157,3 +160,35 @@ def test_serve_lookups_batch_cap_enforced(spark, tmpdir):
         serve_lookups(spark, path, reqs, "k", ["v"], max_batch_keys=10)
     # at the cap: fine
     assert serve_lookups(spark, path, reqs, "k", ["v"], max_batch_keys=50).count() == 50
+
+
+@pytest.mark.parametrize(
+    "reqs,want",
+    [
+        ([], {}),
+        ([(1, None)], {1: 0}),
+        ([(1, None), (2, 5), (3, None)], {1: 0, 2: 1, 3: 0}),
+    ],
+    ids=["empty_batch", "only_null_key", "null_keys_among_hits"],
+)
+def test_serve_lookups_empty_batch_and_null_keys(spark, tmpdir, reqs, want):
+    """An empty batch serves an empty frame; a null-key request
+    matches nothing (SQL IN semantics) and returns n_rows=0 with an
+    empty payload of the projected schema."""
+    import io as _io
+
+    import pyarrow as pa
+
+    from nimble_spark.sources.serde import serve_lookups
+
+    path = f"{tmpdir}/serve_nulls"
+    if not os.path.exists(path):
+        df = spark.range(100).selectExpr("id AS k", "id * 7 AS v")
+        write_table(df, path, WriteOptions(cluster_by=["k"], n_cluster_files=2))
+    req = spark.createDataFrame(reqs, "request_id LONG, k LONG")
+    got = {r["request_id"]: r for r in serve_lookups(spark, path, req, "k", ["v"]).collect()}
+    assert {rid: r["n_rows"] for rid, r in got.items()} == want
+    for rid, r in got.items():
+        with pa.ipc.open_stream(_io.BytesIO(r["payload"])) as rd:
+            tbl = rd.read_all()
+        assert tbl.column_names == ["k", "v"] and tbl.num_rows == want[rid]

@@ -25,7 +25,7 @@ ALLOWED = [
     ("plans/scan_metrics.py", "df.collect()", "reader-stats harness executes the query so the scan SQLMetrics are populated; callers pass 1-row probes (aggs) in query paths"),
     ("operators/format_surface.py", "keys_df.agg", "single-row min/max bounds of the probe keys"),
     ("sources/serde.py", "df.toArrow()", "documented driver-side small-slice serde; serialize_partitioned is the bulk default"),
-    ("sources/serde.py", "limit(max_batch_keys + 1)", "probe-KEY list of the lookup request batch, HARD-CAPPED at max_batch_keys+1 (oversize batches raise, pointing at the distributed semi-join) — the served rows themselves never touch the driver"),
+    ("sources/serde.py", "limit(max_batch_keys + 1)", "lookup request batch and its hit rows, each HARD-CAPPED at max_batch_keys+1 rows (a batch over either cap is served executor-side; one over the distinct-key cap raises, pointing at the distributed semi-join)"),
     ("sources/flatmap.py", "limit(MAX_FLATMAP_KEYS + 1)", "write-time key discovery, hard-capped (NimbleConfig.h:27 analogue)"),
     ("sources/table.py", "pmod(F.xxhash64", "bucket ids of the caller-supplied probe values (O(len(values)))"),
     ("sources/table.py", "mn_{k}", "single-row global min/max agg feeding the z-order bit scaling — one row regardless of table size"),

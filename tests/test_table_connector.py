@@ -3,6 +3,7 @@ VeloxWriterTest/E2EIndexTest strategy, SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -1721,3 +1722,60 @@ def test_pyds_append_validates_constraints_and_carries_contracts(spark, tmpdir):
         write_table(
             spark.range(0, 3).selectExpr("id - 9 AS k"), path, mode="append"
         )
+
+
+def _build_lookup_plain(spark, path):
+    write_table(spark.range(100).selectExpr("id AS k", "id * 7 AS v"), path, WriteOptions())
+
+
+def _build_lookup_cluster(spark, path):
+    write_table(
+        spark.range(100).selectExpr("id AS k", "id * 7 AS v"),
+        path,
+        WriteOptions(cluster_by=["k"], n_cluster_files=4),
+    )
+
+
+def _build_lookup_bucketed(spark, path):
+    write_table(
+        spark.range(100).selectExpr("id AS k", "id * 7 AS v"),
+        path,
+        WriteOptions(bucket_by="k", n_buckets=4),
+    )
+
+
+@pytest.mark.parametrize(
+    "values,want",
+    [([], []), ([None], []), ([None, 5], [(5, 35)]), ([5, None, 5], [(5, 35)])],
+    ids=["empty", "only_null", "null_and_key", "duplicate_and_null"],
+)
+@pytest.mark.parametrize(
+    "build",
+    [_build_lookup_plain, _build_lookup_cluster, _build_lookup_bucketed],
+    ids=["plain", "cluster", "bucketed"],
+)
+def test_point_lookup_null_and_empty_values(spark, tmpdir, build, values, want):
+    """SQL IN semantics for point lookups: a null value matches
+    nothing and an empty value list reads as an empty frame of the
+    table's schema, on every index path."""
+    path = f"{tmpdir}/lookup_nulls_{build.__name__}"
+    if not os.path.exists(path):
+        build(spark, path)
+    df = read_table(spark, path, columns=["k", "v"], point_lookup=("k", values))
+    assert df.columns == ["k", "v"]
+    assert sorted(tuple(r) for r in df.collect()) == want
+
+
+def test_point_lookup_prunes_cluster_files_per_value(spark, tmpdir):
+    """Two keys at opposite ends of a 4-file cluster table read the
+    two files that hold them, not every file between them."""
+    path = f"{tmpdir}/lookup_per_value"
+    write_table(
+        spark.range(1000).selectExpr("id AS k", "id * 7 AS v"),
+        path,
+        WriteOptions(cluster_by=["k"], n_cluster_files=4),
+    )
+    assert len(read_manifest(path)["files"]) == 4
+    df = read_table(spark, path, point_lookup=("k", [998, 3]))
+    assert len(df.inputFiles()) == 2
+    assert sorted(tuple(r) for r in df.collect()) == [(3, 21), (998, 6986)]
