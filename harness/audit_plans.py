@@ -8,9 +8,10 @@ named queries (default: the bench headline set + the TPC-H suite).
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 DEFAULT = [
     "q1_pricing_summary", "q2_min_cost_supplier", "q3_shipping_priority",

@@ -9,10 +9,12 @@ hand edits.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -47,7 +49,7 @@ def main() -> None:
     if rows_only:
         lines += ["", "Rows-only (no oracle): " + " ".join(f"`{q}`" for q in sorted(rows_only))]
     lines.append("")
-    with open("/root/repo/COVERAGE.md", "w") as f:
+    with open(os.path.join(ROOT, "COVERAGE.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"COVERAGE.md: {n} queries, {len(by_cat)} categories, {len(rows_only)} rows-only")
 

@@ -49,6 +49,7 @@ from __future__ import annotations
 import argparse
 import hashlib
 import random
+import os
 import sys
 import time
 
@@ -56,7 +57,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # ---------------------------------------------------------------- schemas
 

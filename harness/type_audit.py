@@ -14,11 +14,12 @@ Usage: python harness/type_audit.py [--sf /root/testdata/sf0.001]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",

@@ -725,7 +725,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    joined = stream.join(F.broadcast(dim), "user_id").groupBy(
+    joined = stream.join(dim, "user_id").groupBy(
         F.col("c_mktsegment").alias("segment")
     ).agg(
         F.count(F.lit(1)).alias("n"),
@@ -866,7 +866,7 @@ def q_shared_dictionary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     return (
         dec.groupBy("source", "lang")
         .agg(F.count(F.lit(1)).alias("n"))
-        .join(F.broadcast(n_codes))
+        .join(n_codes)
     )
 
 

@@ -87,7 +87,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode_outer("sh").alias("g"))
         .filter(F.col("g").isNotNull())
     )
-    joined = corpus.join(F.broadcast(bench), "g", "left")
+    joined = corpus.join(bench, "g", "left")
     return (
         joined.groupBy("doc_id")
         .agg(

@@ -372,7 +372,7 @@ def q_balanced_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kept = F.col("rn") <= F.col("mn")
     return (
-        ranked.crossJoin(F.broadcast(floor_n))
+        ranked.crossJoin(floor_n)
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_total"),
@@ -421,7 +421,7 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     wt_dec = F.sqrt(F.col("n").cast("double")).cast("decimal(27,6)")
     w = c.select("source", "n", wt_dec.cast("double").alias("wt"))
     t = c.agg(F.sum(wt_dec).cast("double").alias("tot"))
-    return w.crossJoin(F.broadcast(t)).select(
+    return w.crossJoin(t).select(
         "source",
         F.col("n").alias("n_docs"),
         rnd(F.col("wt") / F.col("tot"), 6).alias("share"),

@@ -28,7 +28,6 @@ from nimble_spark.functions.text_fns import (
     shingles_sql_spark,
 )
 from nimble_spark.functions.exact import rnd
-from nimble_spark.functions.partitioning import attach_small
 from nimble_spark.registry import register
 from nimble_spark.tables import load
 
@@ -342,17 +341,9 @@ def lsh_near_pairs(
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
-    # Verify-attach: pairs are the (capped-)quadratic side, the
-    # per-doc hashed shingle sets the small one — broadcast the sets,
-    # so the Jaccard verify runs map-side and no exchange ever
-    # carries shingle arrays (guide §3.1: the two shuffle_hash
-    # attaches each cost a pair-set exchange with arrays in flight).
-    # SIZE-AWARE: the set table is O(corpus), so past the configured
-    # broadcast cap attach_small degrades to the scale-safe
-    # shuffle-hash shape instead of OOMing the driver at 100 TB.
     cand = (
-        cand.join(attach_small(shingles.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))), "id_a")
-        .join(attach_small(shingles.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))), "id_b")
+        cand.join(shingles.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+        .join(shingles.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter)
@@ -664,19 +655,11 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("b.doc_id").alias("bid"), F.col("c.doc_id").alias("cid"))
         .distinct()
     )
-    # Verify-attach, size-aware (see attach_small): each side only
-    # needs its own parity's sets, so the attach tables are halved
-    # before the broadcast/shuffle decision.
+    # Verify-attach: each side only needs its own parity's sets.
     ver = cand.join(
-        attach_small(
-            shh.filter(is_batch).select(F.col("doc_id").alias("bid"), F.col("shh").alias("sh_b"))
-        ),
-        "bid",
+        shh.filter(is_batch).select(F.col("doc_id").alias("bid"), F.col("shh").alias("sh_b")), "bid"
     ).join(
-        attach_small(
-            shh.filter(~is_batch).select(F.col("doc_id").alias("cid"), F.col("shh").alias("sh_c"))
-        ),
-        "cid",
+        shh.filter(~is_batch).select(F.col("doc_id").alias("cid"), F.col("shh").alias("sh_c")), "cid"
     )
     inter = F.size(F.array_intersect("sh_b", "sh_c"))
     jac = inter.cast("double") / (F.size("sh_b") + F.size("sh_c") - inter)
@@ -799,17 +782,10 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
-    # Verify-attach: the candidate-pair set is the bigger side; the
-    # per-doc shingle-set table is the small side, so broadcast it —
-    # the array_intersect verify then runs map-side with no pair-row
-    # exchange (guide §3.1). SIZE-AWARE via attach_small: past the
-    # configured broadcast cap the attach degrades to shuffle-hash
-    # (the pair set is always the bigger side, but the set table is
-    # O(corpus) and must never be an unconditional broadcast).
     sets = sh_t.select("doc_id", "sh")
-    cand = cand.join(
-        attach_small(sets.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))), "id_a"
-    ).join(attach_small(sets.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))), "id_b")
+    cand = cand.join(sets.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a").join(
+        sets.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b"
+    )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter)
     return (
@@ -1306,6 +1282,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
+        # shared is one row per source pair; its estimate is the hash self-join's size
         grid.join(F.broadcast(shared), ["src_a", "src_b"], "left")
         .select(
             "src_a",

@@ -660,7 +660,7 @@ def q_sequence_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = c.withColumn(
         "rk", F.row_number().over(W.orderBy(F.col("n").desc(), "trigram"))
     ).filter(F.col("rk") <= 20)
-    return r.crossJoin(F.broadcast(t)).select(
+    return r.crossJoin(t).select(
         "trigram",
         "n",
         "rk",
@@ -725,7 +725,7 @@ def q_anomaly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = (F.col("n").cast("double") - mean) / std
     return (
         hourly.withColumn("hod", F.hour("h").cast("long"))
-        .join(F.broadcast(season), "hod")
+        .join(season, "hod")
         .select(
             F.date_format("h", "yyyy-MM-dd HH:mm:ss").alias("hour"),
             "n",
@@ -830,7 +830,7 @@ def q_rfm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     mx = e.agg(F.max("ts").alias("now"))
     base = (
-        e.crossJoin(F.broadcast(mx))
+        e.crossJoin(mx)
         .groupBy("user_id")
         .agg(
             F.datediff(F.max("now"), F.max("ts")).cast("long").alias("recency_d"),
@@ -885,7 +885,7 @@ def q_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("dst").isNotNull())
     c = o.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("n"))
     rowsum = c.groupBy("src").agg(F.sum("n").alias("row_n"))
-    return c.join(F.broadcast(rowsum), "src").select(
+    return c.join(rowsum, "src").select(
         "src", "dst", "n", rnd(F.col("n").cast("double") / F.col("row_n"), 6).alias("p")
     )
 

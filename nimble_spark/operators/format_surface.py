@@ -931,7 +931,7 @@ def q_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = read_table(spark, path, point_lookup=("l_orderkey", [-1]))
     else:
         df = read_table(spark, path, range_scan=("l_orderkey", lo, hi))
-        df = df.join(F.broadcast(keys_df), df.l_orderkey == keys_df.o_orderkey, "left_semi")
+        df = df.join(keys_df, df.l_orderkey == keys_df.o_orderkey, "left_semi")
     return df.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("n_lines"), dsum("l_extendedprice").alias("order_rev")
     )

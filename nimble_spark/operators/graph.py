@@ -236,7 +236,7 @@ def q_kmeans_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     def assign(c: DataFrame) -> DataFrame:
         dq = (
             vx.alias("v")
-            .join(F.broadcast(c.alias("c")), F.col("v.dim") == F.col("c.dim"))
+            .join(c.alias("c"), F.col("v.dim") == F.col("c.dim"))
             .select(
                 F.col("v.vec_id").alias("vec_id"),
                 F.col("c.cid").alias("cid"),

@@ -229,7 +229,7 @@ def q_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         l.join(
-            F.broadcast(buckets),
+            buckets,
             (l.l_quantity >= buckets.lo) & (l.l_quantity < buckets.hi),
         )
         .groupBy("bucket")

@@ -122,6 +122,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = filtered.join(
         exact_kept.select("doc_id"), "doc_id", "left_semi"
     )
+    # drop_ids is the few near-dup ids; its estimate is the candidate self-join's size
     nd = e.join(F.broadcast(drop_ids), "doc_id", "left_anti")
 
     h = (

@@ -310,7 +310,8 @@ def q_stats_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3: selective 3-way join + agg + top-k.
 
-    Scale notes: customer is filtered then broadcast; lineitem (the
+    Scale notes: customer is filtered, and the planner broadcasts it
+    while its estimate is under the session threshold; lineitem (the
     100TB fact) is never shuffled before its filter. Top-k is
     TakeOrderedAndProject, not a global sort.
     """
@@ -319,7 +320,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1995-03-15")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate")
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
         .select("l_orderkey", "revenue", F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"))
@@ -344,7 +345,8 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="join",
 )
 def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5: 6-way join with broadcast dimension chain."""
+    """TPC-H Q5: 6-way join over a dimension chain the planner
+    broadcasts while each dim is under the session threshold."""
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     l = load(spark, sf_dir, "lineitem")
@@ -354,9 +356,9 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), (l.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey))
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(s, (l.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey))
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
     )
@@ -791,7 +793,7 @@ def q_upsert_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_totalprice") * 1.1).alias("new_price"),
         )
     )
-    merged = o.join(F.broadcast(updates), o.o_orderkey == F.col("u_key"), "left").select(
+    merged = o.join(updates, o.o_orderkey == F.col("u_key"), "left").select(
         F.coalesce("new_status", "o_orderstatus").alias("status"),
         F.coalesce("new_price", "o_totalprice").alias("price"),
     )

@@ -111,7 +111,7 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ext = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(dec)
     promo = F.when(F.col("p_type") == "PROMO", ext).otherwise(F.lit(0).cast(dec))
     return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
+        l.join(p, l.l_partkey == p.p_partkey)
         .agg(
             rnd(
                 100.0 * F.sum(promo).cast("double") / F.sum(ext).cast("double"), 4
@@ -152,9 +152,9 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     return (
-        l.join(F.broadcast(keys), "l_orderkey")
+        l.join(keys, "l_orderkey")
         .join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_name", "o_orderkey", F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"))
         .agg(dsum("l_quantity").alias("total_qty"))
     )
@@ -364,7 +364,7 @@ def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass — two scans, no shuffle of values."""
     o = load(spark, sf_dir, "orders")
     b = o.agg(F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi"))
-    binned = o.crossJoin(F.broadcast(b)).select(
+    binned = o.crossJoin(b).select(
         F.least(
             F.lit(9),
             F.floor((F.col("o_totalprice") - F.col("lo")) / ((F.col("hi") - F.col("lo")) / 10.0)),
@@ -618,7 +618,7 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     w = W.partitionBy("c_mktsegment").orderBy(F.desc("o_totalprice"), "o_orderkey")
     return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        o.join(c, o.o_custkey == c.c_custkey)
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 3)
         .select(
@@ -937,7 +937,7 @@ def q_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     std = F.sqrt(F.col("sxx") / F.col("n") - mean * mean)
     z = (F.col("value") - mean) / std
     return (
-        e.join(F.broadcast(s), "user_id")
+        e.join(s, "user_id")
         .select("event_id", "user_id", "value", z.alias("zscore"))
         .filter(F.abs(F.col("zscore")) > 3)
         .select(
@@ -1027,7 +1027,7 @@ def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(value, 0.05)").alias("lo"),
         F.expr("percentile(value, 0.95)").alias("hi"),
     )
-    j = e.join(F.broadcast(p), "event_type")
+    j = e.join(p, "event_type")
     v = F.greatest("lo", F.least("hi", F.col("value")))
     clipped = F.when((F.col("value") < F.col("lo")) | (F.col("value") > F.col("hi")), 1).otherwise(0)
     return (

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from nimble_spark.functions.text_fns import hash32_sql_duck, hash32_sql_spark
 from nimble_spark.functions.exact import rnd, rnd_sql
-from nimble_spark.functions.partitioning import attach_small
 from nimble_spark.registry import register
 from nimble_spark.tables import load
 
@@ -110,7 +109,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_norm_spark("qv")) * F.expr(_norm_spark("cv"))
     )
     scored = (
-        c.crossJoin(F.broadcast(q))
+        c.crossJoin(q)
         .filter(F.col("qid") != F.col("cid"))
         .select("qid", "cid", sim.alias("sim"))
     )
@@ -373,33 +372,19 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(first_match)
         .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
     )
-    # Verify-attach: the candidate set (up to n²/4-per-band pairs) is
-    # FAR larger than the vector table it joins, so broadcast the
-    # vector side (guide §3.1: broadcast the side that fits) — the
-    # pair set then streams map-locally through both attaches instead
-    # of being shuffled twice with 64-float arrays in flight (measured
-    # r11: the two shuffle_hash attaches moved ~0.5 GB of arrays at
-    # sf0.1 and dominated the query; broadcast-attach removes both
-    # pair exchanges). SIZE-AWARE via attach_small: past the
-    # configured broadcast cap the attach degrades to the scale-safe
-    # shuffle-hash shape — the vector table is O(corpus) and must
-    # never be an unconditional broadcast at 100 TB.
-    #
     # The pair set leaves the band join partitioned by (j, bv) — at
     # most 16 distinct values, so the dot-product verify would run at
     # ≤16-way parallelism however large the cluster. A round-robin
-    # spread of the (id_a, id_b) pairs (16 bytes/row — the payload
-    # attaches AFTER, map-side) rebalances the verify across every
-    # core; the verify is embarrassingly parallel, so placement is
-    # free to be arbitrary.
+    # spread of the (id_a, id_b) pairs (16 bytes/row — the vectors
+    # attach after) rebalances the verify across every core; the
+    # verify is embarrassingly parallel, so placement is free to be
+    # arbitrary.
     cand = cand.repartition(npart)
     emb = sig.select("vec_id", "embedding", "nrm")
     cand = cand.join(
-        attach_small(emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a"), F.col("nrm").alias("n_a"))),
-        "id_a",
+        emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a"), F.col("nrm").alias("n_a")), "id_a"
     ).join(
-        attach_small(emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b"), F.col("nrm").alias("n_b"))),
-        "id_b",
+        emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b"), F.col("nrm").alias("n_b")), "id_b"
     )
     sim = F.expr(_DOT_SPARK.format(a="e_a", b="e_b")) / (F.col("n_a") * F.col("n_b"))
     return (
@@ -533,7 +518,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wc = W.partitionBy("qid").orderBy(rnd(cell_sim, 6).desc(), "label")
     probed = (
-        q.crossJoin(F.broadcast(centroids))
+        q.crossJoin(centroids)
         .withColumn("cell_rk", F.row_number().over(wc))
         .filter(F.col("cell_rk") <= N_PROBE)
         .select("qid", "label")
@@ -541,12 +526,12 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cand = load(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"), "label"
-    ).join(F.broadcast(probed), "label")
+    ).join(probed, "label")
     sim = F.expr(_DOT_SPARK.format(a="qv", b="cv")) / (
         F.col("qn") * F.expr(_norm_spark("cv"))
     )
     scored = (
-        cand.join(F.broadcast(q), "qid")
+        cand.join(q, "qid")
         .filter(F.col("cid") != F.col("qid"))
         .select("qid", "cid", sim.alias("sim"))
     )
@@ -674,19 +659,19 @@ def q_ivf_index_partition_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wc = W.partitionBy("qid").orderBy(rnd(cell_sim, 6).desc(), "label")
     probed = (
-        q.crossJoin(F.broadcast(centroids))
+        q.crossJoin(centroids)
         .withColumn("cell_rk", F.row_number().over(wc))
         .filter(F.col("cell_rk") <= N_PROBE)
         .select("qid", "label")
     )
     cand = stored.select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"), "label"
-    ).join(F.broadcast(probed), "label")
+    ).join(probed, "label")
     sim = F.expr(_DOT_SPARK.format(a="qv", b="cv")) / (
         F.col("qn") * F.expr(_norm_spark("cv"))
     )
     scored = (
-        cand.join(F.broadcast(q), "qid")
+        cand.join(q, "qid")
         .filter(F.col("cid") != F.col("qid"))
         .select("qid", "cid", sim.alias("sim"))
     )
@@ -746,7 +731,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qn") * F.expr(_norm_spark("embedding"))
     )
     scored = (
-        e.join(F.broadcast(q), F.col("label") != F.col("qlabel"))
+        e.join(q, F.col("label") != F.col("qlabel"))
         .select(
             "qid",
             "qlabel",
@@ -812,7 +797,7 @@ def q_label_noise_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qn") * F.expr(_norm_spark("embedding"))
     )
     scored = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
+        e.join(q, F.col("vec_id") != F.col("qid"))
         .select("qid", "qlabel", F.col("label").alias("clabel"), F.col("vec_id").alias("cid"), sim.alias("sim"))
     )
     w = W.partitionBy("qid").orderBy(rnd("sim", 6).desc(), "cid")
@@ -935,7 +920,7 @@ def q_ann_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qn") * F.sqrt(F.col("cn2"))
     )
     adc = (
-        c.crossJoin(F.broadcast(q))
+        c.crossJoin(q)
         .filter(F.col("qid") != F.col("cid"))
         .select("qid", "cid", "qv", "qn", adc_sim.alias("adc_sim"))
     )
@@ -1100,7 +1085,7 @@ _IVF_ADC_PROBED_SQL = f"""
       FROM {{stored}} WHERE vec_id < {N_QUERIES}
     )
     SELECT qid, label FROM (
-      SELECT /*+ BROADCAST(centroids) */ qid, label,
+      SELECT qid, label,
              ROW_NUMBER() OVER (PARTITION BY qid
                ORDER BY {rnd_sql(_DOT_SPARK.format(a="qv", b="cvec") + " / (qn * " + _norm_spark("cvec") + ")", 6)} DESC, label) AS cell_rk
       FROM q CROSS JOIN centroids
@@ -1118,6 +1103,7 @@ _IVF_ADC_TOPK_SQL = f"""
              {_DOT_SPARK.format(a="codes", b="codes")} AS cn2
       FROM (
         SELECT cid, label, {_CODES_SPARK} AS codes FROM (
+          -- pl is the probed cells' labels; its estimate is the query x centroid product
           SELECT /*+ BROADCAST(pl) */ st.vec_id AS cid, st.label AS label,
                  array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale,
                  st.embedding AS embedding
@@ -1131,11 +1117,12 @@ _IVF_ADC_TOPK_SQL = f"""
       FROM {{stored}} WHERE vec_id < {N_QUERIES}
     ),
     cand AS (
+      -- pr is N_PROBE cells per query; its estimate is the query x centroid product
       SELECT /*+ BROADCAST(pr) */ pr.qid AS qid, enc.cid AS cid, codes, cn2
       FROM enc JOIN {{probed}} pr ON pr.label = enc.label
     ),
     adc AS (
-      SELECT /*+ BROADCAST(q) */ cand.qid AS qid, cid, qv, qn,
+      SELECT cand.qid AS qid, cid, qv, qn,
              {_DOT_SPARK.format(a="qv", b="codes")} / (qn * sqrt(cn2)) AS adc_sim
       FROM cand JOIN q ON q.qid = cand.qid
       WHERE cand.cid != q.qid
@@ -1255,7 +1242,7 @@ def q_ivf_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         wc = W.partitionBy("vec_id").orderBy(rnd(cell_sim, 6).desc(), "cell")
         assigned = (
-            new.crossJoin(F.broadcast(centroids))
+            new.crossJoin(centroids)
             .withColumn("rk", F.row_number().over(wc))
             .filter(F.col("rk") == 1)
             .select("vec_id", "embedding", F.col("orig_label").alias("label"), "cell")
@@ -1373,7 +1360,7 @@ def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wc = W.partitionBy("qid").orderBy(rnd(cell_sim, 6).desc(), "label")
     probed = (
-        q.crossJoin(F.broadcast(elig_cells))
+        q.crossJoin(elig_cells)
         .withColumn("cell_rk", F.row_number().over(wc))
         .filter(F.col("cell_rk") <= N_PROBE)
         .select("qid", "label")
@@ -1383,13 +1370,13 @@ def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "embeddings")
         .filter(F.expr(_FILT_RESIDUAL))
         .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"), "label")
-        .join(F.broadcast(probed), "label")
+        .join(probed, "label")
     )
     sim = F.expr(_DOT_SPARK.format(a="qv", b="cv")) / (
         F.col("qn") * F.expr(_norm_spark("cv"))
     )
     scored = (
-        cand.join(F.broadcast(q), "qid")
+        cand.join(q, "qid")
         .filter(F.col("cid") != F.col("qid"))
         .select("qid", "cid", sim.alias("sim"))
     )
@@ -1541,7 +1528,7 @@ _PQ_CENT_SQL = f"""
       WHERE vec_id >= {_PQ_SEED_LO} AND vec_id < {_PQ_SEED_LO + _PQ_K}
     ),
     a1 AS (
-      SELECT /*+ BROADCAST(seeds) */ vec_id, s, v, seed,
+      SELECT vec_id, s, v, seed,
              ROW_NUMBER() OVER (PARTITION BY vec_id, s
                ORDER BY {rnd_sql(_L2_SPARK.format(a="v", b="sv"), 6)} ASC, seed) AS rk
       FROM sub JOIN seeds USING (s)
@@ -1558,7 +1545,7 @@ _PQ_TOPK_SQL = f"""
     ),
     enc AS (
       SELECT vec_id, s, code FROM (
-        SELECT /*+ BROADCAST(centt) */ vec_id, sub.s AS s, centt.code AS code,
+        SELECT vec_id, sub.s AS s, centt.code AS code,
                ROW_NUMBER() OVER (PARTITION BY vec_id, sub.s
                  ORDER BY {rnd_sql(_L2_SPARK.format(a="v", b="cv"), 6)} ASC, code) AS rk
         FROM sub JOIN {{cent}} AS centt ON centt.s = sub.s
@@ -1571,6 +1558,7 @@ _PQ_TOPK_SQL = f"""
       LATERAL VIEW posexplode({_pq_sub_array("qv")}) t AS s, qvs
     ),
     lut AS (
+      -- centt2 is the M x K codebook; its estimate is the training join's size
       SELECT /*+ BROADCAST(centt2) */ qid, qn, qsub.s AS s, centt2.code AS code,
              {_DOT_SPARK.format(a="qvs", b="cv")} AS pdot,
              {_DOT_SPARK.format(a="cv", b="cv")} AS cn2p
@@ -1578,6 +1566,7 @@ _PQ_TOPK_SQL = f"""
     ),
     adc AS (
       SELECT qid, cid, num / (qn * sqrt(cn2)) AS adc_sim FROM (
+        -- lut is |Q| x M x K rows; its estimate is the query x codebook join's size
         SELECT /*+ BROADCAST(lut) */ lut.qid AS qid, enc.vec_id AS cid,
                SUM(pdot) AS num, SUM(cn2p) AS cn2, first(qn) AS qn
         FROM enc JOIN lut ON lut.s = enc.s AND lut.code = enc.code
@@ -1745,7 +1734,7 @@ def _pq_train(sub: DataFrame) -> DataFrame:
     d_seed = F.expr(_L2_SPARK.format(a="v", b="sv"))
     w_a1 = W.partitionBy("vec_id", "s").orderBy(rnd(d_seed, 6).asc(), "seed")
     a1 = (
-        sub.join(F.broadcast(seeds), "s")
+        sub.join(seeds, "s")
         .withColumn("rk", F.row_number().over(w_a1))
         .filter(F.col("rk") == 1)
     )
@@ -1770,7 +1759,7 @@ def _pq_encode(sub: DataFrame, cent: DataFrame) -> DataFrame:
     d_cent = F.expr(_L2_SPARK.format(a="v", b="cv"))
     w_enc = W.partitionBy("vec_id", "s").orderBy(rnd(d_cent, 6).asc(), "code")
     return (
-        sub.join(F.broadcast(cent), "s")
+        sub.join(cent, "s")
         .withColumn("rk", F.row_number().over(w_enc))
         .filter(F.col("rk") == 1)
         .select("vec_id", "s", "code")
@@ -1790,14 +1779,14 @@ _PQ_PROBE_SQL = f"""
       LATERAL VIEW posexplode({_pq_sub_array("qv")}) t AS s, qvs
     ),
     lut AS (
-      SELECT /*+ BROADCAST(centt) */ qid, qn, qsub.s AS s, centt.code AS code,
+      SELECT qid, qn, qsub.s AS s, centt.code AS code,
              {_DOT_SPARK.format(a="qvs", b="cv")} AS pdot,
              {_DOT_SPARK.format(a="cv", b="cv")} AS cn2p
       FROM qsub JOIN {{cent}} AS centt ON centt.s = qsub.s
     ),
     adc AS (
       SELECT qid, cid, num / (qn * sqrt(cn2)) AS adc_sim FROM (
-        SELECT /*+ BROADCAST(lut) */ lut.qid AS qid, enc.vec_id AS cid,
+        SELECT lut.qid AS qid, enc.vec_id AS cid,
                SUM(pdot) AS num, SUM(cn2p) AS cn2, first(qn) AS qn
         FROM {{enc}} AS enc JOIN lut ON lut.s = enc.s AND lut.code = enc.code
         WHERE enc.vec_id != lut.qid
@@ -2024,7 +2013,7 @@ _IVF_PQ_TOPK_SQL = f"""
     ),
     enc AS (
       SELECT vec_id, label, s, code FROM (
-        SELECT /*+ BROADCAST(centt) */ vec_id, label, sub.s AS s, centt.code AS code,
+        SELECT vec_id, label, sub.s AS s, centt.code AS code,
                ROW_NUMBER() OVER (PARTITION BY vec_id, sub.s
                  ORDER BY {rnd_sql(_L2_SPARK.format(a="v", b="cv"), 6)} ASC, code) AS rk
         FROM sub JOIN {{cent}} AS centt ON centt.s = sub.s
@@ -2036,7 +2025,7 @@ _IVF_PQ_TOPK_SQL = f"""
     ),
     probed AS (
       SELECT qid, label FROM (
-        SELECT /*+ BROADCAST(centroids) */ qid, label,
+        SELECT qid, label,
                ROW_NUMBER() OVER (PARTITION BY qid
                  ORDER BY {rnd_sql(_DOT_SPARK.format(a="qv", b="cvec") + " / (qn * " + _norm_spark("cvec") + ")", 6)} DESC, label) AS cell_rk
         FROM q CROSS JOIN centroids
@@ -2047,20 +2036,20 @@ _IVF_PQ_TOPK_SQL = f"""
       FROM q LATERAL VIEW posexplode({_pq_sub_array("qv")}) t AS s, qvs
     ),
     cand AS (
-      SELECT /*+ BROADCAST(probed) */ enc.vec_id AS vec_id, enc.s AS s,
+      SELECT enc.vec_id AS vec_id, enc.s AS s,
              enc.code AS code, probed.qid AS qid
       FROM enc JOIN probed ON probed.label = enc.label
       WHERE enc.vec_id != probed.qid
     ),
     lut AS (
-      SELECT /*+ BROADCAST(centt2) */ qid, qn, qsub.s AS s, centt2.code AS code,
+      SELECT qid, qn, qsub.s AS s, centt2.code AS code,
              {_DOT_SPARK.format(a="qvs", b="cv")} AS pdot,
              {_DOT_SPARK.format(a="cv", b="cv")} AS cn2p
       FROM qsub JOIN {{cent}} AS centt2 ON centt2.s = qsub.s
     ),
     adc AS (
       SELECT qid, cid, num / (qn * sqrt(cn2)) AS adc_sim FROM (
-        SELECT /*+ BROADCAST(lut) */ cand.qid AS qid, cand.vec_id AS cid,
+        SELECT cand.qid AS qid, cand.vec_id AS cid,
                SUM(pdot) AS num, SUM(cn2p) AS cn2, first(qn) AS qn
         FROM cand JOIN lut ON lut.s = cand.s AND lut.code = cand.code
                           AND lut.qid = cand.qid
@@ -2278,7 +2267,7 @@ _IVF_PQ_PROBE_SQL = f"""
     ),
     probed AS (
       SELECT qid, cell FROM (
-        SELECT /*+ BROADCAST(ct) */ qid, ct.label AS cell,
+        SELECT qid, ct.label AS cell,
                ROW_NUMBER() OVER (PARTITION BY qid
                  ORDER BY {rnd_sql(_DOT_SPARK.format(a="qv", b="cvec") + " / (qn * " + _norm_spark("cvec") + ")", 6)} DESC, ct.label) AS cell_rk
         FROM q CROSS JOIN {{centroids}} AS ct
@@ -2289,14 +2278,15 @@ _IVF_PQ_PROBE_SQL = f"""
       FROM q LATERAL VIEW posexplode({_pq_sub_array("qv")}) t AS s, qvs
     ),
     lut AS (
-      SELECT /*+ BROADCAST(centt) */ qid, qn, qsub.s AS s, centt.code AS code,
+      SELECT qid, qn, qsub.s AS s, centt.code AS code,
              {_DOT_SPARK.format(a="qvs", b="cv")} AS pdot,
              {_DOT_SPARK.format(a="cv", b="cv")} AS cn2p
       FROM qsub JOIN {{cent}} AS centt ON centt.s = qsub.s
     ),
     adc AS (
       SELECT qid, cid, num / (qn * sqrt(cn2)) AS adc_sim FROM (
-        SELECT /*+ BROADCAST(probed, lut) */ lut.qid AS qid, codes.vec_id AS cid,
+        -- lut is |Q| x M x K rows; its estimate is the query x codebook join's size
+        SELECT /*+ BROADCAST(lut) */ lut.qid AS qid, codes.vec_id AS cid,
                SUM(pdot) AS num, SUM(cn2p) AS cn2, first(lut.qn) AS qn
         FROM {{codes}} AS codes
         JOIN probed ON probed.cell = codes.cell

@@ -392,7 +392,7 @@ def q_keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = tok.agg(F.countDistinct("doc_id").alias("n_docs"))
     scored = (
         tf.join(df, "term")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "doc_id",
             "term",
@@ -495,7 +495,7 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = c.withColumn(
         "rk", F.row_number().over(W.orderBy(F.col("n").desc(), "user_id"))
     ).filter(F.col("rk") <= 10)
-    return r.crossJoin(F.broadcast(t)).select(
+    return r.crossJoin(t).select(
         "user_id",
         F.col("n").alias("n_rows"),
         "rk",
@@ -538,8 +538,8 @@ def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_true = cm.groupBy("lang").agg(F.sum("n").alias("n_true"))
     per_pred = cm.groupBy("pred").agg(F.sum("n").alias("n_pred"))
     return (
-        cm.join(F.broadcast(per_true), "lang")
-        .join(F.broadcast(per_pred), "pred")
+        cm.join(per_true, "lang")
+        .join(per_pred, "pred")
         .select(
             "lang",
             "pred",
@@ -593,7 +593,7 @@ def q_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cum_n", F.sum("n").over(w.rowsBetween(W.unboundedPreceding, 0)))
         .filter(F.col("rk") <= 15)
     )
-    return r.crossJoin(F.broadcast(totals)).select(
+    return r.crossJoin(totals).select(
         "rk",
         "user_id",
         F.col("n").alias("n_events"),
@@ -671,7 +671,7 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         pc.filter(F.col("n_pair") >= 5)
         .join(u1, pc.w1 == u1.w)
         .join(u2, pc.w2 == u2.w)
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "w1",
             "w2",
@@ -712,7 +712,7 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select("doc_id", F.explode("toks").alias("w"))
     cutoffs = spark.range(1, 6).select((F.col("id") * 100).alias("cutoff"))
     return (
-        tok.crossJoin(F.broadcast(cutoffs))
+        tok.crossJoin(cutoffs)
         .groupBy("cutoff")
         .agg(
             F.countDistinct(

@@ -9,12 +9,15 @@ boundary is dwio/nimble/docs/develop/nimble_selective_reader.rst:31-62
 — and built-in in Spark; these queries exercise that declared surface
 over the same tables the reference-style connector serves).
 
-Scale posture (100 TB): every dimension side (supplier=100·sf,
-nation=25, region=5, part=2000·sf rows) broadcasts; lineitem/orders
-carry the only wide shuffles, always on their join/group keys; scalar
-subqueries (Q11 total, Q15 max, Q22 avg) are 1-row broadcasts. All
-float aggregates go through DECIMAL(27,6) so results are bit-identical
-to the DuckDB oracle regardless of partitioning (functions/exact.py).
+Scale posture (100 TB): no join is placed by hand. The planner
+broadcasts each side whose size estimate is under the session's
+autoBroadcastJoinThreshold (the dims supplier=100·sf, nation=25,
+region=5 and part=2000·sf rows, and the 1-row scalar subqueries Q11
+total, Q15 max, Q22 avg) and shuffles a side that outgrows it;
+lineitem/orders carry the only wide shuffles, always on their
+join/group keys. All float aggregates go through DECIMAL(27,6) so
+results are bit-identical to the DuckDB oracle regardless of
+partitioning (functions/exact.py).
 """
 
 from __future__ import annotations
@@ -69,18 +72,19 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     eur = (
         load(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, F.col("s_nationkey") == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
-    pc = ps.join(F.broadcast(eur), ps.l_suppkey == eur.s_suppkey)
+    pc = ps.join(eur, ps.l_suppkey == eur.s_suppkey)
     m = pc.groupBy("l_partkey").agg(F.min("cost").alias("min_cost")).withColumnRenamed("l_partkey", "m_partkey")
     p = load(spark, sf_dir, "part").filter(
         (F.col("p_type") == "STANDARD") & F.col("p_size").between(10, 20)
     )
     return (
+        # m is one row per part, but its estimate is the pc join's size
         pc.join(F.broadcast(m), (pc.l_partkey == m.m_partkey) & (pc.cost == m.min_cost))
-        .join(F.broadcast(p), pc.l_partkey == p.p_partkey)
+        .join(p, pc.l_partkey == p.p_partkey)
         .select(
             "s_name",
             "n_name",
@@ -120,12 +124,12 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load(spark, sf_dir, "nation")
     supp = (
         load(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
+        .join(n, F.col("s_nationkey") == n.n_nationkey)
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     cust = (
         load(spark, sf_dir, "customer")
-        .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
+        .join(n, F.col("c_nationkey") == n.n_nationkey)
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
     l = load(spark, sf_dir, "lineitem").filter(
@@ -134,8 +138,9 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     df = (
         l.join(o, l.l_orderkey == o.o_orderkey)
+        # cust is one row per customer; its estimate is the customer x nation product
         .join(F.broadcast(cust), o.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), l.l_suppkey == supp.s_suppkey)
+        .join(supp, l.l_suppkey == supp.s_suppkey)
         .filter(
             ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
             | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
@@ -183,13 +188,13 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     cust = (
         load(spark, sf_dir, "customer")
-        .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, F.col("c_nationkey") == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .select("c_custkey")
     )
     supp = (
         load(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
+        .join(n, F.col("s_nationkey") == n.n_nationkey)
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     p = load(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select("p_partkey")
@@ -198,10 +203,11 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     l = load(spark, sf_dir, "lineitem")
     v = (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
+        l.join(p, l.l_partkey == p.p_partkey)
         .join(o, l.l_orderkey == o.o_orderkey)
+        # cust is one region's customers; its estimate is the customer x nation x region product
         .join(F.broadcast(cust), o.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), l.l_suppkey == supp.s_suppkey)
+        .join(supp, l.l_suppkey == supp.s_suppkey)
         .select(
             F.year("o_orderdate").cast("int").alias("o_year"),
             _rev().alias("volume"),
@@ -247,7 +253,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load(spark, sf_dir, "nation")
     supp = (
         load(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
+        .join(n, F.col("s_nationkey") == n.n_nationkey)
         .select("s_suppkey", F.col("n_name").alias("nation"))
     )
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
@@ -257,8 +263,8 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.col("p_retailprice") * F.col("l_quantity")
     ).cast(DEC)
     return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .join(F.broadcast(supp), l.l_suppkey == supp.s_suppkey)
+        l.join(p, l.l_partkey == p.p_partkey)
+        .join(supp, l.l_suppkey == supp.s_suppkey)
         .join(o, l.l_orderkey == o.o_orderkey)
         .groupBy("nation", F.year("o_orderdate").cast("int").alias("o_year"))
         .agg(dsum(profit).alias("profit"), F.count(F.lit(1)).alias("n_lines"))
@@ -296,8 +302,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(dsum(_rev()).alias("revenue"))
         .select(
@@ -337,13 +343,13 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     l = load(spark, sf_dir, "lineitem")
     f = (
-        l.join(F.broadcast(s5), l.l_suppkey == s5.s_suppkey, "left_semi")
+        l.join(s5, l.l_suppkey == s5.s_suppkey, "left_semi")
         .groupBy("l_partkey")
         .agg(F.sum(F.col("l_extendedprice").cast(DEC)).alias("v"))
     )
     total = f.agg((F.sum("v").cast("double") * 0.002).alias("threshold"))
     return (
-        f.join(F.broadcast(total))
+        f.join(total)
         .filter(F.col("v").cast("double") > F.col("threshold"))
         .select(
             F.col("l_partkey").alias("part_key"),
@@ -446,9 +452,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
-        rev.join(F.broadcast(mx))
+        rev.join(mx)
         .filter(F.col("total_revenue") == F.col("mx"))
-        .join(F.broadcast(s), rev.l_suppkey == s.s_suppkey)
+        .join(s, rev.l_suppkey == s.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue")
     )
 
@@ -477,8 +483,8 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad = load(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
     l = load(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     return (
-        l.join(F.broadcast(bad), l.l_suppkey == bad.s_suppkey, "left_anti")
-        .join(F.broadcast(p), F.col("l_partkey") == p.p_partkey)
+        l.join(bad, l.l_suppkey == bad.s_suppkey, "left_anti")
+        .join(p, F.col("l_partkey") == p.p_partkey)
         .groupBy("p_brand", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -509,8 +515,8 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     pa = l.groupBy(F.col("l_partkey").alias("pk")).agg(F.avg("l_quantity").alias("avg_qty"))
     p = load(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1").select("p_partkey")
     return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .join(F.broadcast(pa), l.l_partkey == F.col("pk"))
+        l.join(p, l.l_partkey == p.p_partkey)
+        .join(pa, l.l_partkey == F.col("pk"))
         .filter(F.col("l_quantity") < 0.5 * F.col("avg_qty"))
         .agg(
             rnd(F.sum(F.col("l_extendedprice").cast(DEC)).cast("double") / 7.0).alias(
@@ -561,7 +567,7 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
+        l.join(p, l.l_partkey == p.p_partkey)
         .filter(cond)
         .agg(dsum(_rev()).alias("revenue"), F.count(F.lit(1)).alias("n_lines"))
     )
@@ -597,7 +603,7 @@ def q20_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     )
     keys = (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
+        l.join(p, l.l_partkey == p.p_partkey)
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum("l_quantity").alias("q"))
         .filter(F.col("q") > 50)
@@ -608,9 +614,10 @@ def q20_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     s = (
         load(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, F.col("s_nationkey") == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
     )
+    # keys is a distinct supplier set, but its estimate is the lineitem join's size
     return s.join(F.broadcast(keys), s.s_suppkey == keys.l_suppkey, "left_semi").select(
         "s_suppkey", "s_name"
     )
@@ -650,8 +657,8 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     s = (
         load(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, F.col("s_nationkey") == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .select("s_suppkey", "s_name")
     )
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select("o_orderkey")
@@ -659,7 +666,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     l1 = (
         l.filter(F.col("l_returnflag") == "R")
         .select("l_orderkey", "l_suppkey")
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
+        .join(s, F.col("l_suppkey") == s.s_suppkey)
         .join(o, F.col("l_orderkey") == o.o_orderkey, "left_semi")
     )
     l2 = l.select(F.col("l_orderkey").alias("o2"), F.col("l_suppkey").alias("s2"))
@@ -713,10 +720,10 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey")
     )
     return (
-        c.join(F.broadcast(avg_pos))
+        c.join(avg_pos)
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
         .join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
+        .join(n, F.col("c_nationkey") == n.n_nationkey)
         .groupBy("n_name")
         .agg(F.count(F.lit(1)).alias("numcust"), dsum("c_acctbal").alias("totacctbal"))
     )

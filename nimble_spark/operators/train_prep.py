@@ -460,7 +460,7 @@ def q_tokenizer_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = top.withColumn(
         "rk", F.row_number().over(W.orderBy(F.col("n").desc(), "tok"))
     ).withColumn("cum", F.sum("n").over(w))
-    return ranked.crossJoin(F.broadcast(total)).select(
+    return ranked.crossJoin(total).select(
         "tok", "n", "rk",
         rnd(F.col("cum").cast("double") / F.col("total"), 4).alias("cum_share"),
     )

@@ -2161,19 +2161,14 @@ def read_table(
         elif hash_idx and hash_idx["key"] == key:
             # Bucket pruning via partition-column filter: Spark prunes
             # the __nimble_bucket=N directories before listing files.
+            # The bucket ids are literal expressions the optimizer
+            # folds, so planning starts no job; the cast to the
+            # declared type matters because xxhash64 is width-sensitive.
             n = hash_idx["n_buckets"]
-            schema = T.StructType.fromJson(manifest["schema"])
-            key_type = schema[key].dataType
-            buckets = sorted(
-                {
-                    r[0]
-                    for r in spark.createDataFrame(
-                        [(v,) for v in values], T.StructType([T.StructField("k", key_type)])
-                    )
-                    .select(F.pmod(F.xxhash64("k"), F.lit(n)).alias("b"))
-                    .collect()
-                }
-            )
+            key_type = T.StructType.fromJson(manifest["schema"])[key].dataType
+            buckets = [
+                F.pmod(F.xxhash64(F.lit(v).cast(key_type)), F.lit(n)) for v in dict.fromkeys(values)
+            ]
             df = _scan_manifest_files(spark, path, _full())
             df = _restore_aliases(
                 df.filter(F.col(BUCKET_COL).isin(buckets)).filter(residual).drop(BUCKET_COL),

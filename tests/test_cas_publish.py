@@ -34,6 +34,9 @@ from nimble_spark.sources.table import (
     write_table,
 )
 
+# Spawned children import the package from this checkout.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _fs_variants(tmp_path):
     return [
@@ -137,7 +140,7 @@ def test_cas_counter_threads_lossless():
 def _tag_proc(path: str, i: int) -> None:
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from nimble_spark.sources.table import tag_commit
 
     for j in range(5):

@@ -36,6 +36,9 @@ from nimble_spark.sources.table import (
     write_table,
 )
 
+# Spawned children import the package from this checkout.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 @pytest.fixture
 def table(spark, tmp_path):
@@ -192,7 +195,7 @@ def test_append_during_cas_tag_burst(spark, table):
 def _mixed_writer(path: str, i: int) -> None:
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from nimble_spark.sources.table import tag_commit
 
     # even workers take the lock path, odd workers the CAS path; on a

@@ -21,11 +21,14 @@ import json
 import multiprocessing as mp
 import os
 
+# Spawned children import the package from this checkout.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _hammer(path: str, counter: str, cycles: int) -> None:
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from nimble_spark.sources.table import table_write_lock
 
     for _ in range(cycles):
@@ -87,7 +90,7 @@ class _LeaseOnlyFsspec:
     def __init__(self):
         import sys
 
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, ROOT)
         from nimble_spark.sources.fs_fsspec import _MiniLocalFsspec
 
         self._inner = _MiniLocalFsspec()
@@ -107,7 +110,7 @@ def _hammer_flavor(flavor: str, path: str, counter: str, cycles: int,
                    expect_mode: str) -> None:
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     for _ in range(cycles):
         lock = _make_flavor_lock(flavor, path)
         with lock:
@@ -164,7 +167,7 @@ def _break_and_hammer(path: str, counter: str, barrier_dir: str) -> None:
     import sys
     import time
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from nimble_spark.sources.table import table_write_lock
 
     # crude start barrier: wait until every sibling has registered, so

@@ -29,6 +29,10 @@ from nimble_spark.sources.fs_object_store import (
     S3ConditionalFsspec,
 )
 
+# Spawned children import the package from this checkout.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 # ---------------------------------------------------------------- S3 fake
 
 
@@ -615,7 +619,7 @@ def _live_cas_racer(url, key_env, secret_env, path, worker, n_incr):
     import sys
     import time as _t
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import boto3
 
     from nimble_spark.sources.fs_fsspec import FsspecFS

@@ -9,18 +9,20 @@ the signal that the containment is obsolete and pruning should return
 to DEFAULT-ON (reference parity with the always-selective reader,
 dwio/nimble/velox/selective/SelectiveNimbleReader.cpp:123)."""
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/harness")
+HARNESS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "harness")
+sys.path.insert(0, HARNESS)
 
 
 def test_upstream_hazard_still_present(spark):
     from spark_pushdown_hazard_repro import N_FIRST, N_FULL, probe_hazard
 
     # the probe's reader classes unpickle on executors: ship the module
-    spark.sparkContext.addPyFile("/root/repo/harness/spark_pushdown_hazard_repro.py")
+    spark.sparkContext.addPyFile(os.path.join(HARNESS, "spark_pushdown_hazard_repro.py"))
 
     r = probe_hazard(spark)
     # sanity: the probe itself behaves (fresh scans are always correct)

@@ -661,13 +661,24 @@ def _build_hive_string(spark, path):
     return {}, rows
 
 
-def _build_bucketed(spark, path):
+def _write_bucketed(spark, path):
     write_table(
         spark.range(120).selectExpr("id AS k", "cast(id AS string) AS s"),
         path,
         WriteOptions(bucket_by="k", n_buckets=4),
     )
+
+
+def _build_bucketed(spark, path):
+    _write_bucketed(spark, path)
     return {}, [(k, str(k)) for k in range(120)]
+
+
+def _build_bucketed_point(spark, path):
+    # int probe literals against a bigint key: the bucket ids only
+    # match the written ones when the probe is hashed at the key's width
+    _write_bucketed(spark, path)
+    return {"point_lookup": ("k", [3, 77, 118, 500])}, [(3, "3"), (77, "77"), (118, "118")]
 
 
 def _build_widened(spark, path):
@@ -708,12 +719,13 @@ def _build_added(spark, path):
         _build_clustered_point,
         _build_hive_string,
         _build_bucketed,
+        _build_bucketed_point,
         _build_widened,
         _build_added,
     ],
     ids=[
         "plain", "cluster_range", "cluster_point", "hive_string_partition",
-        "bucketed", "alter_widen", "alter_add_mixed",
+        "bucketed", "bucketed_point", "alter_widen", "alter_add_mixed",
     ],
 )
 def test_read_table_plans_with_zero_jobs(spark, tmpdir, build):

@@ -1,70 +1,33 @@
-"""Size-aware verify-attach gate (VERDICT r11 #1).
+"""The planner, not the operator, places broadcast joins.
 
 The near-dup verifies attach per-doc payload tables (hashed shingle
-sets, embedding vectors) to a quadratic candidate-pair set. Below the
-configured size cap the attach broadcasts (fast, map-side); above it
-— the 100 TB posture, where the payload side is O(corpus) — it MUST
-degrade to a shuffle-hash join instead of OOMing the driver. These
-tests force the large branch via the conf and prove (a) the physical
-plan actually switches strategy and (b) the results are identical on
-both branches, for every operator that uses the attach.
+sets, embedding vectors) to a quadratic candidate-pair set, and Q5
+joins a chain of dims. None of these joins carries a broadcast hint:
+the planner broadcasts a side while its size estimate is under the
+session's autoBroadcastJoinThreshold. Past it — the 100 TB posture,
+where the payload side is O(corpus) — the join must degrade to a
+shuffle join instead of OOMing the driver. With both thresholds at -1
+(nothing fits), these tests prove (a) the final plan has no broadcast
+hash join left and (b) the rows equal the default-threshold run.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from nimble_spark.functions.partitioning import (
-    VERIFY_ATTACH_CONF,
-    attach_small,
-)
+from nimble_spark.plans.audit import audit
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture
-def force_large(spark):
-    spark.conf.set(VERIFY_ATTACH_CONF, "0")
-    yield
-    spark.conf.unset(VERIFY_ATTACH_CONF)
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_attach_small_picks_broadcast_below_cap(spark):
-    small = spark.range(100).select(F.col("id"), (F.col("id") * 2).alias("v"))
-    pairs = spark.range(1000).select(F.col("id"), (F.col("id") % 100).alias("k"))
-    joined = pairs.join(attach_small(small.withColumnRenamed("id", "k")), "k")
-    assert "BroadcastHashJoin" in _plan(joined)
-
-
-def test_attach_small_picks_shuffle_above_cap(spark, force_large):
-    small = spark.range(100).select(F.col("id"), (F.col("id") * 2).alias("v"))
-    pairs = spark.range(1000).select(F.col("id"), (F.col("id") % 100).alias("k"))
-    joined = pairs.join(attach_small(small.withColumnRenamed("id", "k")), "k")
-    p = _plan(joined)
-    assert "BroadcastHashJoin" not in p
-    assert "ShuffledHashJoin" in p or "SortMergeJoin" in p
-
-
-def test_attach_small_malformed_cap_raises(spark):
-    """A cap that is not an integer byte count ('256m') raises
-    instead of silently falling back to the default."""
-    small = spark.range(100).withColumnRenamed("id", "k")
-    spark.conf.set(VERIFY_ATTACH_CONF, "256m")
-    try:
-        with pytest.raises(ValueError):
-            attach_small(small)
-    finally:
-        spark.conf.unset(VERIFY_ATTACH_CONF)
+THRESHOLDS = (
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold",
+)
 
 
 @pytest.mark.parametrize(
     "qname",
     [
+        "q5_local_supplier",
         "q_minhash_lsh_pairs",
         "q_ngram_jaccard_pairs",
         "q_embedding_neardup_lsh",
@@ -72,17 +35,27 @@ def test_attach_small_malformed_cap_raises(spark):
     ],
 )
 def test_large_branch_results_identical(spark, qname):
-    """End-to-end: conf=0 (every attach takes the shuffle branch) must
-    return exactly the rows the default broadcast branch returns."""
+    """End-to-end: with no side under the broadcast threshold the
+    final plan has 0 BroadcastHashJoin and returns exactly the rows
+    the default-threshold run returns."""
     from nimble_spark.registry import QUERIES, _load_all
 
     _load_all()
     fn = QUERIES[qname].fn
     want = sorted(tuple(r) for r in fn(spark, SF).collect())
-    spark.conf.set(VERIFY_ATTACH_CONF, "0")
+    saved = {k: spark.conf.get(k, None) for k in THRESHOLDS}
+    for k in THRESHOLDS:
+        spark.conf.set(k, "-1")
     try:
-        got = sorted(tuple(r) for r in fn(spark, SF).collect())
+        df = fn(spark, SF)
+        got = sorted(tuple(r) for r in df.collect())
+        a = audit(df, execute=False)  # df ran above: this is AQE's final plan
     finally:
-        spark.conf.unset(VERIFY_ATTACH_CONF)
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert a.n_broadcast_joins == 0, a.plan
     assert got == want
     assert len(want) > 0  # the gate must compare real rows, not two empties

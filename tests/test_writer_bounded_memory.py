@@ -19,7 +19,6 @@ import tempfile
 
 _SCRIPT = r"""
 import sys, shutil
-sys.path.insert(0, "/root/repo")
 from nimble_spark import get_spark
 from nimble_spark.sources.table import WriteOptions, read_manifest, read_table, write_table
 import pyspark.sql.functions as F
@@ -62,6 +61,7 @@ def test_wide_table_write_under_capped_heap():
         out = subprocess.run(
             [sys.executable, "-c", _SCRIPT, f"{d}/wide"],
             env=env,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
             capture_output=True,
             text=True,
             timeout=420,
