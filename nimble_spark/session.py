@@ -43,4 +43,14 @@ def get_spark(app_name: str = "nimble_spark", shuffle_partitions: int | None = N
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Python workers import nimble_spark from their own working
+    # directory and PYTHONPATH, never from the driver's sys.path: put
+    # the checkout this driver imported first on theirs
+    # (SparkContext.environment holds the spark.executorEnv.* vars
+    # every Python function ships with).
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([root, *paths])
     return spark

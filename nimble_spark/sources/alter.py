@@ -14,7 +14,7 @@ the Iceberg/Delta column-mapping model:
 - the manifest carries ``schema_mapping = {"renames": {physical:
   logical}, "dropped": [physical, ...]}``;
 - every read path surfaces the LOGICAL view
-  (``table.apply_schema_mapping``), every write path maps logical →
+  (``table._project_logical``), every write path maps logical →
   physical before bytes land.
 
 At 100 TB this is the only acceptable shape: renaming a column on a

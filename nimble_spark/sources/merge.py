@@ -34,8 +34,9 @@ from nimble_spark.sources.table import (
     _build_manifest,
     _next_commit,
     _plan_parquet,
+    _project_logical,
     _write_manifest,
-    _restore_aliases,
+    logical_field_names,
     read_manifest,
     read_table,
 )
@@ -209,12 +210,14 @@ def merge_into(
             "first or use the streaming upsert sink"
         )
     tgt = read_table(spark, path)
-    if key not in tgt.columns:
-        raise ValueError(f"merge key {key!r} not in table schema {tgt.columns}")
-    if sorted(source.columns) != sorted(tgt.columns):
+    schema = _logical_schema(manifest)
+    cols = schema.names
+    if key not in cols:
+        raise ValueError(f"merge key {key!r} not in table schema {cols}")
+    if sorted(source.columns) != sorted(cols):
         raise ValueError(
             f"source schema {sorted(source.columns)} must match target "
-            f"{sorted(tgt.columns)}"
+            f"{sorted(cols)}"
         )
     # Align source TYPES to the table schema before anything hashes or
     # stores them: xxhash64 is width-sensitive (an INT source key
@@ -227,10 +230,10 @@ def merge_into(
     # an unparseable one and commit the corruption.
     from nimble_spark.sources.table import _safe_widening
 
-    tgt_types = {f.name: f.dataType for f in tgt.schema.fields}
+    tgt_types = {f.name: f.dataType for f in schema.fields}
     src_types = {f.name: f.dataType for f in source.schema.fields}
     aligned = []
-    for c in tgt.columns:
+    for c in cols:
         st, tt = src_types[c].simpleString(), tgt_types[c].simpleString()
         if st == tt:
             aligned.append(F.col(c))
@@ -270,12 +273,12 @@ def merge_into(
             if (b := _bucket_of(f["path"])) in hit or b is None
         ]
         scan = (
-            _restore_aliases(
+            _project_logical(
                 _plan_parquet(
                     spark, [os.path.join(path, f) for f in cand], path, "merge discovery", manifest
                 ),
                 manifest,
-            ).select(*tgt.columns)
+            )
             if cand
             else tgt.limit(0)
         )
@@ -288,23 +291,38 @@ def merge_into(
     )
 
     # 2. the rewrite set: survivors of affected files + every source row
-    cols = tgt.columns
     if affected:
         # _plan_parquet, not a raw reader: partition values exist only
         # as directory strings, and re-inferring their type here would
         # REWRITE '01' as the integer 1 — durable corruption, not a
         # read-side glitch (see table._plan_parquet).
-        aff_df = _restore_aliases(
+        aff_df = _project_logical(
             _plan_parquet(
                 spark, [os.path.join(path, f) for f in affected], path, "merge rewrite", manifest
             ),
             manifest,
-        ).select(*cols)
+        )
         new_rows = aff_df.join(keys, key, "left_anti").unionByName(source.select(*cols))
     else:
         new_rows = source.select(*cols)
 
-    return _commit_rewrite(spark, path, manifest, tgt.schema, affected, new_rows, "merge", opts)
+    return _commit_rewrite(spark, path, manifest, schema, affected, new_rows, "merge", opts)
+
+
+def _logical_schema(manifest: dict):
+    """``read_table``'s full-read schema of an alias-free table, from
+    the manifest: each logical column with its stored field's declared
+    type and metadata, nullable as every file scan reads it."""
+    import pyspark.sql.types as T
+
+    renames = (manifest.get("schema_mapping") or {}).get("renames") or {}
+    fields = {renames.get(f["name"], f["name"]): f for f in manifest["schema"]["fields"]}
+    return T.StructType(
+        [
+            T.StructField.fromJson({**fields[c], "name": c, "nullable": True})
+            for c in logical_field_names(manifest)
+        ]
+    )
 
 
 def _bucket_of(rel: str) -> int | None:
@@ -546,16 +564,18 @@ def update_where(
         return manifest
     # _plan_parquet keeps partition values at their declared type —
     # a raw re-inferring reader here would REWRITE '01' as 1.
-    aff_df = _restore_aliases(
+    aff_df = _project_logical(
         _plan_parquet(
             spark, [os.path.join(path, f) for f in affected], path, "update rewrite", manifest
         ),
         manifest,
-    ).select(*tgt.columns)
+    )
     updated = aff_df.withColumns(
         {c: F.when(cond, F.expr(e)).otherwise(F.col(c)) for c, e in set_exprs.items()}
     )
-    return _commit_rewrite(spark, path, manifest, tgt.schema, affected, updated, "update", opts)
+    return _commit_rewrite(
+        spark, path, manifest, _logical_schema(manifest), affected, updated, "update", opts
+    )
 
 
 def overwrite_partitions(

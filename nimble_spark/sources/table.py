@@ -29,12 +29,14 @@ import bisect
 import hashlib
 import json
 import os
+import re
 import shutil
 import threading
 import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any, Iterable, Optional
+from urllib.parse import unquote
 
 import pyarrow.dataset as pa_ds
 import pyarrow.parquet as pa_pq
@@ -773,8 +775,8 @@ def _write_table_locked(
         if mode == "append" and prior is not None and prior.get("logical_columns"):
             # The table's logical read order is a TABLE property, not a
             # batch property: an append whose frame has reordered
-            # columns must not change what every reader sees (ADVICE
-            # r5) — carry the prior order forward.
+            # columns must not change what every reader sees — carry
+            # the prior order forward.
             manifest["logical_columns"] = prior["logical_columns"]
         elif logical_columns:
             manifest["logical_columns"] = logical_columns
@@ -1550,10 +1552,10 @@ def _write_manifest(
     On a 'cas'-disciplined table it is what makes the publish safe
     against the lock-free streaming sink: commits the live root gained
     since the base are folded in (:func:`_merge_stream_commits`)
-    instead of silently erased (ADVICE r10 #1 — a micro-batch landing
-    between a lock-holder's manifest read and its publish vanished:
-    commit entry, data files and replay stamp all gone after Spark had
-    acked the batch). ``None`` = no base statable (full-overwrite log
+    instead of silently erased (otherwise a micro-batch landing between
+    a lock-holder's manifest read and its publish vanishes: commit
+    entry, data files and replay stamp all gone after Spark acked the
+    batch). ``None`` = no base statable (full-overwrite log
     resets): last-write-wins, documented on write_table(overwrite).
 
     ``allow_stream_merge=False`` turns a detected concurrent streaming
@@ -2017,11 +2019,11 @@ def read_table(
 ) -> DataFrame:
     """Projected / index-pruned scan of a nimble_spark table.
 
-    - ``columns``: projection; names absent from the file schema come
-      back as typed nulls (add-column evolution, NullColumnReader
-      analogue). The null's type comes from ``evolved_types`` (reader
-      schema declaration, name → Spark type string), else the manifest
-      schema, else string.
+    - ``columns``: projection; names the table lacks come back as
+      typed nulls (add-column evolution, NullColumnReader analogue) of
+      their ``evolved_types`` type (reader schema declaration, name →
+      Spark type string), else string. A column a file predates reads
+      as a null of its declared type.
     - ``range_scan=(key, lo, hi)``: cluster-index file pruning + a
       pushed-down residual filter (lo/hi inclusive, None = open).
     - ``point_lookup=(key, values)``: hash-index bucket pruning when
@@ -2057,7 +2059,7 @@ def read_table(
     # Duplicate-column dedup (TabletWriter stream-dedup analogue): the
     # files store one copy per distinct column. Index probes on a
     # deduplicated name serve from its stored twin, and every returned
-    # frame restores the logical schema via _restore_aliases.
+    # frame restores the logical schema via _project_logical.
     _aliases = manifest.get("column_aliases", {})
     if _aliases:
         if range_scan is not None and range_scan[0] in _aliases:
@@ -2101,9 +2103,9 @@ def read_table(
             raise ValueError("as_of_commit is a plain snapshot scan; combine with filters on the result")
         commits = manifest.get("commits", [])
         base = _commit_base(commits)
-        # base > 0 guard (ADVICE r9): on a never-expired table a
-        # negative as_of_commit is a plain out-of-range argument, not
-        # an expiry casualty — keep the honest message for it
+        # base > 0 guard: on a never-expired table a negative
+        # as_of_commit is a plain out-of-range argument, not an expiry
+        # casualty — keep the honest message for it
         if as_of_commit < base and commits and base > 0:
             raise ValueError(
                 f"as_of_commit {as_of_commit} expired — history before "
@@ -2118,25 +2120,20 @@ def read_table(
             raise ValueError(
                 f"snapshot at commit {as_of_commit} is gone (compaction/vacuum removed {missing[:3]}…)"
             )
-        if not snap:
-            return _restore_aliases(_empty_df(spark, manifest), manifest)
-        df = _plan_grouped_parquet(
-            spark,
-            list(zip(snap, resolved)),
-            manifest,
-            f"snapshot at commit {as_of_commit}",
+        df = (
+            _plan_grouped_parquet(
+                spark,
+                list(zip(snap, resolved)),
+                manifest,
+                f"snapshot at commit {as_of_commit}",
+            )
+            if snap
+            else _empty_df(spark, manifest)
         )
-        if BUCKET_COL in df.columns:
-            df = df.drop(BUCKET_COL)
-        df = _restore_aliases(df, manifest)
-        if columns:
-            df = _project_with_evolution(df, manifest, columns, evolved_types)
-        return df
+        return _project_logical(df, manifest, columns, evolved_types)
     if row_range is not None:
-        df = _restore_aliases(_read_row_range(spark, path, _full(), *row_range), manifest)
-        if columns:
-            df = _project_with_evolution(df, manifest, columns, evolved_types)
-        return df
+        df = _read_row_range(spark, path, _full(), *row_range)
+        return _project_logical(df, manifest, columns, evolved_types)
     hash_idx = manifest.get("indexes", {}).get("hash")
 
     file_list: list[str] | None = None
@@ -2165,20 +2162,13 @@ def read_table(
             # folds, so planning starts no job; the cast to the
             # declared type matters because xxhash64 is width-sensitive.
             n = hash_idx["n_buckets"]
-            key_type = T.StructType.fromJson(manifest["schema"])[key].dataType
+            key_type = _declared_type(manifest, key)
             buckets = [
                 F.pmod(F.xxhash64(F.lit(v).cast(key_type)), F.lit(n)) for v in dict.fromkeys(values)
             ]
             df = _scan_manifest_files(spark, path, _full())
-            df = _restore_aliases(
-                df.filter(F.col(BUCKET_COL).isin(buckets)).filter(residual).drop(BUCKET_COL),
-                manifest,
-            )
-            if columns:
-                # same evolution contract as every other path: absent
-                # (added-later) names come back as typed nulls
-                return _project_with_evolution(df, manifest, columns, evolved_types)
-            return df
+            df = df.filter(F.col(BUCKET_COL).isin(buckets)).filter(residual)
+            return _project_logical(df, manifest, columns, evolved_types)
         elif key in manifest.get("indexes", {}).get("sorted", []) and manifest[
             "indexes"
         ].get("sorted_fence", {}).get(key) in (None, _files_fingerprint(_full())):
@@ -2220,79 +2210,98 @@ def read_table(
             df = _empty_df(spark, manifest)
     else:
         df = _scan_manifest_files(spark, path, manifest)
-    if BUCKET_COL in df.columns:
-        df = df.drop(BUCKET_COL)
     if residual is not None:
         df = df.filter(residual)
-    df = _restore_aliases(df, manifest)
-    if columns:
-        df = _project_with_evolution(df, manifest, columns, evolved_types)
-    return df
+    return _project_logical(df, manifest, columns, evolved_types)
 
 
-def _restore_aliases(df: DataFrame, manifest: dict) -> DataFrame:
-    """Restore deduplicated columns (manifest ``column_aliases``) on a
-    frame read from the physical files: each duplicate re-materializes
-    as a zero-cost reference to its stored twin (Catalyst projects it;
-    nothing extra is read or shuffled), then columns return to the
-    recorded logical order. The reader half of the TabletWriter
-    stream-dedup analogue (tablet/TabletWriter.cpp:313: deduped
-    streams are served from the single stored copy).
+def _project_logical(
+    df: DataFrame,
+    manifest: dict,
+    columns: Optional[list[str]] = None,
+    evolved_types: Optional[dict] = None,
+) -> DataFrame:
+    """The logical view of a frame planned from the manifest's declared
+    schema (``_plan_parquet``, ``_empty_df``), built from the manifest
+    alone — no schema is read back from the frame. A scan yields the
+    declared non-partition fields in manifest order, then the Hive
+    partition keys, then ``__nimble_bucket`` on hash-indexed tables;
+    this one projection turns that into the table's columns:
 
-    Also restores the DECLARED column order: Hive-partitioned scans
-    surface partition columns last (data columns, then directory
-    columns), but the schema contract is the order the table was
-    written with — a (k, p, v) table must not read back (k, v, p).
-    The reorder is a zero-cost Catalyst projection, and is skipped
-    entirely (no plan node) when the scan order already matches."""
-    aliases = manifest.get("column_aliases") or {}
-    out = df
-    # NOTE on df.columns in this function: each access rebuilds a
-    # len(schema) name list in Python, and this path runs on
-    # 5,000-column tables — the r11 profile showed the naive
-    # per-element `c in out.columns` spellings below costing ~2.5 s of
-    # pure driver CPU per wide read. Column names are snapshotted into
-    # local sets once per mutation instead.
-    cols = set(out.columns)
-    for dup, kept in aliases.items():
-        if dup not in cols and kept in cols:
-            out = out.withColumn(dup, F.col(kept))
-            cols.add(dup)
-    out = apply_schema_mapping(out, manifest)
-    order = logical_field_names(manifest)
-    out_cols = list(out.columns)
-    out_colset = set(out_cols)
-    order_set = set(order)
-    if (
-        order
-        and all(c in out_colset for c in order)
-        and out_cols[: len(order)] != order
-    ):
-        extra = [c for c in out_cols if c not in order_set]
-        out = out.select(*order, *extra)
-    return out
+    - dedup_columns duplicates (``column_aliases``) re-materialize as
+      references to their stored twin (the TabletWriter stream-dedup
+      reader half, tablet/TabletWriter.cpp:313) — nothing extra is read;
+    - ``schema_mapping`` renames surface physical columns under their
+      logical name and drops vanish (alter.py; evolution by stable
+      offset, dwio/nimble/velox/SchemaTypes.h:109-159);
+    - the declared column order returns: a (k, p, v) table partitioned
+      by p must not read back (k, v, p), and the bucket column goes.
 
+    ``columns`` selects just those names. A dropped name raises; a name
+    the table lacks reads as a typed null (add-column evolution, the
+    NullColumnReader analogue, selective/ColumnReader.cpp:57-62) of its
+    ``evolved_types`` type, else string. ``evolved_types`` (name → Spark
+    type string) may also declare a wider type than the table's: only
+    lossless widenings cast (the reference's UPCAST reads); narrowing
+    raises instead of silently truncating.
 
-def apply_schema_mapping(df: DataFrame, manifest: dict) -> DataFrame:
-    """Physical → logical view for metadata-only schema evolution
-    (alter.py; the reference's schema-by-offset evolution — names can
-    change because streams are addressed by stable offset,
-    dwio/nimble/velox/SchemaTypes.h:109-159): dropped physical columns
-    disappear, renamed ones surface under their logical name. Identity
-    (no plan node) for tables without a mapping."""
+    A full read of a table without aliases whose scan already holds
+    its columns in logical order (partition keys last) projects no
+    column by column: dropped and bucket columns are dropped and
+    renames applied by name, and a plain table returns ``df`` itself,
+    with no plan node."""
     mapping = manifest.get("schema_mapping") or {}
-    if not mapping:
-        return df
-    out = df
-    gone = [c for c in mapping.get("dropped", []) if c in out.columns]
-    if gone:
-        out = out.drop(*gone)
-    renames = {
-        p: l for p, l in (mapping.get("renames") or {}).items() if p in out.columns
-    }
-    if renames:
-        out = out.withColumnsRenamed(renames)
-    return out
+    dropped = mapping.get("dropped") or []
+    renames = mapping.get("renames") or {}
+    aliases = manifest.get("column_aliases") or {}
+    logical = logical_field_names(manifest)
+    if not columns:
+        idx = manifest.get("indexes", {})
+        pkeys = (idx.get("partition") or {}).get("keys") or []
+        if not aliases and [c for c in logical if c not in pkeys] + pkeys == logical:
+            gone = [*dropped, BUCKET_COL] if "hash" in idx else dropped
+            out = df.drop(*gone) if gone else df
+            # alter refuses a rename target that names any physical
+            # column, so applying the renames one after another (as
+            # withColumnsRenamed does) never renames a column twice
+            return out.withColumnsRenamed(renames) if renames else out
+        columns, evolved_types = logical, None
+    dropped = set(dropped)
+    # logical name → the stored column it reads
+    source = {l: p for p, l in renames.items()}
+    source.update(aliases)
+    live = set(logical)
+    evolved_types = evolved_types or {}
+    sel = []
+    for c in columns:
+        if c in dropped:
+            # a dropped name stays dead (alter refuses re-adding it —
+            # old files still hold its bytes); null-filling here would
+            # misreport existing data as absent
+            raise ValueError(f"column {c!r} was dropped (alter_table)")
+        if c not in live:
+            sel.append(F.lit(None).cast(evolved_types.get(c) or "string").alias(c))
+            continue
+        src = source.get(c, c)
+        declared = evolved_types.get(c)
+        if declared:
+            stored = _declared_type(manifest, src).simpleString()
+            if declared != stored:
+                if not _safe_widening(stored, declared):
+                    raise ValueError(
+                        f"unsafe type evolution for {c!r}: {stored} → {declared}"
+                    )
+                sel.append(F.col(src).cast(declared).alias(c))
+                continue
+        sel.append(c if src == c else F.col(src).alias(c))
+    return df.select(*sel)
+
+
+def _declared_type(manifest: dict, name: str) -> T.DataType:
+    """One stored column's declared Spark type, parsing only its field
+    of the (possibly thousands-wide) manifest schema."""
+    field = next(f for f in manifest["schema"]["fields"] if f["name"] == name)
+    return T.StructField.fromJson(field).dataType
 
 
 def logical_field_names(manifest: dict) -> list[str]:
@@ -2307,7 +2316,7 @@ def logical_field_names(manifest: dict) -> list[str]:
     return [
         renames.get(f["name"], f["name"])
         for f in manifest.get("schema", {}).get("fields", [])
-        if f["name"] not in dropped
+        if f["name"] not in dropped and f["name"] != BUCKET_COL
     ]
 
 
@@ -2582,10 +2591,10 @@ def materialize_columns(spark: SparkSession, path: str) -> dict:
     # Hold the table write lock across the WHOLE read→rewrite span
     # (like merge/update/compact): without it a concurrent append
     # committing during the staged rewrite would be silently erased
-    # from the swapped-in table (ADVICE r5). ALL planning (alias
-    # check, layout reconstruction) happens under the lock so it
-    # reflects the manifest the rewrite will actually replace. The
-    # lock is non-reentrant, so the write goes through the
+    # from the swapped-in table. ALL planning (alias check, layout
+    # reconstruction) happens under the lock so it reflects the
+    # manifest the rewrite will actually replace. The lock is
+    # non-reentrant, so the write goes through the
     # _caller_holds_lock entry point; it lives outside the table dir,
     # so it survives the swap.
     with table_write_lock(path):
@@ -2660,10 +2669,10 @@ def _plan_parquet(
     # (default 32) root paths, Spark lists them with a distributed job
     # that SILENTLY DROPS files vanishing mid-listing ("deleted during
     # listing") instead of raising — a scan racing a rewrite would
-    # return partial rows with no error (caught by the r6 reader-race
-    # soak, seed 60041). The file index is already materialized, so
-    # comparing its size against the requested list is free and turns
-    # the silent loss into the same retryable gone-window error.
+    # return partial rows with no error. The file index is already
+    # materialized, so comparing its size against the requested list
+    # is free and turns the silent loss into the same retryable
+    # gone-window error.
     if len(df.inputFiles()) != len(set(paths)):
         raise ValueError(
             f"{what} planned against files that are gone (concurrent "
@@ -2709,10 +2718,10 @@ def _scan_manifest_files(spark: SparkSession, path: str, manifest: dict) -> Data
         manifest = read_manifest(path)  # sharded root → materialize
     files = [os.path.join(path, f["path"]) for f in manifest["files"]]
     if not files:
-        # Legacy-manifest guard (ADVICE r5): bucketed tables written
-        # before the ignore_prefixes fix have ZERO-entry manifests
-        # (the old pyarrow default skipped __nimble_bucket=N dirs at
-        # manifest build). Scanning "exactly the manifest" would read
+        # Legacy-manifest guard: bucketed tables written before the
+        # ignore_prefixes fix have ZERO-entry manifests (the old
+        # pyarrow default skipped __nimble_bucket=N dirs at manifest
+        # build). Scanning "exactly the manifest" would read
         # such a table as silently EMPTY while its data sits on disk.
         # Detect data the manifest doesn't know about and refuse.
         if "hash" in manifest.get("indexes", {}):
@@ -3084,9 +3093,9 @@ def unset_table_property(path: str, key: str, optimistic: bool = False) -> dict:
 # Adding one requires the consuming code path AND a test — an unknown
 # nimble.* key is a typo and refuses loudly rather than silently
 # configuring nothing, and a malformed VALUE refuses at write time so
-# consumers never have to guess what a typo meant (ADVICE r9: a bad
-# nimble.vacuum.min_age_s silently fell back to the 600 s grace and
-# vacuumed sooner than the operator intended).
+# consumers never have to guess what a typo meant (a bad
+# nimble.vacuum.min_age_s would otherwise fall back to the 600 s grace
+# and vacuum sooner than the operator intended).
 def _prop_nonneg_float(v: str) -> None:
     if float(v) < 0:
         raise ValueError("must be >= 0")
@@ -3249,7 +3258,7 @@ def rollback_table(
         # readable until VACUUM).
         # named by the rollback's COMMIT NUMBER, not the log position:
         # after expire_snapshots the two diverge, and a position-named
-        # dir could reuse a pre-expiry commit's trash name (ADVICE r9)
+        # dir could reuse a pre-expiry commit's trash name
         trash = os.path.join(
             path, MANIFEST_DIR, "trash", f"commit-{_next_commit(commits)}"
         )
@@ -3330,7 +3339,7 @@ def read_changes(
             f"snapshot read"
         )
     elif base > 0 and since_commit == base - 1 and not bootstrap:
-        # ADVICE r9: a consumer legitimately checkpointed here consumed
+        # A consumer legitimately checkpointed here consumed
         # commits 0..base-1 and needs commit {base}'s TRUE delta — but
         # the fold made that unrecoverable, and the feed would deliver
         # the fold base's FULL state as inserts. Delta/Iceberg raise
@@ -3395,12 +3404,10 @@ def read_changes(
     parts: list[DataFrame] = []
 
     def _part(ci: int, resolved: list, change_type: str) -> DataFrame:
-        df = _plan_grouped_parquet(
-            spark, resolved, manifest, f"changes window (commit {ci})"
+        df = _project_logical(
+            _plan_grouped_parquet(spark, resolved, manifest, f"changes window (commit {ci})"),
+            manifest,
         )
-        if BUCKET_COL in df.columns:
-            df = df.drop(BUCKET_COL)
-        df = _restore_aliases(df, manifest)
         if with_commit:
             df = df.withColumn("_commit", F.lit(ci).cast("long"))
         if with_change_type:
@@ -3413,7 +3420,7 @@ def read_changes(
         if del_resolved:
             parts.append(_part(ci, del_resolved, "delete"))
     if not parts:
-        df = _restore_aliases(_empty_df(spark, manifest), manifest)
+        df = _project_logical(_empty_df(spark, manifest), manifest)
         if with_commit:
             df = df.withColumn("_commit", F.lit(None).cast("long"))
         if with_change_type:
@@ -3432,18 +3439,19 @@ def seek_to_row(spark: SparkSession, path: str, row: int) -> DataFrame:
     stripe row counts, then skip within the stripe). Files wholly
     before the seek point are never opened."""
     manifest = read_manifest(path)
-    return _read_row_range(spark, path, manifest, row, manifest["rows"])
+    return _project_logical(_read_row_range(spark, path, manifest, row, manifest["rows"]), manifest)
 
 
 def _read_row_range(
     spark: SparkSession, path: str, manifest: dict, start: int, end: int
 ) -> DataFrame:
-    """Rows [start, end) in manifest file order. Files wholly outside
-    the range are never opened (manifest row counts = stripe row
-    counts, the seekToRow stripe-skipping step); files intersecting
-    the range are read in parallel and trimmed row-exactly via the
-    parquet reader's hidden ``_metadata.row_index`` (row position
-    within its file) plus each file's cumulative offset."""
+    """Rows [start, end) in manifest file order, as a scan frame for
+    ``_project_logical``. Files wholly outside the range are never
+    opened (manifest row counts = stripe row counts, the seekToRow
+    stripe-skipping step); files intersecting the range are read in
+    parallel and trimmed row-exactly via the parquet reader's hidden
+    ``_metadata.row_index`` (row position within its file) plus each
+    file's cumulative offset."""
     needed: list[tuple[str, int]] = []  # (abs path, cumulative offset)
     off = 0
     for f in manifest["files"]:
@@ -3454,20 +3462,27 @@ def _read_row_range(
     if not needed or end <= start:
         return _empty_df(spark, manifest)
     df = _plan_parquet(spark, [p for p, _ in needed], path, "row-range scan", manifest)
-    # basename → cumulative offset (parquet part files have unique
-    # uuid-bearing basenames); map lookup keeps the plan one projection
+    # file → cumulative offset, keyed by the scan's own path strings:
+    # basenames repeat across partition directories (one write puts a
+    # part-00001 under p=0/ and another under p=1/). inputFiles() and
+    # _metadata.file_path URL-encode a path alike but spell an empty
+    # authority differently (file:/// vs file:/), so both drop the
+    # scheme. One map lookup keeps the plan a single filter.
+    def bare(s: str) -> str:
+        return re.sub(r"^[\w+.-]+:", "", s).lstrip("/")
+
+    # A relative table path resolves against the working directory,
+    # as the scan's does; inputFiles() lists it absolute.
+    offsets = {
+        bare(os.path.normpath(p) if re.match(r"[\w+.-]+:", p) else os.path.abspath(p)): o
+        for p, o in needed
+    }
     kv = []
-    for p, o in needed:
-        kv.extend([F.lit(os.path.basename(p)), F.lit(o)])
-    pos = F.element_at(F.create_map(*kv), F.col("_metadata.file_name")) + F.col(
-        "_metadata.row_index"
-    )
-    data_cols = [c for c in df.columns if c != BUCKET_COL]
-    return (
-        df.withColumn("__pos", pos)
-        .filter((F.col("__pos") >= start) & (F.col("__pos") < end))
-        .select(*data_cols)
-    )
+    for s in df.inputFiles():
+        kv.extend([F.lit(bare(s)), F.lit(offsets[unquote(bare(s))])])
+    key = F.regexp_replace(F.col("_metadata.file_path"), r"^[\w+.-]+:/*", "")
+    pos = F.element_at(F.create_map(*kv), key) + F.col("_metadata.row_index")
+    return df.filter((pos >= start) & (pos < end))
 
 
 def verify_table(path: str) -> list[str]:
@@ -3534,63 +3549,6 @@ def verify_table_distributed(spark: SparkSession, path: str) -> list[str]:
 def _empty_df(spark: SparkSession, manifest: dict) -> DataFrame:
     schema = T.StructType.fromJson(manifest["schema"])
     return spark.createDataFrame([], schema)
-
-
-def _project_with_evolution(
-    df: DataFrame,
-    manifest: dict,
-    columns: list[str],
-    evolved_types: Optional[dict] = None,
-) -> DataFrame:
-    """Missing columns read as TYPED nulls — add-column schema
-    evolution (NullColumnReader analogue, the reference fills absent
-    streams with nulls of the declared type,
-    dwio/nimble/velox/selective/ColumnReader.cpp:57-62). The type is
-    resolved from the caller's declared reader schema
-    (``evolved_types``: name → Spark type string), else from the
-    manifest schema (covers columns present in some files but pruned
-    away), else falls back to string."""
-    present = set(df.columns)
-    mapping = manifest.get("schema_mapping") or {}
-    renames = mapping.get("renames") or {}
-    dropped = set(mapping.get("dropped", []))
-    # keyed by LOGICAL name: the projection runs on the logical view
-    manifest_types = {
-        renames.get(f["name"], f["name"]): T.StructField.fromJson(f).dataType
-        for f in manifest.get("schema", {}).get("fields", [])
-        if f["name"] not in dropped
-    }
-    for c in columns:
-        if c in dropped:
-            # a dropped name stays dead (alter refuses re-adding it —
-            # old files still hold its bytes); null-filling here would
-            # misreport existing data as absent
-            raise ValueError(f"column {c!r} was dropped (alter_table)")
-    evolved_types = evolved_types or {}
-    file_types = dict(df.dtypes)
-    sel = []
-    for c in columns:
-        if c in present:
-            declared = evolved_types.get(c)
-            stored = file_types.get(c)
-            if declared and declared != stored:
-                # Type-widening evolution: the reader declares a wider
-                # type than the file stores (the reference's UPCAST
-                # reads, e.g. int32 stream → BIGINT vector). Only
-                # lossless widenings are honored — narrowing silently
-                # truncating data is exactly the bug schema evolution
-                # exists to prevent, so it raises.
-                if not _safe_widening(stored, declared):
-                    raise ValueError(
-                        f"unsafe type evolution for {c!r}: {stored} → {declared}"
-                    )
-                sel.append(F.col(c).cast(declared).alias(c))
-            else:
-                sel.append(F.col(c))
-        else:
-            dtype = evolved_types.get(c) or manifest_types.get(c) or "string"
-            sel.append(F.lit(None).cast(dtype).alias(c))
-    return df.select(*sel)
 
 
 _INT_RANK = {"tinyint": 0, "smallint": 1, "int": 2, "bigint": 3}

@@ -775,7 +775,7 @@ def select(
     files intersecting that row span are opened — the seekToRow
     stripe-skip path, so peeking stripe 40000 of a 100 TB table costs
     one file read."""
-    from nimble_spark.sources.table import _read_row_range, read_table
+    from nimble_spark.sources.table import _project_logical, _read_row_range, read_table
 
     if stripe is None:
         df = read_table(spark, path, columns=columns)
@@ -802,14 +802,8 @@ def select(
     if span is None:
         raise ValueError(f"stripe {stripe} out of range (table has {idx} stripes)")
     lo = span[0] + offset
-    df = _read_row_range(spark, path, m, lo, min(span[1], lo + limit))
-    # same read contract as every other path: deduplicated columns
-    # restore from their stored twin, projections follow the
-    # schema-evolution rules (absent names → typed nulls)
-    from nimble_spark.sources.table import _project_with_evolution, _restore_aliases
-
-    df = _restore_aliases(df, m)
-    return _project_with_evolution(df, m, columns, None) if columns else df
+    # same logical view as every other read path
+    return _project_logical(_read_row_range(spark, path, m, lo, min(span[1], lo + limit)), m, columns)
 
 
 def show_trash(spark: SparkSession, path: str) -> DataFrame:

@@ -1791,3 +1791,178 @@ def test_point_lookup_prunes_cluster_files_per_value(spark, tmpdir):
     df = read_table(spark, path, point_lookup=("k", [998, 3]))
     assert len(df.inputFiles()) == 2
     assert sorted(tuple(r) for r in df.collect()) == [(3, 21), (998, 6986)]
+
+
+# Logical-view matrix: every layout a read resolves through the
+# manifest (Hive directories, the bucket column, dedup aliases, the
+# alter_table mapping), read through every path, with and without a
+# projection. Each table holds two data commits: k 0..39, then 40..59.
+_VIEW_LAYOUTS = {
+    "plain": WriteOptions(),
+    "hive": WriteOptions(partition_by=["p"]),
+    "bucketed": WriteOptions(bucket_by="k", n_buckets=4),
+    "dedup": WriteOptions(dedup_columns=True),
+    "alter": WriteOptions(),
+}
+
+
+def _view_rows(ks, alter):
+    if alter:
+        return [{"k": k, "p": str(k % 3), "vv": 2 * k, "w": k, "z": k} for k in ks]
+    return [{"k": k, "p": str(k % 3), "v": 2 * k, "d": 2 * k, "w": k} for k in ks]
+
+
+def _build_view_table(spark, path, layout):
+    """(logical name → Spark type, rows of commit 0, rows of the later
+    data commit) for a two-commit table in ``layout``."""
+    from nimble_spark.sources.alter import alter_table
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id AS k", "cast(id % 3 AS string) AS p", "id * 2 AS v", "id * 2 AS d",
+            "cast(id AS int) AS w",
+        )
+
+    opts = _VIEW_LAYOUTS[layout]
+    write_table(frame(0, 40), path, opts)
+    if layout != "alter":
+        write_table(frame(40, 60), path, opts, mode="append")
+        types = {"k": "bigint", "p": "string", "v": "bigint", "d": "bigint", "w": "int"}
+        return types, _view_rows(range(40), False), _view_rows(range(40, 60), False)
+    alter_table(path, rename={"v": "vv"}, drop=["d"], add={"z": "int"}, widen={"w": "bigint"})
+    write_table(
+        spark.range(40, 60).selectExpr(
+            "id AS k", "cast(id % 3 AS string) AS p", "id * 2 AS vv", "id AS w",
+            "cast(id AS int) AS z",
+        ),
+        path,
+        mode="append",
+    )
+    types = {"k": "bigint", "p": "string", "vv": "bigint", "w": "bigint", "z": "int"}
+    rows0 = [dict(r, z=None) for r in _view_rows(range(40), True)]
+    return types, rows0, _view_rows(range(40, 60), True)
+
+
+@pytest.mark.parametrize("layout", list(_VIEW_LAYOUTS))
+def test_logical_view_on_every_read_path(spark, tmpdir, monkeypatch, layout):
+    """Every read path returns the table's logical columns in declared
+    order with their declared types: partition keys in place, no bucket
+    column, dedup aliases restored, alter renames/drops/adds/widenings
+    applied. A projection returns exactly the requested names in the
+    requested order; a name the table lacks is a null."""
+    from nimble_spark import tools
+    from nimble_spark.sources.table import read_changes, seek_to_row
+
+    path = f"{tmpdir}/logical_view_{layout}"
+    types, rows0, rows1 = _build_view_table(spark, path, layout)
+    names = list(types)
+    full = rows0 + rows1
+    proj = ["z", "vv", "p", "k", "absent"] if layout == "alter" else ["w", "d", "p", "k", "absent"]
+
+    def check(df, want, cols):
+        assert df.dtypes == [(c, types.get(c, "string")) for c in cols]
+        got = sorted((tuple(r) for r in df.collect()), key=repr)
+        assert got == sorted((tuple(r.get(c) for c in cols) for r in want), key=repr)
+
+    def subset_of_full(df, cols, n):
+        got = [tuple(r) for r in df.collect()]
+        assert len(got) == n
+        assert set(got) <= {tuple(r.get(c) for c in cols) for r in full}
+
+    if layout in ("plain", "bucketed", "alter"):
+        # their scans already hold the columns in logical order, so a
+        # full read selects nothing column by column
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrame, "select", lambda *a: pytest.fail("full read selected"))
+            read_table(spark, path)
+            read_table(spark, path, as_of_commit=0)
+    for cols in (None, proj):
+        want_cols = cols or names
+        check(read_table(spark, path, columns=cols), full, want_cols)
+        check(
+            read_table(spark, path, columns=cols, range_scan=("k", 10, 45)),
+            [r for r in full if 10 <= r["k"] <= 45],
+            want_cols,
+        )
+        check(
+            read_table(spark, path, columns=cols, point_lookup=("k", [3, 41, 99])),
+            [r for r in full if r["k"] in (3, 41)],
+            want_cols,
+        )
+        check(read_table(spark, path, columns=cols, as_of_commit=0), rows0, want_cols)
+        df = read_table(spark, path, columns=cols, row_range=(5, 50))
+        assert df.dtypes == [(c, types.get(c, "string")) for c in want_cols]
+        subset_of_full(df, want_cols, 45)
+        df = tools.select(spark, path, columns=cols, stripe=0, limit=10**6)
+        assert df.dtypes == [(c, types.get(c, "string")) for c in want_cols]
+        subset_of_full(df, want_cols, read_manifest(path)["files"][0]["rg_rows"][0])
+    # the projected row-range and stripe reads hold the same rows as
+    # the full ones, projected
+    for read in (
+        lambda c: read_table(spark, path, columns=c, row_range=(5, 50)),
+        lambda c: tools.select(spark, path, columns=c, stripe=1, limit=10**6),
+    ):
+        whole = [dict(zip(names, r)) for r in read(None).collect()]
+        assert sorted((tuple(r) for r in read(proj).collect()), key=repr) == sorted(
+            (tuple(r.get(c) for c in proj) for r in whole), key=repr
+        )
+    since = 1 if layout == "alter" else 0  # commit 1 of the alter table is the alter
+    check(read_changes(spark, path, since), rows1, names)
+    # a relative table path (the CLI passes its argument through) reads
+    # the same rows; the driver and the scan resolve it against one
+    # working directory
+    monkeypatch.chdir(spark._jvm.System.getProperty("user.dir"))
+    rel = os.path.relpath(path)
+    for read in (
+        lambda p: read_table(spark, p, row_range=(5, 50)),
+        lambda p: seek_to_row(spark, p, 50),
+        lambda p: tools.run_command(spark, p, "SELECT * STRIPE 0"),
+    ):
+        assert sorted(map(tuple, read(rel).collect()), key=repr) == sorted(
+            map(tuple, read(path).collect()), key=repr
+        )
+
+    # evolution contract: a lossless widening casts, narrowing raises,
+    # an unknown name is a null of its declared type
+    widened = read_table(spark, path, columns=["w", "k"], evolved_types={"w": "bigint"})
+    assert widened.dtypes == [("w", "bigint"), ("k", "bigint")]
+    with pytest.raises(ValueError, match="unsafe type evolution"):
+        read_table(spark, path, columns=["w"], evolved_types={"w": "smallint"})
+    typed = read_table(spark, path, columns=["k", "later"], evolved_types={"later": "double"})
+    assert typed.dtypes == [("k", "bigint"), ("later", "double")]
+    assert typed.filter(F.col("later").isNotNull()).count() == 0
+    if layout == "alter":
+        for kwargs in ({}, {"point_lookup": ("k", [3])}, {"row_range": (0, 5)}):
+            with pytest.raises(ValueError, match="dropped"):
+                read_table(spark, path, columns=["k", "d"], **kwargs)
+
+
+def test_wide_projected_read_pulls_no_schema(spark, tmpdir, monkeypatch):
+    """Building a 3-column read of a 2048-column table decides every
+    column from the manifest: the frame's schema is never pulled back
+    from the JVM (each pull parses the whole 2048-field schema)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    path = f"{tmpdir}/wide_2048"
+    write_table(
+        spark.range(4).selectExpr(*[f"id + {i} AS c{i:04d}" for i in range(2048)]),
+        path,
+        WriteOptions(),
+    )
+    pulls = []
+    schema = DataFrame.schema
+
+    def counted(df):
+        pulls.append(1)
+        return schema.__get__(df, DataFrame)
+
+    monkeypatch.setattr(DataFrame, "schema", property(counted))
+    for kwargs in ({}, {"point_lookup": ("c0000", [1, 2])}, {"range_scan": ("c0000", 0, 2)}):
+        df = read_table(spark, path, columns=["c2047", "c0000", "c1024"], **kwargs)
+    assert pulls == []
+    monkeypatch.undo()
+    assert [tuple(r) for r in df.orderBy("c0000").collect()] == [
+        (2047 + k, k, 1024 + k) for k in range(3)
+    ]
