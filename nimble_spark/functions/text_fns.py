@@ -45,10 +45,6 @@ def hash32_sql_duck(expr: str) -> str:
 # 64-bit SimHash: bits 0..31 from hash32, 32..63 from hash32b).
 
 
-def hash32b_sql_spark(expr: str) -> str:
-    return f"CAST(conv(substr(md5({expr}), 9, 8), 16, 10) AS BIGINT)"
-
-
 def hash32b_sql_duck(expr: str) -> str:
     return f"CAST(concat('0x', substr(md5({expr}), 9, 8)) AS BIGINT)"
 

@@ -42,12 +42,6 @@ from nimble_spark.tables import load
 _QS_K = 128
 
 
-def _qs_key_spark():
-    return F.concat_ws(
-        "_", F.col("l_orderkey").cast("string"), F.col("l_linenumber").cast("string")
-    )
-
-
 _QS_HV_DUCK = hash60_sql_duck(
     "CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR)"
 )

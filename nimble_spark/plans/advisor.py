@@ -135,12 +135,3 @@ def advise_layout(
                 )
             )
     return recs
-
-
-def advise_df(spark: SparkSession, table: DataFrame, workload: list[DataFrame]) -> DataFrame:
-    """Advisor report as a DataFrame (the DSL-facing shape)."""
-    recs = advise_layout(spark, table, workload)
-    return spark.createDataFrame(
-        [(r.option, r.column, r.evidence, r.reason) for r in recs],
-        "option STRING, column STRING, evidence INT, reason STRING",
-    )

@@ -46,13 +46,10 @@ incremental recluster) keep files physical and carry the mapping.
 
 from __future__ import annotations
 
-import os
 import re
 
 from nimble_spark.sources.table import (
-    MANIFEST_DIR,
-    _next_commit,
-    _write_manifest,
+    _publish_successor,
     logical_field_names,
     read_manifest,
     table_write_lock,
@@ -141,12 +138,13 @@ def alter_table(
     import copy
 
     with table_write_lock(path):
-        # deep-copy before mutating: read_manifest returns the SHARED
-        # cached dict (one parse per manifest version); assigning into
-        # m["schema"]["fields"] in place would expose a half-altered
+        m = read_manifest(path)
+        # deep-copy the schema before mutating it: read_manifest returns
+        # the SHARED cached dict (one parse per manifest version);
+        # assigning into its fields in place would expose a half-altered
         # manifest to concurrent readers of the same version (the r5
-        # cache-poisoning class).
-        m = copy.deepcopy(read_manifest(path))
+        # cache-poisoning class)
+        schema = copy.deepcopy(m["schema"])
         if m.get("column_aliases"):
             raise ValueError(
                 "alter_table on a dedup_columns (aliased) table: run "
@@ -155,7 +153,7 @@ def alter_table(
         mapping = dict(m.get("schema_mapping") or {})
         renames: dict[str, str] = dict(mapping.get("renames") or {})
         dropped: list[str] = list(mapping.get("dropped") or [])
-        phys_names = [f["name"] for f in m["schema"]["fields"]]
+        phys_names = [f["name"] for f in schema["fields"]]
         logical = logical_field_names(m)
         inv = {l: p for p, l in renames.items()}  # logical → physical
         protected = _protected_names(m)
@@ -227,7 +225,7 @@ def alter_table(
                     f"under physical names; re-binding would resurface "
                     f"stale data"
                 )
-            m["schema"]["fields"] = list(m["schema"]["fields"]) + [
+            schema["fields"] = schema["fields"] + [
                 {
                     "name": name,
                     "type": _JSON_TYPE.get(typ, typ),
@@ -255,16 +253,14 @@ def alter_table(
                     f"routing, bloom probes and layout metadata are "
                     f"computed from the stored type; rewrite to change it"
                 )
-            cur_json = next(
-                f["type"] for f in m["schema"]["fields"] if f["name"] == p
-            )
+            cur_json = next(f["type"] for f in schema["fields"] if f["name"] == p)
             cur_ddl = _DDL_OF_JSON.get(cur_json, cur_json)
             if not _safe_widening(cur_ddl, typ):
                 raise ValueError(
                     f"widen: {cur_ddl} → {typ} is not a lossless widening "
                     f"(integer chain up, float→double)"
                 )
-            for f in m["schema"]["fields"]:
+            for f in schema["fields"]:
                 if f["name"] == p:
                     f["type"] = _JSON_TYPE.get(typ, typ)
 
@@ -273,37 +269,31 @@ def alter_table(
             new_mapping["renames"] = renames
         if dropped:
             new_mapping["dropped"] = dropped
-        new_m = dict(m)
-        if new_mapping:
-            new_m["schema_mapping"] = new_mapping
-        else:
-            new_m.pop("schema_mapping", None)
-        commits = list(m.get("commits", []))
-        new_m["commits"] = commits + [
-            {
-                "commit": _next_commit(commits),
-                "mode": "alter",
+        new_m = _publish_successor(
+            path,
+            m,
+            {"schema": schema, "schema_mapping": new_mapping or None},
+            "alter",
+            [],
+            replaced=[],
+            entry={
                 "data_change": False,
-                "files_added": 0,
-                "files_removed": 0,
-                "rows_added": 0,
-                "files": [],
                 "alter": {
                     "rename": rename or None,
                     "drop": drop or None,
                     "add": add or None,
                     "widen": widen or None,
                 },
-            }
-        ]
+            },
+        )
         # Pending-mask directories are NOT moved: mask application
         # (deletes.read_with_deletes) resolves a mask directory's name
         # through the rename map, so a mask recorded under the old
         # name keeps masking under the new logical name with no
         # crash window between a dir move and the manifest publish.
-        # ATOMIC commit point; base = the log as read under this lock —
-        # a concurrent streaming micro-batch (written under the PRE-
-        # alter physical names, which the rename map keeps resolving)
-        # merges in instead of vanishing
-        _write_manifest(path, new_m, base_commits=commits)
+        # (The publish above is the ATOMIC commit point; its base is the
+        # log as read under this lock — a concurrent streaming
+        # micro-batch, written under the PRE-alter physical names which
+        # the rename map keeps resolving, merges in instead of
+        # vanishing.)
         return new_m

@@ -347,13 +347,7 @@ def compact_table(
     columns every other leaf in the directory carries."""
     import pyspark.sql.types as T
 
-    from nimble_spark.sources.table import (
-        _describe_parquet_file,
-        _fold_column_stats,
-        _layout_stats,
-        _stat_cols,
-        _write_manifest,
-    )
+    from nimble_spark.sources.table import _describe_parquet_file, _stat_cols
 
     m = read_manifest(path)
     idx = m.get("indexes", {})
@@ -405,7 +399,7 @@ def compact_table(
         shutil.move(os.path.join(tmp, part[0]), os.path.join(path, out_name))
         shutil.rmtree(tmp, ignore_errors=True)
         merged_entry_at[os.path.normpath(b[0]["path"])] = _describe_parquet_file(
-            os.path.join(path, out_name), path, stat_cols
+            os.path.join(path, out_name), path, stat_cols, m
         )
 
     new_m = _publish_partial_rewrite(
@@ -438,180 +432,65 @@ def _publish_partial_rewrite(
     stat_cols,
 ) -> dict:
     """Shared publish step for PARTIAL physical rewrites (compaction,
-    incremental recluster): splice the new entries into the manifest,
-    publish atomically BEFORE deleting any source file, then tombstone
-    the replaced files into the retention trash.
+    incremental recluster, deepen_clone): splice the new entries into
+    the manifest and publish it through the shared successor rule —
+    atomically BEFORE any source file moves to the retention trash.
 
     ``groups`` are the replaced manifest entries; ``entries_at`` maps
     each group's first-member relpath to its ordered replacement
     entries (splicing at the first member keeps manifest order — the
     cluster range order authority — intact). Untouched entries keep
-    their positions: verbatim when their stats are complete,
-    re-described from the footer when a legacy entry lacks them (same
-    completeness rule as the incremental build's reuse filter).
+    their positions: verbatim when their stats and declared NDV/SUM/
+    HIST synopses are complete, re-described from the file when a
+    legacy entry lacks them (the same completeness rule as the
+    incremental build's reuse filter). The prior stats generation
+    carries: untouched entries pass through verbatim, so a pre-fix
+    table stays marked pre-fix (read guard active, next append
+    repairs) and a healthy one is not silently downgraded.
 
-    The commit log, CHECK constraints, and column attributes carry
-    forward: this is a physical rewrite, not a new table. Streaming
-    offsets (commit indices) stay valid — replays of windows whose
-    files were rewritten away fail LOUDLY via resolve_historical_file
-    until vacuum, like any rewrite — and appends keep validating the
-    table's constraints. The rewrite logs a data_change=False commit
-    (the Delta OPTIMIZE marker): snapshot replays APPLY it, CDC/stream
-    consumers SKIP it — re-emitting 100 TB of unchanged rows through
-    every downstream stream because the layout changed would be the
-    scale anti-pattern."""
-    from nimble_spark.sources.table import (
-        _describe_parquet_file,
-        _fold_column_stats,
-        _layout_stats,
-        _next_commit,
-        _write_manifest,
-    )
+    Everything table-level carries: this is a physical rewrite, not a
+    new table. Streaming offsets (commit indices) stay valid — replays
+    of windows whose files were rewritten away fail LOUDLY via
+    resolve_historical_file until vacuum, like any rewrite — and
+    appends keep validating the table's constraints. The rewrite logs
+    a data_change=False commit (the Delta OPTIMIZE marker): snapshot
+    replays APPLY it, CDC/stream consumers SKIP it — re-emitting 100 TB
+    of unchanged rows through every downstream stream because the
+    layout changed would be the scale anti-pattern."""
+    from nimble_spark.sources.table import _describe_parquet_file, _publish_successor
 
     replaced = {os.path.normpath(f["path"]) for g in groups for f in g}
+    want = ["nulls", "min"] + [
+        key
+        for key, decl in (
+            ("ndv", "ndv_columns"), ("sums", "sum_columns"), ("hist", "histogram_columns")
+        )
+        if m.get(decl)
+    ]
     files_info: list[dict] = []
     for f in m["files"]:
         rel = os.path.normpath(f["path"])
         if rel in entries_at:
             files_info.extend(entries_at[rel])
         elif rel not in replaced:
-            if "nulls" in f and "min" in f:
-                files_info.append(f)
-            else:  # legacy/partial entry: re-read its footer
-                files_info.append(
-                    _describe_parquet_file(os.path.join(path, rel), path, stat_cols)
-                )
-
-    prior_commits = list(m.get("commits", []))
-    n_added = sum(len(v) for v in entries_at.values())
-    new_m = {
-        "format_version": 1,
-        # carry the prior stats generation: untouched entries pass
-        # through verbatim, so a pre-fix table stays marked pre-fix
-        # (read guard active, next append repairs) and a healthy
-        # gen-2 table is not silently downgraded
-        "stats_gen": m.get("stats_gen", 1),
-        "schema": m["schema"],
-        "column_attributes": m.get("column_attributes", {}),
-        "rows": sum(f["rows"] for f in files_info),
-        "files": files_info,
-        "column_stats": _fold_column_stats(files_info),
-        "indexes": m.get("indexes", {}),
-        "user_metadata": {**m.get("user_metadata", {}), **user_md},
-        "write_stats": dict(m.get("write_stats", {}), **_layout_stats(files_info)),
-        "commits": prior_commits
-        + [
-            {
-                "commit": _next_commit(prior_commits),
-                "mode": mode,
-                "data_change": False,
-                "files_added": n_added,
-                "files_removed": len(replaced),
-                "removed": sorted(replaced),
-                "rows_added": 0,
-                "files": sorted(
-                    e["path"] for v in entries_at.values() for e in v
-                ),
-            }
-        ],
-    }
-    if m.get("constraints"):
-        new_m["constraints"] = m["constraints"]
-    # dedup_columns contract survives a physical rewrite: rewritten
-    # files are read from (and written with) the stored schema, so the
-    # alias map and logical order stay exactly as recorded.
-    for k in ("column_aliases", "logical_columns", "tags", "schema_mapping",
-              "properties"):
-        if m.get(k):
-            new_m[k] = m[k]
-    from nimble_spark.sources.deletes import carry_consumed_masks
-
-    _cm = carry_consumed_masks(path, m)
-    if _cm:  # dead-mask fence survives until its dirs are reclaimed
-        new_m["consumed_masks"] = _cm
-    # NDV/SUM/HIST synopses stay complete across maintenance: untouched
-    # entries carry theirs verbatim; freshly merged/reclustered files
-    # compute theirs here (bounded: only the rewritten files, only the
-    # declared columns)
-    if m.get("ndv_columns") or m.get("sum_columns") or m.get("histogram_columns"):
-        from nimble_spark.sources.table import _synopses_of_file
-
-        nc, sc = m.get("ndv_columns"), m.get("sum_columns")
-        hc = m.get("histogram_columns")
-        if nc:
-            new_m["ndv_columns"] = nc
-        if sc:
-            new_m["sum_columns"] = sc
-        if hc:
-            new_m["histogram_columns"] = hc
-
-        def _refresh(e: dict) -> dict:
-            if os.path.isabs(e["path"]):
-                return e
-            need_ndv = nc and "ndv" not in e
-            need_sum = sc and "sums" not in e
-            need_hist = hc and "hist" not in e
-            if not (need_ndv or need_sum or need_hist):
-                return e
-            ndv, sums, hist = _synopses_of_file(
-                os.path.join(path, e["path"]),
-                nc if need_ndv else None,
-                sc if need_sum else None,
-                hc if need_hist else None,
+            files_info.append(
+                f
+                if all(k in f for k in want)
+                else _describe_parquet_file(os.path.join(path, rel), path, stat_cols, m)
             )
-            # copy-on-write per entry: carried entries are SHARED with
-            # the manifest cache — never mutate them in place
-            e = dict(e)
-            if need_ndv:
-                e["ndv"] = ndv
-            if need_sum:
-                e["sums"] = sums
-            if need_hist:
-                e["hist"] = hist
-            return e
-
-        new_m["files"] = [_refresh(e) for e in new_m["files"]]
-    # ATOMIC commit point; base = the log this compaction derived from
-    # (a concurrent streaming micro-batch merges in, never erased)
-    _write_manifest(path, new_m, base_commits=prior_commits)
-
-    # Only after the publish: tombstone the replaced sources into the
-    # retention trash (same discipline as merge.py — snapshots and CDC
-    # replays spanning the rewrite stay readable until VACUUM). A
-    # crash mid-loop strands some at their original paths, where
-    # historical reads still resolve them; the live manifest never
-    # references them again either way.
-    fs = get_fs()
-    # named by the rewrite's COMMIT NUMBER (post-expiry the log
-    # position diverges and could reuse a pre-expiry dir name)
-    trash = os.path.join(
-        path, MANIFEST_DIR, "trash", f"commit-{_next_commit(prior_commits)}"
+    # base = the log this rewrite derived from (a concurrent streaming
+    # micro-batch merges in, never erased); the replaced sources stay
+    # in the retention trash so snapshots and CDC replays spanning the
+    # rewrite keep reading until VACUUM
+    return _publish_successor(
+        path,
+        m,
+        {"files": files_info, "user_metadata": user_md},
+        mode,
+        [e["path"] for v in entries_at.values() for e in v],
+        replaced=sorted(replaced),
+        entry={"data_change": False},
     )
-    fs.makedirs(trash)
-    for g in groups:
-        for f in g:
-            if os.path.isabs(f["path"]):
-                # Shallow-clone foreign entry: the SOURCE table owns
-                # the bytes — never move them. The manifest removal is
-                # the whole replacement (the rewrite just localized
-                # the rows); historical reads resolve the absolute
-                # path directly, and the clone's dependency on it ends
-                # at vacuum of the SOURCE, not of this table.
-                continue
-            src = os.path.join(path, f["path"])
-            # rel-path-preserving, like merge/rollback:
-            # resolve_historical_file globs trash/commit-*/<rel>, so
-            # partitioned/bucketed rels must keep their subdirs
-            dst = os.path.join(trash, os.path.normpath(f["path"]))
-            fs.makedirs(os.path.dirname(dst))
-            try:
-                fs.move(src, dst)
-            except OSError:
-                pass  # already gone — harmless
-            crc = os.path.join(os.path.dirname(src), f".{os.path.basename(src)}.crc")
-            if os.path.exists(crc):
-                os.remove(crc)
-    return new_m
 
 
 def fast_ndv(path: str, col: str) -> dict:
@@ -1356,7 +1235,7 @@ def _recluster_partial(
                 continue
             out_name = os.path.join(bin_dir, f"recluster-{uuid.uuid4().hex[:12]}.parquet")
             shutil.move(os.path.join(tmp, p), os.path.join(path, out_name))
-            e = _describe_parquet_file(os.path.join(path, out_name), path, stat_cols)
+            e = _describe_parquet_file(os.path.join(path, out_name), path, stat_cols, m)
             if e["rows"] == 0:  # empty range partition — drop, don't publish
                 os.remove(os.path.join(path, out_name))
                 continue

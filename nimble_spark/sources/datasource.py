@@ -956,75 +956,43 @@ class NimbleWriter(DataSourceArrowWriter):
         commit_extra: dict | None = None,
         publish=None,
     ) -> None:
+        import json as _json
+
         from pyspark.sql.types import StructType as _St
 
-        from nimble_spark.sources.table import (
-            MANIFEST_DIR,
-            WriteOptions,
-            _build_manifest,
-            _write_manifest,
-        )
-
-        if publish is None:
-            # base_commits binds late (set below once the prior root is
-            # read): on a 'cas'-disciplined table it lets the manifest
-            # publish fold in streaming micro-batches that landed
-            # between this writer's read and its publish instead of
-            # silently erasing them (ADVICE r10 #1). Overwrite resets
-            # the log — no base statable, documented last-write-wins.
-            publish = lambda m: _write_manifest(  # noqa: E731
-                self.path,
-                m,
-                base_commits=(None if self.overwrite else prior_commits),
-            )
+        from nimble_spark.sources.table import _build_manifest, _publish_successor
 
         committed = {m.rel_path for m in messages if m is not None and m.rel_path}
 
-        reuse: dict = {}
-        prior_commits: list = []
-        prior_files: set = set()
-        aliased = False
-        prior_idx: dict = {}
-        prior_ndv = prior_sums = prior_hist = None
-        prior_constraints: dict = {}
-        prior_tags: dict = {}
-        prior_properties: dict = {}
-        prior_umd: dict = {}
-        prior_consumed: list = []
+        # Overwrite starts a new table; an append derives from the
+        # prior root (no/corrupt prior manifest → first commit semantics)
+        prior = None
         if not self.overwrite:
             try:
                 prior = read_manifest(self.path)
-                aliased = bool(prior.get("column_aliases"))
-                reuse = {e["path"]: e for e in prior["files"] if "nulls" in e}
-                if prior.get("stats_gen", 1) < _STATS_GEN:
-                    # pre-fix entries may under-count nulls (see
-                    # table.STATS_GEN): re-describe instead of reusing
-                    reuse = {}
-                prior_files = {e["path"] for e in prior["files"]}
-                prior_commits = list(prior.get("commits", []))
-                prior_idx = prior.get("indexes", {}) or {}
-                prior_ndv = prior.get("ndv_columns")
-                prior_sums = prior.get("sum_columns")
-                prior_hist = prior.get("histogram_columns")
-                prior_constraints = prior.get("constraints") or {}
-                prior_tags = prior.get("tags") or {}
-                prior_properties = prior.get("properties") or {}
-                prior_umd = prior.get("user_metadata") or {}
-                from nimble_spark.sources.deletes import carry_consumed_masks
-
-                prior_consumed = carry_consumed_masks(self.path, prior) or []
             except (OSError, ValueError, KeyError):
-                pass  # no/corrupt prior manifest → first commit semantics
-        if aliased:
-            # dedup_columns tables store a reduced physical schema;
-            # this writer stages full-schema files, which would
-            # produce a mixed layout. write_table (which validates +
-            # drops the aliases) is the append path for such tables.
-            raise ValueError(
-                "append via format('nimble') to a dedup_columns table "
-                "is unsupported; use write_table (it validates and "
-                "applies the column aliases)"
-            )
+                prior = None
+        reuse: dict = {}
+        prior_files: set = set()
+        if prior is not None:
+            if prior.get("column_aliases"):
+                # dedup_columns tables store a reduced physical schema;
+                # this writer stages full-schema files, which would
+                # produce a mixed layout. write_table (which validates
+                # + drops the aliases) is the append path for such
+                # tables.
+                raise ValueError(
+                    "append via format('nimble') to a dedup_columns table "
+                    "is unsupported; use write_table (it validates and "
+                    "applies the column aliases)"
+                )
+            reuse = {e["path"]: e for e in prior["files"] if "nulls" in e}
+            if prior.get("stats_gen", 1) < _STATS_GEN:
+                # pre-fix entries may under-count nulls (see
+                # table.STATS_GEN): re-describe instead of reusing
+                reuse = {}
+            prior_files = {e["path"] for e in prior["files"]}
+        constraints = (prior or {}).get("constraints") or {}
 
         # Drop OUR OWN failed/retried task attempts that never
         # committed — matched by this job's token prefix, so a
@@ -1065,11 +1033,10 @@ class NimbleWriter(DataSourceArrowWriter):
             # empty on a pre-STATS_GEN table (repair gate), where the
             # build below re-describes the prior files from disk.
             raise ValueError("nimble write committed zero files")
-        schema_src = os.path.join(self.path, any_file) if any_file else None
         spark_schema = (
-            _St.fromJson(read_manifest(self.path)["schema"])
+            _St.fromJson((prior or read_manifest(self.path))["schema"])
             if any_file is None
-            else _arrow_to_spark_schema(pq.read_schema(schema_src))
+            else _arrow_to_spark_schema(pq.read_schema(os.path.join(self.path, any_file)))
         )
         # Exclude stray files from the manifest build: a CONCURRENT
         # job's in-flight staged files (not yet committed — possibly
@@ -1092,18 +1059,6 @@ class NimbleWriter(DataSourceArrowWriter):
                 for f in os.listdir(self.path)
                 if f.endswith(".parquet") and f not in committed and f not in prior_files
             }
-        # Stats-shaped indexes survive appends (same carry-forward rule
-        # as write_table: per-file min/max pruning stays correct on
-        # mixed layouts; bloom-less files are always kept; the fence
-        # detects sorted-index staleness). Directory-shaped layouts
-        # were refused at writer construction; before this carry, a
-        # python-DS append silently DROPPED the table's cluster/bloom
-        # indexes from the manifest (r7 probe).
-        index_meta = {
-            k: prior_idx[k]
-            for k in ("cluster", "zorder", "bloom", "sorted", "sorted_fence")
-            if k in prior_idx
-        }
         # CHECK constraints gate EVERY append, this writer's included:
         # one distributed validation scan over just the staged files,
         # library NULL semantics (~expr drops NULLs → NULL passes),
@@ -1111,7 +1066,7 @@ class NimbleWriter(DataSourceArrowWriter):
         # files as unreferenced debris for vacuum, never a commit.
         # (r7 probe: violating rows committed silently and the
         # constraints/tags keys vanished from the manifest.)
-        if prior_constraints and committed:
+        if constraints and committed:
             # No SparkSession exists in the DS commit worker — validate
             # with DuckDB over exactly the staged files (SQL predicates
             # share the dialect for the comparison/arithmetic/boolean
@@ -1128,7 +1083,7 @@ class NimbleWriter(DataSourceArrowWriter):
                 "'" + os.path.join(self.path, f).replace("'", "''") + "'"
                 for f in sorted(committed)
             )
-            for cname, cexpr in prior_constraints.items():
+            for cname, cexpr in constraints.items():
                 try:
                     bad = _duck.sql(
                         f"SELECT COUNT(*) FROM read_parquet([{flist}]) "
@@ -1145,72 +1100,22 @@ class NimbleWriter(DataSourceArrowWriter):
                         f"CHECK constraint {cname!r} ({cexpr}) violated by "
                         f"this append; nothing was committed"
                     )
-        manifest = _build_manifest(
-            None, spark_schema, self.path, WriteOptions(), index_meta,
-            reuse=reuse, exclude=stray, ndv_cols=prior_ndv, sum_cols=prior_sums,
-            hist_cols=prior_hist,
+        # Flat files only: directory-shaped layouts were refused at
+        # writer construction; the stats-shaped indexes carry with the
+        # rest of the prior root
+        data = _build_manifest(
+            self.path, spark_schema, False, prior, reuse=reuse, exclude=stray
         )
         # A concurrent OVERWRITE may have swept our staged files before
         # this commit ran (overwrite replaces the table wholesale).
         # Refuse to publish a silent partial result — fail loudly.
-        produced = {f["path"] for f in manifest["files"]}
-        missing = committed - produced
+        missing = committed - {f["path"] for f in data["files"]}
         if missing:
             raise RuntimeError(
                 f"commit lost {len(missing)} staged files (concurrent "
                 f"overwrite replaced the table?): {sorted(missing)[:3]}…"
             )
-        # An append must also CARRY every prior committed file: a
-        # vanished one (manual deletion, foreign sweep) would silently
-        # publish a shrunken table — rows lost without an error (r8
-        # probe). Fail loudly instead; the prior manifest stays live.
-        if not self.overwrite:
-            lost = {os.path.normpath(f) for f in prior_files} - {
-                os.path.normpath(f) for f in produced
-            }
-            if lost:
-                raise RuntimeError(
-                    f"append found {len(lost)} prior committed file(s) "
-                    f"missing on disk (deleted outside the engine?); "
-                    f"refusing to publish a shrunken table: "
-                    f"{sorted(lost)[:3]}…"
-                )
-        # writer runtime stats parity with write_table (SHOW WRITE STATS)
-        from nimble_spark.sources.table import _layout_stats
-
-        manifest["write_stats"] = _layout_stats(manifest["files"])
-        # table-level contracts survive a python-DS append exactly as
-        # they survive a write_table append: constraints keep gating,
-        # tags keep resolving, user metadata carries forward
-        if prior_constraints:
-            manifest["constraints"] = prior_constraints
-        if prior_tags:
-            manifest["tags"] = prior_tags
-        if prior_properties:
-            manifest["properties"] = prior_properties
-        if prior_consumed:
-            # dead-mask fence survives until its dirs are reclaimed
-            manifest["consumed_masks"] = prior_consumed
-        if prior_umd:
-            manifest["user_metadata"] = {
-                **prior_umd,
-                **(manifest.get("user_metadata") or {}),
-            }
-        prior_rows = sum(c.get("rows_added", 0) for c in prior_commits)
-        manifest["commits"] = prior_commits + [
-            {
-                # caller extras first (e.g. the stream writer's
-                # batch_id — stamped INSIDE the atomic publish; a
-                # second stamp-publish would reopen the replay window
-                # a crash between the two publishes leaves)
-                **(commit_extra or {}),
-                "commit": _next_commit(prior_commits),
-                "mode": "overwrite" if self.overwrite else "append",
-                "files_added": len(committed),
-                "rows_added": manifest["rows"] - prior_rows,
-                "files": sorted(committed),
-            }
-        ]
+        data["schema"] = _json.loads(spark_schema.json())
         if self.overwrite:
             # Pre-existing delete masks die with the replaced table —
             # record them consumed IN the manifest (atomic with the
@@ -1219,11 +1124,24 @@ class NimbleWriter(DataSourceArrowWriter):
             # swallowed matching keys in the NEW data.
             from nimble_spark.sources.deletes import mask_batch_dirs
 
-            consumed = mask_batch_dirs(self.path)
-            if consumed:
-                manifest["consumed_masks"] = consumed
-        os.makedirs(os.path.join(self.path, MANIFEST_DIR), exist_ok=True)
-        publish(manifest)
+            data["consumed_masks"] = mask_batch_dirs(self.path) or None
+        # caller extras (the stream writer's batch_id) ride the commit
+        # entry INSIDE the atomic publish — a second stamp-publish would
+        # reopen the replay window a crash between the two leaves. An
+        # append states its base log, so on a 'cas'-disciplined table
+        # the publish folds in streaming micro-batches that landed
+        # since this writer's read (ADVICE r10 #1); an overwrite resets
+        # the log — no base statable, documented last-write-wins.
+        _publish_successor(
+            self.path,
+            prior,
+            data,
+            "overwrite" if self.overwrite else "append",
+            sorted(committed),
+            entry=commit_extra,
+            reset_history=self.overwrite,
+            publish=publish,
+        )
         if self.overwrite:
             # Commit point passed: the previous generation is now
             # unreferenced debris — sweep it through the metadata FS

@@ -618,15 +618,3 @@ class _MiniMemoryFsspec:
                 del self._store[k]
                 self._mtimes.pop(k, None)
             self._dirs.discard(key)
-
-
-def fsspec_local_fs():
-    """An FsspecFS over the best available local fsspec backend: the
-    real ``fsspec.filesystem("file")`` when the package is installed,
-    else the in-repo ``_MiniLocalFsspec`` contract double."""
-    try:
-        import fsspec  # gated: not in this container's baked set
-
-        return FsspecFS(fsspec.filesystem("file"))
-    except ImportError:
-        return FsspecFS(_MiniLocalFsspec())

@@ -102,14 +102,6 @@ def _has_masks(path: str) -> bool:
     return has_pending_masks(path)
 
 
-def _layout_keys(m: dict) -> list[str]:
-    idx = m.get("indexes", {}) or {}
-    keys: list[str] = []
-    for k in ("partition", "hash"):
-        keys.extend((idx.get(k) or {}).get("keys") or [])
-    return keys
-
-
 def _refuse_masked(path: str) -> None:
     if _has_masks(path):
         raise ValueError(

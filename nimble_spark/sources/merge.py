@@ -21,21 +21,21 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nimble_spark.sources.fs import get_fs
 from nimble_spark.sources.table import (
     BUCKET_COL,
-    MANIFEST_DIR,
     STATS_GEN,
     WriteOptions,
+    _bare_path,
     _build_manifest,
-    _next_commit,
     _plan_parquet,
     _project_logical,
-    _write_manifest,
+    _publish_successor,
+    _unreferenced_parquet_rels,
     logical_field_names,
     read_manifest,
     read_table,
@@ -306,7 +306,7 @@ def merge_into(
     else:
         new_rows = source.select(*cols)
 
-    return _commit_rewrite(spark, path, manifest, schema, affected, new_rows, "merge", opts)
+    return _commit_rewrite(spark, path, manifest, affected, new_rows, "merge", opts)
 
 
 def _logical_schema(manifest: dict):
@@ -358,10 +358,9 @@ def _affected_files(
         entry_of[real] = os.path.normpath(e["path"])
     out = []
     for r in rows:
-        p = r["_f"]
-        if p.startswith("file:"):
-            p = p[len("file:"):]
-        real = os.path.realpath(p)
+        # input_file_name() is a URL-encoded URI: a space or '%' in the
+        # table's directory name must decode before the match
+        real = os.path.realpath("/" + unquote(_bare_path(r["_f"])))
         out.append(entry_of.get(real, os.path.relpath(real, root)))
     return out
 
@@ -370,16 +369,16 @@ def _commit_rewrite(
     spark: SparkSession,
     path: str,
     manifest: dict,
-    schema,
     affected: list[str],
     new_rows: DataFrame,
     mode: str,
     opts: WriteOptions | None,
 ) -> dict:
     """Copy-on-write commit: stage ``new_rows``, move the staged files
-    in, drop the replaced ``affected`` files, rebuild the manifest
-    incrementally (untouched entries reused verbatim) and append a
-    ``mode`` commit-log entry recording additions and removals.
+    in, rebuild the manifest incrementally (untouched entries reused
+    verbatim) and publish it through the shared successor rule, which
+    logs a ``mode`` commit recording additions and removals and then
+    tombstones the replaced ``affected`` files.
 
     Directory-shaped layouts are reproduced: the staged write uses
     the table's own partitionBy columns (Hive partition keys and/or
@@ -388,18 +387,14 @@ def _commit_rewrite(
     across the rewrite."""
     import pyspark.sql.types as T
 
+    opts = opts or WriteOptions()
     pidx = manifest.get("indexes", {})
-    if manifest.get("schema_mapping"):
-        # rewritten rows arrive under LOGICAL names; files store
-        # PHYSICAL names, and the manifest schema (the stats/describe
-        # authority) is physical too
-        new_rows = _to_physical(new_rows, manifest)
-        schema = T.StructType.fromJson(manifest["schema"])
-    new_rows, layout_cols = _layout_rewrite(manifest, new_rows)
+    # rewritten rows arrive under LOGICAL names; files store PHYSICAL
+    # names (alter.py), and so does the manifest schema — the stats/
+    # describe authority
+    new_rows, layout_cols = _layout_rewrite(manifest, _to_physical(new_rows, manifest))
     staging = f"{path}-{mode}-{uuid.uuid4().hex[:8]}"
-    writer = new_rows.write.mode("overwrite").option(
-        "compression", (opts or WriteOptions()).compression
-    )
+    writer = new_rows.write.mode("overwrite").option("compression", opts.compression)
     if layout_cols:
         writer = writer.partitionBy(*layout_cols)
     writer.parquet(staging)
@@ -429,23 +424,12 @@ def _commit_rewrite(
         # current gen, so carrying poisoned entries would mislabel
         # the rewritten table as repaired
         reuse = {}
-    index_meta = {
-        k: pidx[k]
-        for k in ("cluster", "zorder", "bloom", "sorted", "sorted_fence", "partition", "hash")
-        if k in pidx
-    }
-    prior_commits = list(manifest.get("commits", []))
-    prior_rows = sum(c.get("rows_added", 0) for c in prior_commits)
     # Replaced files are still at their recorded paths here — the new
     # manifest is built around them via ``exclude`` so it can be
     # PUBLISHED FIRST. Order matters for crash safety: staged files
     # are invisible to old-manifest readers, so publishing the new
     # manifest while the replaced files still exist means neither the
-    # old nor the new manifest ever references a missing path. Only
-    # after the atomic publish do the replaced files move to trash
-    # (retained for snapshot/CDC reads until vacuum_table) — a crash
-    # in between leaves them as harmless unreferenced debris that
-    # snapshot reads still resolve at their original paths.
+    # old nor the new manifest ever references a missing path.
     # Crash-retry fence (r8 fault-injection sweep): any parquet on
     # disk that is neither in the prior manifest nor among THIS
     # rewrite's moved-in files is debris of a rewrite that died
@@ -453,79 +437,22 @@ def _commit_rewrite(
     # would resurrect the dead attempt's rows as duplicates when the
     # caller retries. This op knows its exact output (``moved``), so
     # the discriminator is precise. Debris stays for vacuum.
-    from nimble_spark.sources.table import _unreferenced_parquet_rels
-
     prior_paths = {os.path.normpath(e["path"]) for e in manifest["files"]}
     debris = _unreferenced_parquet_rels(path, prior_paths | set(moved))
-    new_manifest = _build_manifest(
-        spark,
-        schema,
+    data = _build_manifest(
         path,
-        opts or WriteOptions(),
-        index_meta,
+        T.StructType.fromJson(manifest["schema"]),
+        bool(pidx.get("hash") or pidx.get("partition")),
+        manifest,
         reuse=reuse,
         exclude={os.path.normpath(f) for f in affected} | debris,
-        ndv_cols=manifest.get("ndv_columns"),
-        sum_cols=manifest.get("sum_columns"),
-        hist_cols=manifest.get("histogram_columns"),
     )
-    # Table-level contracts survive a rewrite: CHECK constraints keep
-    # gating appends, and snapshot tags keep resolving (their commits
-    # stay replayable until vacuum reclaims the trash).
-    for k in ("constraints", "tags", "schema_mapping", "ndv_columns",
-              "sum_columns", "histogram_columns", "properties"):
-        if manifest.get(k):
-            new_manifest[k] = manifest[k]
-    from nimble_spark.sources.deletes import carry_consumed_masks
-
-    _cm = carry_consumed_masks(path, manifest)
-    if _cm:  # dead-mask fence survives until its dirs are reclaimed
-        new_manifest["consumed_masks"] = _cm
-    new_manifest["commits"] = prior_commits + [
-        {
-            "commit": _next_commit(prior_commits),
-            "mode": mode,
-            "files_added": len(moved),
-            "files_removed": len(affected),
-            "removed": sorted(affected),
-            "rows_added": new_manifest["rows"] - prior_rows,
-            "files": sorted(moved),
-        }
-    ]
-    os.makedirs(os.path.join(path, MANIFEST_DIR), exist_ok=True)
+    data.update(user_metadata=opts.user_metadata, column_attributes=opts.column_attributes)
     # base = the log this merge derived from: a streaming micro-batch
-    # CAS-landing mid-merge is folded in, not erased (ADVICE r10 #1)
-    _write_manifest(path, new_manifest, base_commits=prior_commits)
-    # Commit point passed — only now tombstone the replaced files into
-    # the retention trash (kept for read_table(as_of_commit=N) and CDC
-    # replays until vacuum_table reclaims them; directory-based
-    # current-state scans never see the `_nimble` metadata dir). A
-    # crash before this loop completes leaves the stragglers as
-    # unreferenced debris at their ORIGINAL paths, where snapshot
-    # reads still resolve them — the live manifest never references a
-    # trashed path.
-    fs = get_fs()
-    # named by the rewrite's COMMIT NUMBER (post-expiry the log
-    # position diverges and could reuse a pre-expiry dir name)
-    trash = os.path.join(
-        path, MANIFEST_DIR, "trash", f"commit-{_next_commit(prior_commits)}"
-    )
-    fs.makedirs(trash)
-    for f in affected:
-        if os.path.isabs(f):
-            # Shallow-clone foreign entry: the SOURCE table owns the
-            # bytes — never move them. Dropping the manifest entry is
-            # the whole replacement; historical reads resolve the
-            # absolute path directly.
-            continue
-        # preserve the RELATIVE path inside the trash dir —
-        # resolve_historical_file globs trash/commit-*/<rel>, so a
-        # partitioned/bucketed file (subdirs in rel) must keep its
-        # directory shape to stay replayable
-        dst = os.path.join(trash, f)
-        fs.makedirs(os.path.dirname(dst))
-        fs.move(os.path.join(path, f), dst)
-    return new_manifest
+    # CAS-landing mid-merge is folded in, not erased (ADVICE r10 #1);
+    # the replaced files stay in the retention trash for
+    # read_table(as_of_commit=N) and CDC replays until vacuum_table
+    return _publish_successor(path, manifest, data, mode, moved, replaced=affected)
 
 
 def update_where(
@@ -573,9 +500,7 @@ def update_where(
     updated = aff_df.withColumns(
         {c: F.when(cond, F.expr(e)).otherwise(F.col(c)) for c, e in set_exprs.items()}
     )
-    return _commit_rewrite(
-        spark, path, manifest, _logical_schema(manifest), affected, updated, "update", opts
-    )
+    return _commit_rewrite(spark, path, manifest, affected, updated, "update", opts)
 
 
 def overwrite_partitions(
@@ -653,17 +578,8 @@ def overwrite_partitions(
     # dynamic partitionOverwriteMode, which deletes the replaced
     # partition BEFORE the manifest publish — the r8 fault-injection
     # sweep caught the torn window: PATH_NOT_FOUND on the live read.)
-    import pyspark.sql.types as T
-
     return _commit_rewrite(
-        spark,
-        path,
-        manifest,
-        T.StructType.fromJson(manifest["schema"]),
-        affected,
-        df,
-        mode="overwrite_partitions",
-        opts=opts,
+        spark, path, manifest, affected, df, mode="overwrite_partitions", opts=opts
     )
 
 

@@ -30,8 +30,6 @@ import hashlib
 import json
 import os
 import re
-import shutil
-import threading
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -216,21 +214,6 @@ def _find_duplicate_columns(df: DataFrame, protected: set) -> dict[str, str]:
     return aliases
 
 
-def _stats_exprs(schema: T.StructType) -> list:
-    exprs = [F.count(F.lit(1)).alias("__rows")]
-    for f in schema.fields:
-        c = f.name
-        if c == BUCKET_COL:
-            continue
-        exprs.append(F.count(c).alias(f"{c}::count"))
-        if isinstance(f.dataType, (T.NumericType, T.StringType, T.TimestampType, T.DateType)):
-            exprs.append(F.min(c).alias(f"{c}::min"))
-            exprs.append(F.max(c).alias(f"{c}::max"))
-        if isinstance(f.dataType, T.StringType):
-            exprs.append(F.sum(F.length(c)).alias(f"{c}::bytes"))
-    return exprs
-
-
 def _json_safe(v: Any) -> Any:
     if v is None or isinstance(v, (int, float, str, bool)):
         return v
@@ -242,7 +225,7 @@ def write_table(
     path: str,
     opts: WriteOptions | None = None,
     mode: str = "overwrite",
-    _caller_holds_lock: bool = False,
+    _rewrite_of: Optional[dict] = None,
     _constraints_prevalidated: bool = False,
 ) -> dict:
     """Write a DataFrame as a nimble_spark table and return the manifest.
@@ -275,11 +258,6 @@ def write_table(
         except (OSError, KeyError, ValueError):
             _exists = False
         if _exists:
-            if _caller_holds_lock:
-                return staged_swap_rewrite(
-                    df.sparkSession, path, df, opts,
-                    constraints_prevalidated=_constraints_prevalidated,
-                )
             with table_write_lock(path):
                 return staged_swap_rewrite(
                     df.sparkSession, path, df, opts,
@@ -451,13 +429,12 @@ def write_table(
     # manifest publication): without the lock, two concurrent appends
     # could both read commit log v0 and the last manifest rename wins,
     # silently dropping the other writer's files from the log.
-    # ``_caller_holds_lock`` is the internal entry point for callers
-    # whose critical section is WIDER than the write itself
-    # (materialize_columns holds the lock across its read→rewrite span
-    # so a concurrent append cannot commit between the source read and
-    # the overwrite publish); the lock is non-reentrant so they must
-    # not re-acquire here.
-    if _caller_holds_lock:
+    # ``_rewrite_of`` is the internal entry point of a staged full
+    # rewrite (staged_swap_rewrite): ``path`` is its fresh staging dir,
+    # ``_rewrite_of`` the live root it replaces, whose lock the caller
+    # holds across the whole read→rewrite→swap span (the lock is
+    # non-reentrant and lives outside the table dir).
+    def _locked() -> dict:
         return _write_table_locked(
             df, path, opts, mode, writer, index_meta,
             stored_schema=out.schema if (column_aliases or schema_mapping) else None,
@@ -465,20 +442,13 @@ def write_table(
             logical_columns=[f.name for f in df.schema.fields] if column_aliases else None,
             constraints_prevalidated=_constraints_prevalidated,
             schema_mapping=schema_mapping,
+            rewrite_of=_rewrite_of,
         )
-    _lock = table_write_lock(path)
-    _lock.__enter__()
-    try:
-        return _write_table_locked(
-            df, path, opts, mode, writer, index_meta,
-            stored_schema=out.schema if (column_aliases or schema_mapping) else None,
-            aliases=column_aliases,
-            logical_columns=[f.name for f in df.schema.fields] if column_aliases else None,
-            constraints_prevalidated=_constraints_prevalidated,
-            schema_mapping=schema_mapping,
-        )
-    finally:
-        _lock.__exit__()
+
+    if _rewrite_of is not None:
+        return _locked()
+    with table_write_lock(path):
+        return _locked()
 
 
 def _merge_append_schema(prior_fields: list, inc_fields: list) -> list:
@@ -522,18 +492,16 @@ def _write_table_locked(
     logical_columns: Optional[list] = None,
     constraints_prevalidated: bool = False,
     schema_mapping: Optional[dict] = None,
+    rewrite_of: Optional[dict] = None,
 ) -> dict:
-    spark = df.sparkSession
     # Incremental append: entries of files already committed are
     # reused verbatim (no re-hash / footer re-read) — append cost is
     # O(new files). Old-format entries without per-file null counts
-    # are reprocessed.
+    # are reprocessed. A staged full rewrite derives from the live
+    # root it replaces (``rewrite_of``).
     reuse: dict[str, dict] = {}
-    prior: Optional[dict] = None
-    prior_commits: list[dict] = []
-    prior_constraints: dict[str, str] = {}
-    prior_tags: dict[str, int] = {}
-    prior_properties: dict[str, str] = {}
+    prior: Optional[dict] = rewrite_of
+    schema = json.loads((stored_schema or df.schema).json())
     if mode == "append":
         try:
             prior = read_manifest(path)
@@ -562,12 +530,16 @@ def _write_table_locked(
             # evolution. The merged declared schema takes the WIDER
             # side per column (incoming wider = classic widening
             # evolution; incoming narrower-but-safe = old declared
-            # type stands).
-            _inc_schema = stored_schema or df.schema
-            _merged_fields = _merge_append_schema(
-                prior.get("schema", {}).get("fields", []),
-                json.loads(_inc_schema.json())["fields"],
-            )
+            # type stands); prior field order wins (the read order
+            # contract), and fields only the prior knows (alter_table
+            # add, or a narrow append) survive.
+            if prior.get("schema"):
+                schema = dict(
+                    schema,
+                    fields=_merge_append_schema(
+                        prior["schema"].get("fields", []), schema["fields"]
+                    ),
+                )
             if (prior.get("schema_mapping") or {}) != (schema_mapping or {}):
                 # same race as the alias contract: an alter/overwrite
                 # landing between the pre-lock mapping read and this
@@ -588,13 +560,6 @@ def _write_table_locked(
                 # through the fixed path, permanently repairing the
                 # manifest (one-time footer-read cost).
                 reuse = {}
-            prior_commits = list(prior.get("commits", []))
-            prior_constraints = dict(prior.get("constraints", {}))
-            prior_tags = dict(prior.get("tags", {}))
-            prior_properties = dict(prior.get("properties", {}))
-            pidx = prior.get("indexes", {})
-        else:
-            pidx = {}
         # Index metadata must survive appends. Directory-shaped
         # indexes (hash buckets, Hive partitions, cut files) are
         # layout contracts — an append that doesn't reproduce them
@@ -604,21 +569,23 @@ def _write_table_locked(
         # carry forward: pruning on them stays correct on mixed
         # layouts (per-file min/max; bloom-less files always kept;
         # the fence detects sorted-index staleness).
+        pidx = (prior or {}).get("indexes", {})
         for k in ("hash", "partition", "cut"):
             if k in pidx and index_meta.get(k) != pidx[k]:
                 raise ValueError(
                     f"append must reproduce the table's {k} layout {pidx[k]}, "
                     f"got {index_meta.get(k)}"
                 )
-        for k in ("cluster", "zorder", "bloom", "sorted", "sorted_fence"):
-            if k in pidx and k not in index_meta:
-                index_meta[k] = pidx[k]
+        index_meta = {**pidx, **index_meta}
+    append_prior = prior if mode == "append" and prior is not None else {}
 
     # CHECK constraints: table-declared (appends inherit) + this
     # write's. Validated against the INCOMING rows before any file
     # lands; a violation aborts with nothing committed. limit(1)
     # short-circuits the scan at the first violating row.
-    constraints = {**prior_constraints, **(opts.check_constraints or {})}
+    constraints = {
+        **(append_prior.get("constraints") or {}), **(opts.check_constraints or {})
+    }
     # Staged full rewrites (staged_swap_rewrite) re-write rows that
     # already passed these constraints at their original commit; the
     # constraints persist in the manifest but skip the per-constraint
@@ -646,7 +613,8 @@ def _write_table_locked(
     try:
         prior_paths = {
             os.path.normpath(f["path"])
-            for f in (prior["files"] if prior is not None else read_manifest(path)["files"])
+            for f in (prior["files"] if mode == "append" and prior is not None
+                      else read_manifest(path)["files"])
         }
     except (OSError, KeyError, ValueError):
         prior_paths = set()
@@ -688,15 +656,10 @@ def _write_table_locked(
     # NDV synopses: this write's declaration, else the table's standing
     # one (appends keep every entry's synopsis current automatically —
     # new files compute theirs, reused entries carry theirs verbatim)
-    _ndv_cols = opts.ndv_columns or (
-        (prior or {}).get("ndv_columns") if mode == "append" else None
-    )
-    _sum_cols = opts.sum_columns or (
-        (prior or {}).get("sum_columns") if mode == "append" else None
-    )
-    _hist_cols = opts.histogram_columns or (
-        (prior or {}).get("histogram_columns") if mode == "append" else None
-    )
+    declared = {
+        k: getattr(opts, k) or append_prior.get(k)
+        for k in ("ndv_columns", "sum_columns", "histogram_columns")
+    }
     # Declared synopsis columns must be computable from FILE BYTES and
     # are stored under their PHYSICAL (stored) names (r8 probe: a
     # declaration on a partition key silently recorded empty synopses
@@ -709,20 +672,16 @@ def _write_table_locked(
     # carries the LOGICAL name in its frame while the carried
     # declaration holds the PHYSICAL one (r8 soak: a rename-then-append
     # sequence falsely refused 'not a stored column' without the union)
-    _stored_names = set((stored_schema or df.schema).names) | {
-        f["name"] for f in ((prior or {}).get("schema", {}) or {}).get("fields", [])
-    }
+    _stored_names = {f["name"] for f in schema["fields"]}
     _alias_map = dict(aliases or {})
     # alter-renamed tables: current logical name → stored physical name
-    _renames = (schema_mapping or (prior or {}).get("schema_mapping") or {}).get(
-        "renames"
-    ) or {}
+    _renames = (schema_mapping or {}).get("renames") or {}
     for _p, _l in _renames.items():
         _alias_map.setdefault(_l, _p)
 
     def _norm_synopsis(cols, kind):
         if not cols:
-            return cols
+            return None
         out = []
         for c in cols:
             p = _alias_map.get(c, c)  # dedup alias / rename → stored name
@@ -742,126 +701,57 @@ def _write_table_locked(
                 out.append(p)
         return out
 
-    _ndv_cols = _norm_synopsis(_ndv_cols, "ndv_columns")
-    _sum_cols = _norm_synopsis(_sum_cols, "sum_columns")
-    _hist_cols = _norm_synopsis(_hist_cols, "histogram_columns")
-    manifest = _build_manifest(
-        spark, stored_schema or df.schema, path, opts, index_meta,
-        reuse=reuse, exclude=stray, ndv_cols=_ndv_cols, sum_cols=_sum_cols,
-        hist_cols=_hist_cols,
+    declared = {k: _norm_synopsis(cols, k) for k, cols in declared.items()}
+    data = _build_manifest(
+        path, stored_schema or df.schema,
+        bool(index_meta.get("hash") or index_meta.get("partition")),
+        declared, reuse=reuse, exclude=stray,
     )
-    if mode == "append":
-        # Every prior committed LOCAL file must survive into the new
-        # manifest — a vanished one (deleted outside the engine) would
-        # silently publish a shrunken table, rows lost without an
-        # error (r8 probe). Foreign (shallow-clone, absolute-path)
-        # entries live outside this directory scan and are checked by
-        # the clone machinery instead.
-        _now = {os.path.normpath(f["path"]) for f in manifest["files"]}
-        _lost = {p for p in prior_paths if not os.path.isabs(p)} - _now
-        if _lost:
-            raise RuntimeError(
-                f"append found {len(_lost)} prior committed file(s) "
-                f"missing on disk (deleted outside the engine?); "
-                f"refusing to publish a shrunken table: "
-                f"{sorted(_lost)[:3]}…"
-            )
     stats_wall_ms = int((time.monotonic() - t1) * 1000)
-    if aliases:
-        # Duplicate-column dedup contract: the stored (physical) schema
-        # above omits the duplicates; the alias map + logical column
-        # order let read_table restore the logical schema exactly.
-        manifest["column_aliases"] = aliases
-        if mode == "append" and prior is not None and prior.get("logical_columns"):
-            # The table's logical read order is a TABLE property, not a
-            # batch property: an append whose frame has reordered
-            # columns must not change what every reader sees — carry
-            # the prior order forward.
-            manifest["logical_columns"] = prior["logical_columns"]
-        elif logical_columns:
-            manifest["logical_columns"] = logical_columns
     # Writer runtime stats — the VeloxWriter::RunStats analogue
     # (dwio/nimble/velox/VeloxWriter.h:78-115: flush/encode CPU+wall,
     # stripe size distribution). Spark's encode CPU lives inside the
     # JVM write tasks; the surfaced shape is wall per phase + the
     # file/row-group size distribution from the written footers.
-    if constraints:
-        manifest["constraints"] = constraints
-    if prior_tags:
-        manifest["tags"] = prior_tags  # snapshot tags survive appends
-    if prior_properties:
-        manifest["properties"] = prior_properties  # TBLPROPERTIES ride along
-    if mode == "append" and prior is not None:
-        # consumed-mask fence carries while its batch dirs linger
-        # (rewrite crashed before cleanup); dropping it would let the
-        # dead masks swallow this append's rows
-        from nimble_spark.sources.deletes import carry_consumed_masks
-
-        _cm = carry_consumed_masks(path, prior)
-        if _cm:
-            manifest["consumed_masks"] = _cm
-    if mode == "append" and prior is not None and prior.get("schema"):
-        # Schema is a TABLE property: prior field order wins (the read
-        # order contract), shared fields take the WIDER validated type
-        # (widening evolution), and fields only the prior knows
-        # (alter_table add, or a narrow append) survive instead of
-        # silently vanishing from the declared schema. Computed (and
-        # type-validated) before the write landed.
-        manifest["schema"]["fields"] = _merged_fields
-    if schema_mapping:
-        manifest["schema_mapping"] = schema_mapping
-    if prior is not None and prior.get("user_metadata"):
-        # user metadata is a TABLE property (clone provenance, policy
-        # labels): appends carry it forward, the incoming write's own
-        # entries winning on key conflicts — mirroring how constraints
-        # and tags survive appends. Overwrites still reset it.
-        manifest["user_metadata"] = {
-            **prior["user_metadata"],
-            **(opts.user_metadata or {}),
-        }
-    manifest["write_stats"] = dict(
-        _layout_stats(manifest["files"]),
-        write_wall_ms=write_wall_ms,
-        manifest_wall_ms=stats_wall_ms,
+    data.update(
+        schema=schema,
+        indexes=index_meta,
+        user_metadata=opts.user_metadata,
+        column_attributes=opts.column_attributes,
+        write_stats={"write_wall_ms": write_wall_ms, "manifest_wall_ms": stats_wall_ms},
+        **{k: cols for k, cols in declared.items() if cols},
     )
+    if constraints:
+        data["constraints"] = constraints
+    if aliases and mode != "append":
+        # Duplicate-column dedup contract: the stored (physical) schema
+        # omits the duplicates; the alias map + logical column order
+        # let read_table restore the logical schema exactly (an append
+        # keeps the table's: its frame's column order is a batch
+        # property, not a table one).
+        data["column_aliases"] = aliases
+        data["logical_columns"] = logical_columns
     # Commit log — append-only provenance (SHOW HISTORY): one entry
     # per write with what it added; an overwrite starts a new log.
     # Each entry lists its file additions, which makes the log a
     # snapshot index: "files as of commit N" = union of entries ≤ N
-    # (time travel, read_table(as_of_commit=N)).
-    prior_rows = sum(c.get("rows_added", 0) for c in prior_commits)
-    new_files = sorted(
-        os.path.normpath(f["path"])
-        for f in manifest["files"]
-        if os.path.normpath(f["path"]) not in reuse
-    )
-    manifest["commits"] = prior_commits + [
-        {
-            # caller commit_metadata first: the entry's own keys win,
-            # so reserved fields cannot be overridden
-            **{
-                k: v
-                for k, v in (opts.commit_metadata or {}).items()
-                if k not in ("commit", "mode", "files_added", "rows_added", "files")
-            },
-            "commit": _next_commit(prior_commits),
-            "mode": mode,
-            "files_added": len(new_files),
-            "rows_added": manifest["rows"] - prior_rows,
-            "write_wall_ms": write_wall_ms,
-            "files": new_files,
-        }
-    ]
-    os.makedirs(os.path.join(path, MANIFEST_DIR), exist_ok=True)
-    # append states its base log so concurrent lock-free streaming
-    # commits are merged, not erased; overwrite resets the log (no
-    # base statable — documented last-write-wins on the whole table)
-    _write_manifest(
+    # (time travel, read_table(as_of_commit=N)). An append states its
+    # base log so concurrent lock-free streaming commits are merged,
+    # not erased; an overwrite resets the log (no base statable —
+    # documented last-write-wins on the whole table).
+    return _publish_successor(
         path,
-        manifest,
-        base_commits=(prior_commits if mode == "append" else None),
+        prior,
+        data,
+        mode,
+        [
+            os.path.normpath(f["path"])
+            for f in data["files"]
+            if os.path.normpath(f["path"]) not in reuse
+        ],
+        entry={**(opts.commit_metadata or {}), "write_wall_ms": write_wall_ms},
+        reset_history=mode != "append",
     )
-    return manifest
 
 
 def _layout_stats(files: list[dict]) -> dict:
@@ -1000,17 +890,17 @@ def _synopses_of_file(
     return ndv_out, sum_out, hist_out
 
 
-def _kmv_of_file(frag_path: str, cols: list[str], k: int = NDV_K) -> dict:
-    """KMV-only convenience over :func:`_synopses_of_file`."""
-    return _synopses_of_file(frag_path, cols, None, k=k)[0]
-
-
-def _describe_parquet_file(frag_path: str, table_root: str, stat_cols: list[str]) -> dict:
+def _describe_parquet_file(
+    frag_path: str, table_root: str, stat_cols: list[str], declared: Optional[dict] = None
+) -> dict:
     """Describe one written parquet file as a manifest entry: footer
-    stats, per-row-group sizes, and the file-integrity sha256 (the
-    postscript-checksum analogue, dwio/nimble/tablet/Postscript.h:27-30).
-    Module-level so compaction can describe merged files without a
-    directory scan (publish-first protocol)."""
+    stats, per-row-group sizes, the file-integrity sha256 (the
+    postscript-checksum analogue, dwio/nimble/tablet/Postscript.h:27-30)
+    and the NDV/SUM/HIST synopses of the columns ``declared`` (a
+    manifest root, or any dict with its ``ndv_columns``/``sum_columns``/
+    ``histogram_columns`` keys) names. The one describe every commit
+    path uses: the manifest build, compaction's merged files,
+    recluster output and rollback's re-homed files."""
     md = pa_pq.ParquetFile(frag_path).metadata
     # File integrity checksum — the postscript-checksum analogue
     # (dwio/nimble/tablet/Postscript.h:27-30, ChecksumTest.cpp).
@@ -1070,7 +960,7 @@ def _describe_parquet_file(frag_path: str, table_root: str, stat_cols: list[str]
                 fmaxs[name] = st_max
     for name in nulls_incomplete:
         nulls.pop(name, None)
-    return {
+    entry = {
         # root-relative: the table stays readable after a
         # rename/move (atomic cache publication, distcp, …)
         # Foreign (shallow-clone) files live OUTSIDE the table root:
@@ -1095,6 +985,15 @@ def _describe_parquet_file(frag_path: str, table_root: str, stat_cols: list[str]
         "rg_bytes": rg_bytes,
         "rg_rows": rg_rows,
     }
+    nc, sc, hc = (
+        (declared or {}).get(k) for k in ("ndv_columns", "sum_columns", "histogram_columns")
+    )
+    if nc or sc or hc:
+        ndv, sums, hist = _synopses_of_file(frag_path, nc, sc, hc)
+        for key, cols, val in (("ndv", nc, ndv), ("sums", sc, sums), ("hist", hc, hist)):
+            if cols:
+                entry[key] = val
+    return entry
 
 
 
@@ -1122,21 +1021,19 @@ def _unreferenced_parquet_rels(path: str, referenced: set[str]) -> set[str]:
 
 
 def _build_manifest(
-    spark: SparkSession,
-    schema: T.StructType,
     path: str,
-    opts: WriteOptions,
-    index_meta: dict,
+    schema: T.StructType,
+    hive: bool,
+    declared: Optional[dict],
     reuse: dict[str, dict] | None = None,
     exclude: set[str] | None = None,
-    ndv_cols: Optional[list[str]] = None,
-    sum_cols: Optional[list[str]] = None,
-    hist_cols: Optional[list[str]] = None,
 ) -> dict:
-    """Collect per-file (stripe-group) and per-column stats from the
-    written parquet footers — metadata-only reads, no data scan
-    (except the opt-in ``ndv_cols`` KMV synopses, which read just the
-    declared columns of the NEW files).
+    """The file list of a directory-scanned commit, as the data keys of
+    its successor manifest (``files`` and ``stats_gen``): per-file
+    (stripe-group) stats from the written parquet footers — metadata-
+    only reads, no data scan (except the synopses ``declared`` names,
+    which read just those columns of the NEW files). ``hive`` discovers
+    Hive/bucket directories.
 
     ``reuse`` (relpath → prior manifest file entry) makes the build
     INCREMENTAL: files already described by a prior commit keep their
@@ -1155,7 +1052,6 @@ def _build_manifest(
     """
     reuse = reuse or {}
     exclude = exclude or set()
-    hive = index_meta.get("hash") or index_meta.get("partition")
     # Explicit ignore list instead of pyarrow's default ['.', '_']:
     # the default silently ignores EVERY '__nimble_bucket=N' partition
     # directory (it starts with '_'), which left bucketed-table
@@ -1168,22 +1064,7 @@ def _build_manifest(
         ignore_prefixes=[".", "_SUCCESS", "_nimble", "_temporary", "_started", "_committed"],
     )
     files_info: list[dict] = []
-    total_rows = 0
     stat_cols = _stat_cols(schema)
-
-    def _describe_file(frag_path: str) -> dict:
-        entry = _describe_parquet_file(frag_path, path, stat_cols)
-        if ndv_cols or sum_cols or hist_cols:
-            ndv, sums, hist = _synopses_of_file(
-                frag_path, ndv_cols, sum_cols, hist_cols
-            )
-            if ndv_cols:
-                entry["ndv"] = ndv
-            if sum_cols:
-                entry["sums"] = sums
-            if hist_cols:
-                entry["hist"] = hist
-        return entry
 
     # Hashing + footer reads release the GIL — describe new files in
     # parallel, then assemble in dataset order so the manifest's file
@@ -1199,7 +1080,15 @@ def _build_manifest(
         p for p in live_files if os.path.normpath(os.path.relpath(p, path)) not in reuse
     ]
     with ThreadPoolExecutor(max_workers=8) as pool:
-        described = dict(zip(new_paths, pool.map(_describe_file, new_paths)))
+        described = dict(
+            zip(
+                new_paths,
+                pool.map(
+                    lambda p: _describe_parquet_file(p, path, stat_cols, declared),
+                    new_paths,
+                ),
+            )
+        )
     # Assembly order: reused entries keep their PRIOR-MANIFEST order
     # (the reuse dict preserves it), fresh files append after in
     # dataset order. Prior-manifest order — not directory/alphabetical
@@ -1224,38 +1113,14 @@ def _build_manifest(
                     f"clone before mutating the source, or re-clone)"
                 )
             files_info.append(entry)
-            total_rows += entry["rows"]
         elif rel in live_rels:
             files_info.append(entry)
-            total_rows += entry["rows"]
     for frag_path in live_files:
-        rel = os.path.normpath(os.path.relpath(frag_path, path))
-        if rel in reuse:
-            continue
-        entry = described[frag_path]
-        files_info.append(entry)
-        total_rows += entry["rows"]
-
-    out = {
-        "format_version": 1,
-        # every entry here is current-describe output or gen-gated
-        # reuse (callers drop pre-STATS_GEN reuse), so stamp the gen
-        "stats_gen": STATS_GEN,
-        "schema": json.loads(schema.json()),
-        "column_attributes": opts.column_attributes,
-        "rows": total_rows,
-        "files": files_info,
-        "column_stats": _fold_column_stats(files_info),
-        "indexes": index_meta,
-        "user_metadata": opts.user_metadata,
-    }
-    if ndv_cols:
-        out["ndv_columns"] = list(ndv_cols)
-    if sum_cols:
-        out["sum_columns"] = list(sum_cols)
-    if hist_cols:
-        out["histogram_columns"] = list(hist_cols)
-    return out
+        if os.path.normpath(os.path.relpath(frag_path, path)) not in reuse:
+            files_info.append(described[frag_path])
+    # every entry here is current-describe output or gen-gated reuse
+    # (callers drop pre-STATS_GEN reuse), so stamp the gen
+    return {"stats_gen": STATS_GEN, "files": files_info}
 
 
 def _fold_column_stats(files_info: list[dict]) -> dict:
@@ -1285,6 +1150,142 @@ def _fold_column_stats(files_info: list[dict]) -> dict:
     return {
         k: {kk: _json_safe(vv) for kk, vv in v.items()} for k, v in col_stats.items()
     }
+
+
+def _publish_successor(
+    path: str,
+    prior: Optional[dict],
+    data: dict,
+    mode: str,
+    files: list[str],
+    replaced: Optional[list[str]] = None,
+    entry: Optional[dict] = None,
+    reset_history: bool = False,
+    publish=None,
+) -> dict:
+    """Build, publish and tombstone one data commit's successor
+    manifest — the single rule every commit path follows, as Nimble's
+    TabletWriter is the single writer of a file's footer
+    (tablet/Footer.fbs:26-85). Returns the published manifest.
+
+    - The successor is a copy of ``prior`` (the root this commit was
+      derived from; None for a first write), so every table-level key
+      carries without the caller naming it: user metadata, column
+      attributes, constraints, properties, tags, the schema mapping,
+      dedup aliases, indexes, synopsis declarations, the consumed-mask
+      fence. ``data`` replaces what the commit re-derived (``files``,
+      ``stats_gen``, a widened ``schema``, ...); a None value removes
+      the key, and ``user_metadata``/``column_attributes`` merge with
+      the commit's entries winning. ``rows``, ``column_stats`` and the
+      ``write_stats`` layout fold from ``files``.
+    - ``reset_history`` (overwrite, staged full rewrite): the commit
+      makes a new table, so its own write declared the layout and every
+      contract its files satisfy; the commit log restarts, tags drop,
+      and of ``prior`` only the descriptive keys survive.
+    - The commit-log entry is written here: the caller's ``entry`` keys
+      first, then the reserved ones — the next number, ``mode``, the
+      added ``files``, ``rows_added`` = rows − Σ prior ``rows_added``,
+      and ``removed`` when ``replaced`` is given.
+    - An incremental commit refuses to publish when a prior local file
+      is neither ``replaced`` nor in the new file list: it was deleted
+      outside the engine, and publishing would silently shrink the
+      table.
+    - Publishes with ``base_commits`` = the prior log (None on reset),
+      or through ``publish`` (the lock-free streaming commit). Only
+      after the publish do the replaced files move to
+      ``trash/commit-N/<rel>``, kept for time travel and CDC until
+      vacuum: a crash in between leaves them as unreferenced debris
+      that historical reads still resolve at their original paths.
+      Absolute (shallow-clone) entries belong to their source and stay.
+
+    ``prior`` is never mutated: read_manifest serves shared cached
+    dicts."""
+    prior = prior or {}
+    commits = [] if reset_history else list(prior.get("commits") or [])
+    if reset_history or not prior:
+        new = {"format_version": 1, "indexes": {}}
+        new.update(
+            (k, prior[k])
+            for k in ("properties", "user_metadata", "column_attributes")
+            if k in prior
+        )
+    else:
+        new = dict(prior)
+    for k, v in data.items():
+        if k in ("user_metadata", "column_attributes"):
+            v = {**new.get(k, {}), **v}
+        if v is None:
+            new.pop(k, None)
+        else:
+            new[k] = v
+    if "files" in data:
+        new.pop("file_pages", None)
+        lost = {
+            os.path.normpath(f["path"])
+            for f in ([] if reset_history else prior.get("files") or [])
+            if not os.path.isabs(f["path"])
+        } - {os.path.normpath(f["path"]) for f in new["files"]} - {
+            os.path.normpath(f) for f in replaced or []
+        }
+        if lost:
+            raise RuntimeError(
+                f"{mode} found {len(lost)} prior committed file(s) missing "
+                f"on disk (deleted outside the engine?); refusing to "
+                f"publish a shrunken table: {sorted(lost)[:3]}…"
+            )
+        new["rows"] = sum(f["rows"] for f in new["files"])
+        new["column_stats"] = _fold_column_stats(new["files"])
+        new["write_stats"] = dict(
+            new.get("write_stats") or {}, **_layout_stats(new["files"])
+        )
+    if new.get("consumed_masks") and "consumed_masks" not in data:
+        # the dead-mask fence carries while its batch dirs linger (a
+        # rewrite crashed before cleanup); dropping it would let the
+        # dead masks swallow later rows. Reclaimed entries self-prune.
+        from nimble_spark.sources.deletes import carry_consumed_masks
+
+        new["consumed_masks"] = carry_consumed_masks(path, new)
+        if new["consumed_masks"] is None:
+            del new["consumed_masks"]
+    log = {
+        **(entry or {}),
+        "commit": _next_commit(commits),
+        "mode": mode,
+        "files_added": len(files),
+        "rows_added": new["rows"] - sum(c.get("rows_added", 0) for c in commits),
+        "files": sorted(files),
+    }
+    if replaced is not None:
+        log["files_removed"] = len(replaced)
+        log["removed"] = sorted(replaced)
+    new["commits"] = commits + [log]
+    os.makedirs(os.path.join(path, MANIFEST_DIR), exist_ok=True)
+    if publish is None:
+        _write_manifest(path, new, base_commits=None if reset_history else commits)
+    else:
+        publish(new)
+    fs = get_fs()
+    # named by the COMMIT NUMBER, not the log position: after
+    # expire_snapshots the two diverge, and a position-named dir could
+    # reuse a pre-expiry commit's trash name
+    trash = os.path.join(path, MANIFEST_DIR, "trash", f"commit-{log['commit']}")
+    for rel in replaced or []:
+        if os.path.isabs(rel):
+            continue
+        src = os.path.join(path, rel)
+        # the relative path is kept inside the trash dir:
+        # resolve_historical_file globs trash/commit-*/<rel>, so a
+        # partitioned/bucketed file must keep its directory shape
+        dst = os.path.join(trash, os.path.normpath(rel))
+        fs.makedirs(os.path.dirname(dst))
+        try:
+            fs.move(src, dst)
+        except OSError:
+            pass  # already gone — harmless
+        crc = os.path.join(os.path.dirname(src), f".{os.path.basename(src)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    return new
 
 
 # Manifest cache keyed by (path → (mtime_ns, size)) — the
@@ -2241,15 +2242,16 @@ def _project_logical(
     the table lacks reads as a typed null (add-column evolution, the
     NullColumnReader analogue, selective/ColumnReader.cpp:57-62) of its
     ``evolved_types`` type, else string. ``evolved_types`` (name → Spark
-    type string) may also declare a wider type than the table's: only
-    lossless widenings cast (the reference's UPCAST reads); narrowing
-    raises instead of silently truncating.
+    type string) may also declare a wider type than the table's, on a
+    full read as on a projection: only lossless widenings cast (the
+    reference's UPCAST reads); narrowing raises instead of silently
+    truncating.
 
-    A full read of a table without aliases whose scan already holds
-    its columns in logical order (partition keys last) projects no
-    column by column: dropped and bucket columns are dropped and
-    renames applied by name, and a plain table returns ``df`` itself,
-    with no plan node."""
+    A full read without declared types of a table without aliases
+    whose scan already holds its columns in logical order (partition
+    keys last) projects no column by column: dropped and bucket
+    columns are dropped and renames applied by name, and a plain
+    table returns ``df`` itself, with no plan node."""
     mapping = manifest.get("schema_mapping") or {}
     dropped = mapping.get("dropped") or []
     renames = mapping.get("renames") or {}
@@ -2258,14 +2260,18 @@ def _project_logical(
     if not columns:
         idx = manifest.get("indexes", {})
         pkeys = (idx.get("partition") or {}).get("keys") or []
-        if not aliases and [c for c in logical if c not in pkeys] + pkeys == logical:
+        if (
+            not aliases
+            and not evolved_types
+            and [c for c in logical if c not in pkeys] + pkeys == logical
+        ):
             gone = [*dropped, BUCKET_COL] if "hash" in idx else dropped
             out = df.drop(*gone) if gone else df
             # alter refuses a rename target that names any physical
             # column, so applying the renames one after another (as
             # withColumnsRenamed does) never renames a column twice
             return out.withColumnsRenamed(renames) if renames else out
-        columns, evolved_types = logical, None
+        columns = logical
     dropped = set(dropped)
     # logical name → the stored column it reads
     source = {l: p for p, l in renames.items()}
@@ -2451,26 +2457,18 @@ def staged_swap_rewrite(
             constraints_prevalidated=constraints_prevalidated,
         )
     repair_interrupted_swap(path)  # finish any predecessor's crash window
-    # table properties are not commit history: they survive the full
-    # rewrite (unlike tags, whose commits the fresh root can't resolve)
     try:
-        _props = dict(read_manifest(path, materialize=False).get("properties", {}))
+        live = read_manifest(path, materialize=False)
     except (OSError, ValueError, KeyError):
-        _props = {}
+        live = {}
     staging = f"{path}-rewrite-{uuid.uuid4().hex[:8]}"
     try:
+        # the staged table's one publish already derives from the live
+        # root: history resets, table-level keys carry
         m = write_table(
-            df, staging, opts, _caller_holds_lock=True,
+            df, staging, opts, _rewrite_of=live,
             _constraints_prevalidated=constraints_prevalidated,
         )
-        if _props:
-            pub = dict(m)
-            if "file_pages" in pub:
-                pub.pop("files", None)  # root-only republish, pages reused
-            pub["properties"] = _props
-            _write_manifest(staging, pub)
-            m = dict(m)
-            m["properties"] = _props  # callers see the carried bag too
     except BaseException:
         fs.delete_tree(staging)
         raise
@@ -2521,17 +2519,17 @@ def _republish_rewrite(
     gone-window error. History resets (commit 0), masks clear —
     observably identical semantics to the directory swap."""
     fs = get_fs()
+    old_m = read_manifest(path)
+    old_files = [f["path"] for f in old_m["files"]]
     staging = f"{path}-rewrite-{uuid.uuid4().hex[:8]}"
     try:
         sm = write_table(
-            df, staging, opts, _caller_holds_lock=True,
+            df, staging, opts, _rewrite_of=old_m,
             _constraints_prevalidated=constraints_prevalidated,
         )
     except BaseException:
         fs.delete_tree(staging)
         raise
-    old_m = read_manifest(path)
-    old_files = [f["path"] for f in old_m["files"]]
     for f in sm["files"]:
         rel = f["path"]
         dst = os.path.join(path, rel)
@@ -2541,8 +2539,6 @@ def _republish_rewrite(
         fs.move(os.path.join(staging, rel), dst)
     new_m = dict(sm)
     new_m.pop("file_pages", None)  # repaginate from the relocated list
-    if old_m.get("properties"):
-        new_m["properties"] = dict(old_m["properties"])  # survive the rewrite
     # Mask batches existing NOW are dead the instant this manifest
     # publishes (the staged rows are the mask-applied view where
     # masks existed; for an overwrite they never applied at all) —
@@ -2594,9 +2590,9 @@ def materialize_columns(spark: SparkSession, path: str) -> dict:
     # from the swapped-in table. ALL planning (alias check, layout
     # reconstruction) happens under the lock so it reflects the
     # manifest the rewrite will actually replace. The lock is
-    # non-reentrant, so the write goes through the
-    # _caller_holds_lock entry point; it lives outside the table dir,
-    # so it survives the swap.
+    # non-reentrant, so the staged write goes through write_table's
+    # ``_rewrite_of`` entry point; it lives outside the table dir, so
+    # it survives the swap.
     with table_write_lock(path):
         manifest = read_manifest(path)
         aliases = manifest.get("column_aliases")
@@ -3198,89 +3194,31 @@ def rollback_table(
             get_fs().makedirs(os.path.dirname(live))
             get_fs().move(src, live)
 
+        # re-homed historical files are described afresh, their
+        # NDV/SUM/HIST synopses included (fast_* would otherwise refuse
+        # post-rollback)
         stat_cols = _stat_cols(T.StructType.fromJson(m["schema"]))
-
-        def _entry_of(rel: str) -> dict:
-            cur = current_entries.get(rel)
-            if cur is not None and "nulls" in cur:
-                return cur
-            e = _describe_parquet_file(os.path.join(path, rel), path, stat_cols)
-            # re-homed historical files need their NDV/SUM/HIST
-            # synopses recomputed (fast_* would otherwise refuse
-            # post-rollback)
-            nc, sc = m.get("ndv_columns"), m.get("sum_columns")
-            hc = m.get("histogram_columns")
-            if nc or sc or hc:
-                ndv, sums, hist = _synopses_of_file(
-                    os.path.join(path, rel), nc, sc, hc
-                )
-                if nc:
-                    e["ndv"] = ndv
-                if sc:
-                    e["sums"] = sums
-                if hc:
-                    e["hist"] = hist
-            return e
-
-        files_info = [_entry_of(rel) for rel in target]
-        removed = sorted(set(current_entries) - set(target))
-        added = sorted(set(target) - set(current_entries))
-        new_rows = int(sum(f["rows"] for f in files_info))
-        prior_rows = sum(c.get("rows_added", 0) for c in commits)
-        new_m = dict(m)
-        new_m["files"] = files_info
-        new_m["rows"] = new_rows
-        new_m["column_stats"] = _fold_column_stats(files_info)
-        new_m["write_stats"] = dict(m.get("write_stats", {}), **_layout_stats(files_info))
-        new_m["commits"] = commits + [
-            {
-                "commit": _next_commit(commits),
-                "mode": "rollback",
-                "rolled_back_to": int(commit),
-                "files_added": len(added),
-                "files_removed": len(removed),
-                "removed": removed,
-                # keeps the commit-log row arithmetic exact (appends
-                # compute rows_added = total - sum(prior)); negative
-                # when the rollback dropped rows
-                "rows_added": new_rows - prior_rows,
-                "files": added,
-            }
+        files_info = [
+            cur
+            if (cur := current_entries.get(rel)) is not None and "nulls" in cur
+            else _describe_parquet_file(os.path.join(path, rel), path, stat_cols, m)
+            for rel in target
         ]
-        # ATOMIC commit point; base = the log as read under this lock,
-        # so a streaming micro-batch CAS-landing mid-rollback survives
-        # as a commit AFTER the rollback entry (both concurrent — the
-        # final state carries both)
-        _write_manifest(path, new_m, base_commits=commits)
-
-        # Only after the publish: tombstone the rolled-back-past files
-        # (same discipline as merge/compaction — forward history stays
-        # readable until VACUUM).
-        # named by the rollback's COMMIT NUMBER, not the log position:
-        # after expire_snapshots the two diverge, and a position-named
-        # dir could reuse a pre-expiry commit's trash name
-        trash = os.path.join(
-            path, MANIFEST_DIR, "trash", f"commit-{_next_commit(commits)}"
+        # base = the log as read under this lock, so a streaming
+        # micro-batch CAS-landing mid-rollback survives as a commit
+        # AFTER the rollback entry; the rolled-back-past files then
+        # tombstone into the trash like any rewrite's (forward history
+        # stays readable until VACUUM). rows_added goes negative when
+        # the rollback dropped rows.
+        return _publish_successor(
+            path,
+            m,
+            {"files": files_info},
+            "rollback",
+            sorted(set(target) - set(current_entries)),
+            replaced=sorted(set(current_entries) - set(target)),
+            entry={"rolled_back_to": int(commit)},
         )
-        for rel in removed:
-            if os.path.isabs(rel):
-                # Shallow-clone foreign entry: the SOURCE table owns
-                # the bytes — never move them. Dropping the manifest
-                # entry is the whole removal; historical reads resolve
-                # the absolute path directly.
-                continue
-            src = os.path.join(path, rel)
-            # preserve the RELATIVE path inside the trash dir —
-            # resolve_historical_file globs trash/commit-*/<rel>, so a
-            # partitioned/bucketed file (subdirs in rel) must keep its
-            # directory shape to stay replayable
-            dst = os.path.join(trash, rel)
-            get_fs().makedirs(os.path.dirname(dst))
-            try:
-                get_fs().move(src, dst)
-            except OSError:
-                pass  # already gone — harmless
-        return new_m
 
 
 def read_changes(
@@ -3442,6 +3380,15 @@ def seek_to_row(spark: SparkSession, path: str, row: int) -> DataFrame:
     return _project_logical(_read_row_range(spark, path, manifest, row, manifest["rows"]), manifest)
 
 
+def _bare_path(uri: str) -> str:
+    """A scan's file URI without its scheme and leading slashes.
+    inputFiles(), input_file_name() and _metadata.file_path URL-encode
+    a path alike but spell an empty authority differently (file:///
+    vs file:/); ``unquote`` of the result is the local path, minus its
+    leading ``/``."""
+    return re.sub(r"^[\w+.-]+:", "", uri).lstrip("/")
+
+
 def _read_row_range(
     spark: SparkSession, path: str, manifest: dict, start: int, end: int
 ) -> DataFrame:
@@ -3464,22 +3411,19 @@ def _read_row_range(
     df = _plan_parquet(spark, [p for p, _ in needed], path, "row-range scan", manifest)
     # file → cumulative offset, keyed by the scan's own path strings:
     # basenames repeat across partition directories (one write puts a
-    # part-00001 under p=0/ and another under p=1/). inputFiles() and
-    # _metadata.file_path URL-encode a path alike but spell an empty
-    # authority differently (file:/// vs file:/), so both drop the
-    # scheme. One map lookup keeps the plan a single filter.
-    def bare(s: str) -> str:
-        return re.sub(r"^[\w+.-]+:", "", s).lstrip("/")
-
-    # A relative table path resolves against the working directory,
-    # as the scan's does; inputFiles() lists it absolute.
+    # part-00001 under p=0/ and another under p=1/). One map lookup
+    # keeps the plan a single filter. A relative table path resolves
+    # against the working directory, as the scan's does; inputFiles()
+    # lists it absolute.
     offsets = {
-        bare(os.path.normpath(p) if re.match(r"[\w+.-]+:", p) else os.path.abspath(p)): o
+        _bare_path(
+            os.path.normpath(p) if re.match(r"[\w+.-]+:", p) else os.path.abspath(p)
+        ): o
         for p, o in needed
     }
     kv = []
     for s in df.inputFiles():
-        kv.extend([F.lit(bare(s)), F.lit(offsets[unquote(bare(s))])])
+        kv.extend([F.lit(_bare_path(s)), F.lit(offsets[unquote(_bare_path(s))])])
     key = F.regexp_replace(F.col("_metadata.file_path"), r"^[\w+.-]+:/*", "")
     pos = F.element_at(F.create_map(*kv), key) + F.col("_metadata.row_index")
     return df.filter((pos >= start) & (pos < end))

@@ -62,7 +62,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         return normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}

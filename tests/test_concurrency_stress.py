@@ -98,13 +98,15 @@ def test_crash_between_publish_and_trash_leaves_table_readable(spark, tmpdir, mo
             raise OSError("simulated crash during trash move")
         return real_rename(src, dst)
 
-    real_publish = merge_mod._write_manifest
+    import nimble_spark.sources.table as table_mod
+
+    real_publish = table_mod._write_manifest
 
     def tracking_publish(p, manifest, **kwargs):
         real_publish(p, manifest, **kwargs)
         state["published"] = True
 
-    monkeypatch.setattr(merge_mod, "_write_manifest", tracking_publish)
+    monkeypatch.setattr(table_mod, "_write_manifest", tracking_publish)
     monkeypatch.setattr(merge_mod.os, "rename", crashing_rename)
     try:
         merge_mod.update_where(spark, path, "k < 50", {"v": "v + 7"})

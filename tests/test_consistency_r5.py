@@ -231,11 +231,12 @@ def test_rewrite_manifest_never_references_missing_files(spark, tmpdir, monkeypa
     incoming manifest exists on disk — the crash window where the live
     manifest pointed at already-trashed files is gone."""
     import nimble_spark.sources.merge as merge_mod
+    import nimble_spark.sources.table as table_mod
 
     path = f"{tmpdir}/cow_publish_first"
     _small_table(spark, path)
 
-    real_publish = merge_mod._write_manifest
+    real_publish = table_mod._write_manifest
     checked: list[int] = []
 
     def checking_publish(p, manifest, **kwargs):
@@ -245,7 +246,7 @@ def test_rewrite_manifest_never_references_missing_files(spark, tmpdir, monkeypa
         checked.append(1)
         real_publish(p, manifest, **kwargs)
 
-    monkeypatch.setattr(merge_mod, "_write_manifest", checking_publish)
+    monkeypatch.setattr(table_mod, "_write_manifest", checking_publish)
     merge_mod.update_where(spark, path, "k < 50", {"v": "v + 1000"})
     assert checked  # the instrumented publish actually ran
 

@@ -19,20 +19,16 @@ PKG = Path(__file__).resolve().parent.parent / "nimble_spark"
 
 # (file relative to nimble_spark/, count, justification)
 ALLOWED = {
-    # no/corrupt prior manifest at append staging → first-commit
-    # semantics; the locked re-check inside _write_table_locked is the
-    # authoritative read
-    "sources/datasource.py": 2,  # + abort() cleanup: debris is excluded
-    # by the stray sweep and reclaimed by vacuum
-    # compaction + rollback tombstone moves: source already gone means
-    # another actor (crash replay, earlier rename) moved it — the
-    # manifest, already published, is the source of truth; plus the
-    # maintenance advisor's trash-size probe racing a vacuum (the size
-    # is advisory evidence, never a correctness input)
-    "sources/compaction.py": 2,
+    # abort() cleanup: debris is excluded by the stray sweep and
+    # reclaimed by vacuum
+    "sources/datasource.py": 1,
+    # the maintenance advisor's trash-size probe racing a vacuum (the
+    # size is advisory evidence, never a correctness input)
+    "sources/compaction.py": 1,
     # table.py: prior-root probe before the first sharded publish, and
-    # the rollback tombstone move (source already gone = another actor
-    # moved it; the published manifest is the source of truth)
+    # the one tombstone move every commit shares (_publish_successor:
+    # source already gone = another actor moved it; the published
+    # manifest is the source of truth)
     "sources/table.py": 2,
     # fs.py (the commit lock moved here with the metadata-FS seam, r7):
     # lock release (inode mismatch = nothing of ours to free),

@@ -802,6 +802,27 @@ def test_update_where_file_granular(spark, tmpdir):
     assert len(m2.get("commits", [])) == len(m1["commits"])
 
 
+def test_merge_and_update_under_encoded_directory_name(spark, tmp_path):
+    """Discovery matches the scan's file URIs to manifest paths: Spark
+    URL-encodes a space or '%' in the table's directory name, so the
+    URIs must decode first or every affected file reads as gone."""
+    from nimble_spark.sources.merge import merge_into, update_where
+
+    path = str(tmp_path / "a b%20c=d+e" / "t")
+    write_table(
+        spark.range(0, 40, 1, 4).selectExpr("id AS k", "id * 2 AS v"),
+        path,
+        WriteOptions(max_rows_per_file=10),
+    )
+    merge_into(spark, path, spark.range(35, 45).selectExpr("id AS k", "-id AS v"), "k")
+    m = update_where(spark, path, "k < 5", {"v": "v + 1000"})
+    assert m["commits"][-1]["files_removed"] == 1
+    got = {r["k"]: r["v"] for r in read_table(spark, path).collect()}
+    assert got == {
+        k: (-k if k >= 35 else 2 * k + (1000 if k < 5 else 0)) for k in range(45)
+    }
+
+
 def test_overwrite_partitions_touches_only_named_dirs(spark, tmpdir):
     from nimble_spark.sources.merge import overwrite_partitions
 
@@ -1930,6 +1951,12 @@ def test_logical_view_on_every_read_path(spark, tmpdir, monkeypatch, layout):
     assert widened.dtypes == [("w", "bigint"), ("k", "bigint")]
     with pytest.raises(ValueError, match="unsafe type evolution"):
         read_table(spark, path, columns=["w"], evolved_types={"w": "smallint"})
+    # a full read honours the declared types too
+    full_widened = read_table(spark, path, evolved_types={"w": "bigint"})
+    assert full_widened.dtypes == [(c, "bigint" if c == "w" else types[c]) for c in names]
+    assert sorted(r["w"] for r in full_widened.collect()) == sorted(r["w"] for r in full)
+    with pytest.raises(ValueError, match="unsafe type evolution"):
+        read_table(spark, path, evolved_types={"w": "smallint"})
     typed = read_table(spark, path, columns=["k", "later"], evolved_types={"later": "double"})
     assert typed.dtypes == [("k", "bigint"), ("later", "double")]
     assert typed.filter(F.col("later").isNotNull()).count() == 0

@@ -150,26 +150,118 @@ def test_dsl_properties_surface(spark, tbl):
     assert run_command(spark, tbl, "SHOW PROPERTIES").count() == 2
 
 
-def test_properties_survive_data_commits(spark, tbl):
-    """Root-only properties ride through data commits and compaction
-    untouched (the manifest merge carries the bag forward)."""
-    from nimble_spark.sources.compaction import compact_table
+def _append_rows(spark, lo, hi):
+    return spark.range(lo, hi).selectExpr(
+        "id AS k", "id * 10 AS v", "CAST(id % 3 AS STRING) AS tag"
+    )
 
+
+def _commit_path(spark, path, name):
+    """Run one data-commit path on the carry-matrix table."""
+    from nimble_spark.sources.alter import alter_table
+    from nimble_spark.sources.compaction import compact_table, recluster_table
+    from nimble_spark.sources.datasource import register_nimble_source
     from nimble_spark.sources.deletes import compact_deletes, delete_rows
-    from nimble_spark.sources.merge import update_where
+    from nimble_spark.sources.merge import merge_into, update_where
+    from nimble_spark.sources.table import rollback_table
 
-    set_table_property(tbl, "owner", "data-eng")
-    write_table(
-        spark.range(20, 40).selectExpr("id AS k"), tbl, WriteOptions(),
-        mode="append",
+    if name == "append":
+        write_table(_append_rows(spark, 60, 70), path, WriteOptions(), mode="append")
+    elif name == "pyds_append":
+        register_nimble_source(spark)
+        _append_rows(spark, 60, 70).write.format("nimble").mode("append").save(path)
+    elif name == "merge_into":
+        merge_into(spark, path, _append_rows(spark, 55, 65), "k")
+    elif name == "update_where":
+        update_where(spark, path, "k = 3", {"v": "v + 1"})
+    elif name == "delete_rows":
+        delete_rows(spark, path, "k", [5, 6])
+    elif name == "compact_table":
+        compact_table(spark, path, target_file_bytes=1 << 30)
+    elif name == "recluster_incremental":
+        recluster_table(spark, path, incremental=True)
+    elif name == "recluster_full":
+        recluster_table(spark, path)
+    elif name == "compact_deletes":
+        delete_rows(spark, path, "k", [5, 6])
+        compact_deletes(spark, path)
+    elif name == "rollback_table":
+        rollback_table(spark, path, commit=0)
+    elif name == "alter_table":
+        alter_table(path, add={"extra": "int"})
+    elif name == "overwrite":
+        write_table(_append_rows(spark, 0, 10), path, WriteOptions())
+
+
+# path → how it commits: "commit" logs one entry on the kept history,
+# "none" publishes no manifest, "rewrite" is a full rewrite (history
+# resets, the rewrite re-declares the table's layout and contracts),
+# "overwrite" a new table under the old one's descriptive keys
+_COMMIT_PATHS = {
+    "append": "commit",
+    "pyds_append": "commit",
+    "merge_into": "commit",
+    "update_where": "commit",
+    "delete_rows": "none",
+    "compact_table": "commit",
+    "recluster_incremental": "commit",
+    "recluster_full": "rewrite",
+    "compact_deletes": "rewrite",
+    "rollback_table": "commit",
+    "alter_table": "commit",
+    "overwrite": "overwrite",
+}
+
+
+@pytest.mark.parametrize("name", list(_COMMIT_PATHS))
+def test_properties_survive_data_commits(spark, tmp_path, name):
+    """Every table-level manifest key carries through every data
+    commit path: user metadata, column attributes, CHECK constraints,
+    properties, tags, the stats-shaped indexes and the synopsis
+    declarations. Only an overwrite or a full rewrite resets history
+    (the commit log and tags); a full rewrite still keeps every other
+    key, and an overwrite keeps the descriptive ones (properties, user
+    metadata, column attributes)."""
+    from nimble_spark.sources.table import read_manifest, tag_commit
+
+    path = str(tmp_path / "t")
+    declared = WriteOptions(
+        cluster_by=["k"],
+        n_cluster_files=2,
+        bloom_cols=["tag"],
+        user_metadata={"owner": "team-a"},
+        column_attributes={"k": {"iceberg.field-id": "1"}},
+        check_constraints={"k_nonneg": "k >= 0"},
+        ndv_columns=["tag"],
+        sum_columns=["v"],
+        histogram_columns=["tag"],
     )
-    assert table_properties(tbl).get("owner") == "data-eng", "append dropped it"
-    compact_table(spark, tbl, target_file_bytes=64 * 1024 * 1024)
-    assert table_properties(tbl).get("owner") == "data-eng", "compact dropped it"
-    update_where(spark, tbl, "k = 3", {"k": "k"})
-    assert table_properties(tbl).get("owner") == "data-eng", "update dropped it"
-    delete_rows(spark, tbl, "k", [5, 6])
-    compact_deletes(spark, tbl)  # full rewrite, fresh history root
-    assert table_properties(tbl).get("owner") == "data-eng", (
-        "full rewrite dropped it — properties are not commit history"
-    )
+    write_table(_append_rows(spark, 0, 40), path, declared)
+    tag_commit(path, "v1")
+    # a second commit, overlapping the first's key range (rollback and
+    # the incremental recluster need one)
+    write_table(_append_rows(spark, 20, 60), path, declared, mode="append")
+    set_table_property(path, "owner", "data-eng")
+    before = read_manifest(path)
+    assert before["column_attributes"] == declared.column_attributes
+
+    _commit_path(spark, path, name)
+
+    after = read_manifest(path)
+    kind = _COMMIT_PATHS[name]
+    descriptive = ("properties", "column_attributes")
+    contracts = ("constraints", "ndv_columns", "sum_columns", "histogram_columns")
+    for key in descriptive + (contracts if kind != "overwrite" else ()):
+        assert after.get(key) == before[key], f"{name} changed {key}"
+    # maintenance commits add their own user-metadata keys; none drops one
+    assert before["user_metadata"].items() <= after["user_metadata"].items(), name
+    if kind != "overwrite":
+        for idx in ("cluster", "bloom"):
+            assert after["indexes"][idx] == before["indexes"][idx], f"{name} lost {idx}"
+    if kind in ("rewrite", "overwrite"):
+        assert "tags" not in after and [c["commit"] for c in after["commits"]] == [0]
+    else:
+        assert after["tags"] == {"v1": 0}, name
+        grew = 0 if kind == "none" else 1
+        assert after["commits"][: len(before["commits"])] == before["commits"]
+        assert len(after["commits"]) == len(before["commits"]) + grew, name
