@@ -39,6 +39,11 @@ def get_spark(app_name: str = "nimble_spark", shuffle_partitions: int | None = N
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # Python workers fork from a daemon that keeps each task's
+        # import-cache reset from re-reading pyspark.zip, the py4j zip
+        # and the Spark jar on CPython < 3.12 (nimble_spark/worker_daemon.py;
+        # it imports from the checkout put on PYTHONPATH below)
+        .config("spark.python.daemon.module", "nimble_spark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()

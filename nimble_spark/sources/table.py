@@ -1839,25 +1839,28 @@ def create_sorted_index(spark: SparkSession, path: str, key: str) -> int:
     lookup reads the (small, sorted, min/max-prunable) index to find
     the files containing the probe keys, then scans only those files
     with a residual filter. Returns the number of index entries."""
-    # file entries are stored root-relative (substring_index strips the
-    # absolute-table-dir prefix from the scan's file URI) so the index
-    # survives a table rename/move
-    abs_prefix = os.path.abspath(path).rstrip("/") + "/"
+    # file entries are stored root-relative so the index survives a
+    # table rename/move: substring_index strips the table prefix from
+    # the scan's URL-encoded file URI, so the prefix is encoded the way
+    # Hadoop's Path.toUri encodes it, and lookups decode the stored
+    # names on the driver (Spark's url_decode would also turn a '+'
+    # into a space)
     built_from = read_manifest(path)  # the file set the index will cover
     if any(os.path.isabs(f["path"]) for f in built_from["files"]):
         # Shallow-clone foreign entries: the index stores root-relative
-        # file names (prefix-stripped from the scan URI), which a
-        # foreign file's URI does not contain — its entry would store
-        # an unusable URI and point lookups would miss rows. Localize
-        # first; the index then covers real local files.
+        # file names, which a foreign file does not have — its entry
+        # would name a file outside the table and point lookups would
+        # miss rows. Localize first; the index then covers real local
+        # files.
         raise ValueError(
             "create_sorted_index on a shallow clone with foreign "
             "entries: run deepen_clone first"
         )
+    abs_prefix = spark._jvm.org.apache.hadoop.fs.Path(os.path.abspath(path)).toUri().getRawPath()
     df = (
         _scan_manifest_files(spark, path, built_from)
         .select(
-            F.substring_index(F.input_file_name(), abs_prefix, -1).alias("file"),
+            F.substring_index(F.input_file_name(), abs_prefix.rstrip("/") + "/", -1).alias("file"),
             F.col(key),
         )
         .distinct()
@@ -1925,7 +1928,15 @@ def _entries_for_bounds(manifest: dict, root: str, key: str, lo: Any, hi: Any) -
 def _prune_files(
     manifest: dict, root: str, key: str, lo: Any, hi: Any, points: list | None = None
 ) -> list[str] | None:
-    """Cluster/zorder-index pruning: keep files whose [min,max] for
+    """The paths of ``_prune_entries``' kept files."""
+    kept = _prune_entries(manifest, root, key, lo, hi, points)
+    return None if kept is None else [os.path.join(root, f["path"]) for f in kept]
+
+
+def _prune_entries(
+    manifest: dict, root: str, key: str, lo: Any, hi: Any, points: list | None = None
+) -> list[dict] | None:
+    """Cluster/zorder-index pruning: keep the file entries whose [min,max] for
     `key` intersects [lo,hi] (binary-search-over-boundary-keys
     analogue, dwio/nimble/index/ClusterIndex.h:76-197). Cluster files
     have disjoint ranges (exact pruning); zorder files have selective
@@ -1946,15 +1957,67 @@ def _prune_files(
     for f in _entries_for_bounds(manifest, root, key, lo, hi):
         fmin, fmax = f["min"].get(key), f["max"].get(key)
         if fmin is None or fmax is None:
-            keep.append(os.path.join(root, f["path"]))
+            keep.append(f)
             continue
         if points is not None:
             i = bisect.bisect_left(points, fmin)
             if i < len(points) and points[i] <= fmax:
-                keep.append(os.path.join(root, f["path"]))
+                keep.append(f)
         elif (hi is None or fmin <= hi) and (lo is None or fmax >= lo):
-            keep.append(os.path.join(root, f["path"]))
+            keep.append(f)
     return keep
+
+
+def _point_lookup_entries(
+    spark: SparkSession, path: str, manifest: dict, key: str, values: list
+) -> list[dict] | None:
+    """The manifest file entries a point lookup of the non-null
+    ``values`` on the stored column ``key`` must read, or None when no
+    index prunes it (every manifest file). ``manifest`` may be a
+    sharded root: only the sorted-index fence and blooms load every
+    page. Hash buckets prune inside read_table's scan instead. No tier
+    starts a Spark job:
+
+    - a sorted index whose fence matches the manifest: its file entries
+      for the probe keys, read with pyarrow (the index is small, sorted
+      and row-group prunable; it stores the scan's URL-encoded names).
+      A fence mismatch (files appended or compacted since the index was
+      built) falls through to the always-correct tiers below instead of
+      silently missing rows;
+    - a bloom index (BloomFilter.h:34 analogue): on unsorted data every
+      file's min/max spans the key domain, so blooms are the only
+      mechanism that can skip files;
+    - cluster/zorder ranges, per probe value (``_prune_entries``)."""
+    idx = manifest.get("indexes", {})
+
+    def full() -> dict:
+        return manifest if "files" in manifest else read_manifest(path)
+
+    if key in idx.get("sorted", []) and idx.get("sorted_fence", {}).get(key) in (
+        None,
+        _files_fingerprint(full()),
+    ):
+        index = pa_ds.dataset(os.path.join(path, MANIFEST_DIR, "index", "sorted", key))
+        found = index.to_table(columns=["file"], filter=pa_ds.field(key).isin(values))
+        names = sorted(unquote(f) for f in found.column("file").unique().to_pylist())
+        entries = {f["path"]: f for f in full()["files"]}
+        missing = [n for n in names if n not in entries]
+        if missing:
+            # an unfenced index built before a compaction
+            raise ValueError(
+                f"pruned scan planned against files that are gone (the sorted "
+                f"index on {key!r} names {missing[:3]}; rebuild it)"
+            )
+        return [entries[n] for n in names]
+    if "bloom" in idx:
+        from nimble_spark.sources.bloom import bloom_prune_files
+
+        kept = bloom_prune_files(spark, full(), path, key, values)
+        if kept is not None:
+            kept = set(kept)
+            return [f for f in full()["files"] if os.path.join(path, f["path"]) in kept]
+    points = sorted(values)
+    return _prune_entries(manifest, path, key, points[0], points[-1], points)
 
 
 def _in_predicate(key: str, values: list):
@@ -2170,37 +2233,10 @@ def read_table(
             df = _scan_manifest_files(spark, path, _full())
             df = df.filter(F.col(BUCKET_COL).isin(buckets)).filter(residual)
             return _project_logical(df, manifest, columns, evolved_types)
-        elif key in manifest.get("indexes", {}).get("sorted", []) and manifest[
-            "indexes"
-        ].get("sorted_fence", {}).get(key) in (None, _files_fingerprint(_full())):
-            # Secondary sorted index: the index scan (small, sorted,
-            # min/max-prunable) yields exactly the files holding the
-            # probe keys; only those are read. A fence mismatch
-            # (files appended/compacted since the index was built)
-            # drops to the always-correct fallback paths instead of
-            # silently missing rows.
-            idx_path = os.path.join(path, MANIFEST_DIR, "index", "sorted", key)
-            idx = spark.read.parquet(idx_path).filter(_in_predicate(key, values))
-            file_list = sorted(
-                {os.path.join(path, r[0]) for r in idx.select("file").distinct().collect()}
-            )
         else:
-            # Bloom index first (BloomFilter.h:34 analogue): on
-            # unsorted data every file's min/max spans the key domain,
-            # so blooms are the only mechanism that can skip files.
-            from nimble_spark.sources.bloom import bloom_prune_files
-
-            # bloom probing needs per-file rows; only consulted when
-            # the table HAS a bloom index, else it declines cheaply
-            has_bloom = "bloom" in manifest.get("indexes", {})
-            file_list = (
-                bloom_prune_files(spark, _full(), path, key, values)
-                if has_bloom
-                else None
-            )
-            if file_list is None:
-                points = sorted(values)
-                file_list = _prune_files(manifest, path, key, points[0], points[-1], points)
+            kept = _point_lookup_entries(spark, path, manifest, key, values)
+            if kept is not None:
+                file_list = [os.path.join(path, f["path"]) for f in kept]
 
     if file_list is not None:
         if file_list:
@@ -2273,9 +2309,7 @@ def _project_logical(
             return out.withColumnsRenamed(renames) if renames else out
         columns = logical
     dropped = set(dropped)
-    # logical name → the stored column it reads
-    source = {l: p for p, l in renames.items()}
-    source.update(aliases)
+    source = stored_sources(manifest)
     live = set(logical)
     evolved_types = evolved_types or {}
     sel = []
@@ -2301,6 +2335,16 @@ def _project_logical(
                 continue
         sel.append(c if src == c else F.col(src).alias(c))
     return df.select(*sel)
+
+
+def stored_sources(manifest: dict) -> dict[str, str]:
+    """Logical name → the stored column it reads, for every logical
+    name that differs from its stored one: ``schema_mapping`` renames,
+    and dedup aliases, which read their stored twin."""
+    renames = (manifest.get("schema_mapping") or {}).get("renames") or {}
+    source = {l: p for p, l in renames.items()}
+    source.update(manifest.get("column_aliases") or {})
+    return source
 
 
 def _declared_type(manifest: dict, name: str) -> T.DataType:

@@ -1,13 +1,15 @@
 """Guard: no unbounded driver-side actions in query-path code.
 
-Every `.collect()` / `.toPandas()` / `.toArrow()` in nimble_spark/
+Every `.collect()` / `.toPandas()` / `.toArrow()` in nimble_spark/,
+and every pyarrow data read (`pq.read_table(`, `.to_table(`,
+`read_row_groups(`, the package's `_read_file_batches*(` file reader),
 must be on the allowlist below, each entry a BOUNDED metadata action
 (probe-set bucket ids, index file lists, capped key discovery, scalar
-bounds) or an explicitly driver-side utility (plan audit, DSL peek,
-small-slice serde). A new driver action in an operator fails this
-test until it is justified here — the pattern the 100 TB bar forbids
-is iterating data rows on the driver, and that never belongs on this
-list."""
+bounds), an executor-side read, or an explicitly driver-side utility
+(plan audit, DSL peek, small-slice serde). A new driver action in an
+operator fails this test until it is justified here — the pattern the
+100 TB bar forbids is iterating data rows on the driver, and that
+never belongs on this list."""
 
 from __future__ import annotations
 
@@ -16,7 +18,10 @@ from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "nimble_spark"
 
-ACTION_RE = re.compile(r"\.collect\(\)|\.toPandas\(\)|\.toArrow\(\)|\.first\(\)")
+ACTION_RE = re.compile(
+    r"\.collect\(\)|\.toPandas\(\)|\.toArrow\(\)|\.first\(\)"
+    r"|pq\.read_table\(|\.to_table\(|read_row_groups\(|_read_file_batches\w*\("
+)
 
 # (file relative to nimble_spark/, substring that must appear within
 # the surrounding ±8 lines, justification)
@@ -29,7 +34,11 @@ ALLOWED = [
     ("sources/flatmap.py", "limit(MAX_FLATMAP_KEYS + 1)", "write-time key discovery, hard-capped (NimbleConfig.h:27 analogue)"),
     ("sources/table.py", "pmod(F.xxhash64", "bucket ids of the caller-supplied probe values (O(len(values)))"),
     ("sources/table.py", "mn_{k}", "single-row global min/max agg feeding the z-order bit scaling — one row regardless of table size"),
-    ("sources/table.py", 'idx.select("file").distinct()', "sorted-index file list — file-granularity metadata"),
+    ("sources/table.py", 'to_table(columns=["file"]', "sorted-index file list — file-granularity metadata, read with pyarrow and filtered to the probe keys"),
+    ("sources/datasource.py", "_read_file_batches", "the format(\"nimble\") file reader: runs executor-side, one file per InputPartition (definitions and per-partition calls)"),
+    ("sources/datasource.py", "pq.read_table(file_path, columns=file_cols", "the executor-side reader's one-file read, projected and filtered"),
+    ("sources/bloom.py", "pa_pq.read_table(sc_path)", "the bloom sidecar: one small metadata file of per-row-group bloom bitsets, no data rows"),
+    ("sources/serde.py", "pushed = [(stored[0], \"in\"", "serve_lookups' driver read of its hit files: only the files the point-lookup pruning keeps, filtered to the batch's keys, and only while their bytes fit spark.sql.autoBroadcastJoinThreshold (else the Spark read)"),
     ("sources/encoding_report.py", "df.agg(*aggs).first()", "single-row per-column stats (ndv/min/max/bytes) for the encoding-cost report — EncodingSelectionPolicy analogue runs on aggregates, never rows"),
     ("sources/encoding_policy.py", "df.agg(*aggs).first()", "single-row profile pass (one agg row regardless of table size) feeding the policy decision — same bounded shape as encoding_report.py"),
     ("sources/merge.py", 'select("_f")', "affected-FILE list for copy-on-write MERGE — file-granularity metadata (≤ table file count), produced by a distributed semi-join; source keys never reach the driver"),

@@ -571,8 +571,8 @@ def test_serve_lookups_posture(spark):
     """Serving: a below-cap batch is read and encoded on the driver, so
     the served frame is a local relation — no shuffle, no join, no
     cartesian; the only Python stage is the query's mapInPandas decode.
-    Building the served frame runs at most 2 Spark jobs (the request
-    read and the hit read)."""
+    Building the served frame runs at most 1 Spark job: the request
+    read. The hit files are read on the driver without one."""
     import uuid
 
     _q("q_serve_lookups")(spark, SF_MED)  # builds the cached table outside the count
@@ -584,7 +584,7 @@ def test_serve_lookups_posture(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
     a = assert_posture(df, max_shuffles=0)
     assert a.n_cartesian == 0 and a.n_bnl_joins == 0
     assert a.n_broadcast_joins == a.n_sort_merge_joins == a.n_shuffled_hash_joins == 0

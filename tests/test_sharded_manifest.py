@@ -21,9 +21,11 @@ import os
 import shutil
 import tempfile
 
+import pyarrow as pa
 import pytest
 
 import nimble_spark.sources.table as tbl
+from nimble_spark.sources.serde import serve_lookups
 from nimble_spark.sources.table import (
     WriteOptions,
     read_manifest,
@@ -205,11 +207,12 @@ def test_orphan_pages_swept_age_gated(tmpdir, monkeypatch):
 
 
 def test_point_lookup_skips_disjoint_pages(spark, tmpdir, monkeypatch):
-    """The lazy-root property: a cluster point/range lookup on a
-    sharded manifest reads the root + ONLY the pages whose folded
-    [min,max] intersect the probe — provably-disjoint pages are never
-    opened (the reference's 'locate without parsing everything'
-    stripe-group paging, tablet/Footer.fbs:26-85)."""
+    """The lazy-root property: a cluster point/range lookup (and a
+    served lookup batch) on a sharded manifest reads the root + ONLY
+    the pages whose folded [min,max] intersect the probe —
+    provably-disjoint pages are never opened (the reference's 'locate
+    without parsing everything' stripe-group paging,
+    tablet/Footer.fbs:26-85)."""
     monkeypatch.setattr(tbl, "SHARD_FILE_THRESHOLD", 4)
     monkeypatch.setattr(tbl, "MANIFEST_PAGE_SIZE", 2)
     path = f"{tmpdir}/page_skip"
@@ -237,6 +240,14 @@ def test_point_lookup_skips_disjoint_pages(spark, tmpdir, monkeypatch):
     assert got.count() == 1301
     # keys 0..1300 span ceil(1301/625)=3 cluster files → 2 pages.
     assert 1 <= len(set(loads)) <= 2
+
+    # serving reads its hits on the driver from the same pruned entries
+    tbl._MANIFEST_CACHE.clear()
+    loads.clear()
+    batch = pa.table({"request_id": pa.array([1], pa.int64()), "k": pa.array([7], pa.int64())})
+    served = serve_lookups(spark, path, batch, "k", ["v"]).collect()
+    assert [(r["request_id"], r["n_rows"]) for r in served] == [(1, 1)]
+    assert len(set(loads)) == 1
 
 
 def test_pyds_pushdown_skips_disjoint_pages(spark, tmpdir, monkeypatch):
