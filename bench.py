@@ -601,7 +601,7 @@ def _metadata_bench() -> dict:
         try:
             t0 = time.time()
             root = tbl.read_manifest(path, materialize=False)
-            kept = tbl._prune_files(root, path, "k", 4_242_442, 4_242_442)
+            kept = tbl._prune_entries(root, path, [("k", "eq", 4_242_442)])
             out["manifest_point_probe_s"] = round(time.time() - t0, 4)
         finally:
             tbl._load_page = real

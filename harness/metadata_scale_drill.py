@@ -10,7 +10,7 @@ exercising the production code paths end-to-end:
     root size (root must stay KB-sized at any N);
   * root-only open: `read_manifest(materialize=False)` — what every
     pruned scan pays before page skipping starts;
-  * point prune: `_prune_files` on the root manifest — pages LOADED
+  * point prune: `_prune_entries` on the root manifest — pages LOADED
     must be O(1) (folded page bounds skip the rest unread);
   * 1% range prune: pages loaded ∝ selectivity, not N;
   * append of 1k entries: O(new) publish — zero prior-page reads
@@ -124,7 +124,7 @@ def run_drill(n: int, workdir: str) -> dict:
     probe = (n // 2) * 1000 + 17
     with PageCounter() as pc:
         t0 = time.time()
-        keep = tbl._prune_files(root, path, "k", probe, probe)
+        keep = tbl._prune_entries(root, path, [("k", "eq", probe)])
         out["point_prune_s"] = round(time.time() - t0, 4)
     out["point_pages_loaded"] = len(pc.loads)
     out["point_files_kept"] = len(keep)
@@ -134,7 +134,7 @@ def run_drill(n: int, workdir: str) -> dict:
     hi = lo + max(n // 100, 1) * 1000 - 1
     with PageCounter() as pc:
         t0 = time.time()
-        keep = tbl._prune_files(root, path, "k", lo, hi)
+        keep = tbl._prune_entries(root, path, [("k", "ge", lo), ("k", "le", hi)])
         out["range1pct_prune_s"] = round(time.time() - t0, 4)
     out["range1pct_pages_loaded"] = len(pc.loads)
     out["range1pct_files_kept"] = len(keep)

@@ -169,7 +169,7 @@ def q_explain_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pruned scan must count exactly the SQL rows — the dry run,
     the scan path, and the data all agree."""
     from nimble_spark.sources.bloom import explain_pruning
-    from nimble_spark.sources.table import _prune_files, read_manifest
+    from nimble_spark.sources.table import _range_scan_entries, read_manifest
 
     path = _ensure_written(
         spark, sf_dir, "orders", "cluster_orderkey", WriteOptions(cluster_by=["o_orderkey"])
@@ -177,10 +177,7 @@ def q_explain_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = read_manifest(path)
     dry = explain_pruning(spark, path, "o_orderkey", lo=100, hi=200)
     kept = {d["file"] for d in dry if d["kept"]}
-    real = {
-        os.path.relpath(p, path)
-        for p in _prune_files(m, path, "o_orderkey", 100, 200)
-    }
+    real = {f["path"] for f in _range_scan_entries(m, path, "o_orderkey", 100, 200)}
     out_of_range = explain_pruning(spark, path, "o_orderkey", lo=10**9, hi=2 * 10**9)
     n = read_table(spark, path, range_scan=("o_orderkey", 100, 200)).count()
     return spark.createDataFrame(

@@ -222,39 +222,47 @@ def explain_pruning(
     hi: Any = None,
     values: list | None = None,
 ) -> list[dict]:
-    """Dry-run the file-skipping decision for a predicate on `key`
-    across every index tier, without reading any data: per file,
-    report whether it would be kept and which tier vetoed it
-    (``range`` = cluster/zorder min-max, ``bloom`` = bloom veto,
-    ``kept`` = must be read). The "why is my query reading 10k
-    files" debugging tool — the reference's index-selection trace
-    made queryable."""
-    from nimble_spark.sources.table import read_manifest
+    """Dry-run the file-skipping decision ``read_table`` takes for
+    ``range_scan=(key, lo, hi)``, or for ``point_lookup=(key, values)``
+    when ``values`` is given, without reading any data: per file,
+    whether the scan reads it and which tier dropped it if not
+    (``range`` = its manifest stats exclude the predicate; else the
+    index that vetoed it: ``sorted``, ``bloom`` or ``hash``; ``kept``
+    = must be read). The "why is my query reading 10k files" debugging
+    tool — the reference's index-selection trace made queryable."""
+    from nimble_spark.sources.merge import _bucket_of
+    from nimble_spark.sources.table import (
+        _bucket_ids,
+        _point_lookup_entries,
+        _prune_entries,
+        _range_constraints,
+        _range_scan_entries,
+        read_manifest,
+    )
 
     m = read_manifest(path)
-    idx = m.get("indexes", {})
-    range_keys = list((idx.get("cluster") or {}).get("keys", [])) + list(
-        (idx.get("zorder") or {}).get("keys", [])
-    )
-    bloom_keys = (idx.get("bloom") or {}).get("keys", [])
-    if values is not None:
-        vlist = list(values)
-        plo, phi = min(vlist), max(vlist)
+    hash_idx = m.get("indexes", {}).get("hash")
+    if values is None:
+        cons = _range_constraints(key, lo, hi)
+        tier, kept = "range", _range_scan_entries(m, path, key, lo, hi)
     else:
-        vlist, plo, phi = None, lo, hi
+        values = [v for v in values if v is not None]
+        cons = [(key, "in", values)]
+        if not values:
+            tier, kept = "range", []
+        elif hash_idx and hash_idx["key"] == key:
+            ids = set(spark.range(1).select(*_bucket_ids(m, key, values)).first())
+            tier, kept = "hash", [f for f in m["files"] if _bucket_of(f["path"]) in ids]
+        else:
+            tier, kept = _point_lookup_entries(spark, path, m, key, values)
+    read = None if kept is None else {f["path"] for f in kept}
+    admitted = {f["path"] for f in _prune_entries(m, path, cons)}
     out = []
     for f in m["files"]:
-        verdict = "kept"
-        if key in range_keys or (f["min"].get(key) is not None):
-            fmin, fmax = f["min"].get(key), f["max"].get(key)
-            if fmin is not None and (
-                (phi is not None and fmin > phi) or (plo is not None and fmax < plo)
-            ):
-                verdict = "range"
-        if verdict == "kept" and vlist is not None and key in bloom_keys:
-            probe = bloom_probe_file(spark, os.path.join(path, f["path"]), key, vlist)
-            if probe["has_bloom"] and not probe["maybe"]:
-                verdict = "bloom"
+        if read is None or f["path"] in read:
+            verdict = "kept"
+        else:
+            verdict = tier if f["path"] in admitted else "range"
         out.append({"file": f["path"], "kept": verdict == "kept", "pruned_by": verdict})
     return out
 

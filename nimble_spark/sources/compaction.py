@@ -15,7 +15,7 @@ proportional to the small-file debt, not table size.
 Adjacency matters: on a cluster-indexed table the manifest file order
 is the cluster range order, so merging only adjacent bins keeps the
 per-file [min,max] key ranges disjoint and every index-pruning path
-(_prune_files) exactly as selective as before, just with fewer files.
+(_prune_entries) exactly as selective as before, just with fewer files.
 
 The reference's analogue is the writer's stripe-grouping discipline
 (flush policy targets a stripe size, dwio/nimble/velox/
@@ -270,16 +270,17 @@ def fast_count(
     """Statistics-answered COUNT — the reference's stats short-circuit
     (per-file row counts in the tablet footer). Unfiltered: pure
     manifest arithmetic, zero IO. With ``range_filter=(key, lo, hi)``
-    (inclusive, None = open): files wholly inside the range contribute
-    their manifest row count without being opened; only boundary
-    files — the ones whose [min,max] straddles an endpoint — are
-    actually scanned. On a clustered table that is at most ~2 files
-    per endpoint regardless of table size. Unfiltered counts read the
+    (inclusive, None = open): null-free files wholly inside the range
+    contribute their manifest row count without being opened; only
+    boundary files — the ones whose [min,max] straddles an endpoint,
+    or that hold null keys — are actually scanned. On a clustered
+    table that is at most ~2 files per endpoint regardless of table
+    size. Unfiltered counts read the
     ROOT only (zero page IO on a sharded manifest); filtered counts
     skip pages whose folded bounds are disjoint from the range."""
     from pyspark.sql import functions as F
 
-    from nimble_spark.sources.table import _entries_for_bounds
+    from nimble_spark.sources.table import _prune_entries, _range_constraints, _stat_bounds
 
     m = read_manifest(path, materialize=False)
     # the same fence as every other fast_* path (r8: fast_count was the
@@ -297,17 +298,16 @@ def fast_count(
     # the boundary scan below reads files with the declared PHYSICAL
     # schema, so the resolved name is also the filter column
     key = _resolve_stats_key(m, key)
+    cons = _range_constraints(key, lo, hi)
     full = 0
     boundary: list[dict] = []
-    for f in _entries_for_bounds(m, path, key, lo, hi):
-        fmin, fmax = f["min"].get(key), f["max"].get(key)
-        if fmin is None or fmax is None:
-            boundary.append(f)
-            continue
-        if (hi is not None and fmin > hi) or (lo is not None and fmax < lo):
-            continue  # disjoint — skipped entirely
-        if (lo is None or fmin >= lo) and (hi is None or fmax <= hi):
-            full += f["rows"]  # wholly inside — counted from metadata
+    for f in _prune_entries(m, path, cons):
+        inside = (f.get("nulls") or {}).get(key) == 0
+        for _, kind, v in cons:
+            b = _stat_bounds(f, key, v)
+            inside = inside and b is not None and (b[0] >= v if kind == "ge" else b[1] <= v)
+        if inside:
+            full += f["rows"]
         else:
             boundary.append(f)
     if not boundary:

@@ -49,7 +49,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from nimble_spark.sources.table import STATS_GEN as _STATS_GEN
-from nimble_spark.sources.table import _next_commit, read_manifest
+from nimble_spark.sources.table import _next_commit, _prune_entries, read_manifest
 
 
 class NimbleFilePartition(InputPartition):
@@ -126,11 +126,15 @@ def _pa_filter(constraints: list):
     never decoded, and surviving rows are filtered before they cross
     the Arrow bridge. Over-filtering is impossible — the expressions
     are the exact SQL semantics (NULL comparisons drop, as Spark's
-    residual would) and Spark re-applies every filter anyway."""
+    residual would) and Spark re-applies every filter anyway. Double
+    comparisons are left to that residual: pyarrow compares NaN false,
+    where Spark orders it above every number and equal to itself."""
     import pyarrow.compute as pc
 
     expr = None
     for col, kind, value in constraints:
+        if any(isinstance(v, float) for v in (value if kind == "in" else [value])):
+            continue
         f = pc.field(col)
         if kind == "eq":
             e = f == value
@@ -430,67 +434,6 @@ def _read_file_batches_mapped(
         yield from pa.Table.from_arrays(arrays, names=names).to_batches()
 
 
-def _file_might_match(entry: dict, col: str, kind: str, value) -> bool:
-    """Conservative per-file stats check: False ONLY when the file's
-    stats for ``col`` provably exclude every row the filter can
-    accept. Type-mismatched or missing stats keep the file."""
-    if kind == "isnull":
-        # per-file null counts in the manifest: a file with zero nulls
-        # in the column cannot contain an IS NULL row
-        nulls = (entry.get("nulls") or {}).get(col)
-        return not (nulls == 0)
-    if kind == "notnull":
-        nulls = (entry.get("nulls") or {}).get(col)
-        return not (nulls is not None and nulls == entry.get("rows"))
-    fmin = (entry.get("min") or {}).get(col)
-    fmax = (entry.get("max") or {}).get(col)
-    if fmin is None or fmax is None:
-        return True
-    if kind == "startswith":
-        # a string with prefix P exists in [fmin, fmax] only if
-        # fmax >= P (anything with the prefix sorts >= P) and fmin's
-        # own P-length prefix is <= P (else every value sorts above
-        # the whole prefix range). Conservative under parquet's
-        # truncated string stats (min truncates down, max up).
-        if not isinstance(fmin, str) or not isinstance(value, str):
-            return True
-        return fmax >= value and fmin[: len(value)] <= value
-    import datetime as _dt
-
-    probe = value[0] if kind == "in" and value else value
-    if (
-        type(probe) is _dt.date
-        and isinstance(fmin, str)
-        and len(fmin) == 10
-        and isinstance(fmax, str)
-        and len(fmax) == 10
-    ):
-        # DATE stats are JSON-stringified ISO dates in the manifest
-        # ("2024-01-15", which sorts like the value itself) — compare
-        # in string space. Timestamps stay conservative (kept): their
-        # stringified stats have varying precision and a truncated
-        # compare could wrongly prune.
-        value = tuple(str(v) for v in value) if kind == "in" else str(value)
-        probe = str(probe)
-    if not isinstance(fmin, (int, float, str)) or type(probe) is not type(fmin) and not (
-        isinstance(probe, (int, float)) and isinstance(fmin, (int, float))
-    ):
-        return True
-    if kind == "eq":
-        return fmin <= value <= fmax
-    if kind == "in":
-        return any(fmin <= v <= fmax for v in value)
-    if kind == "gt":
-        return fmax > value
-    if kind == "ge":
-        return fmax >= value
-    if kind == "lt":
-        return fmin < value
-    if kind == "le":
-        return fmin <= value
-    return True
-
-
 def _manifest_partition_types(manifest: dict, schema: StructType) -> dict:
     """Partition column → declared simpleString type, from the
     manifest's partition index keys ∩ the reader schema. Empty for
@@ -506,9 +449,9 @@ def _manifest_partition_types(manifest: dict, schema: StructType) -> dict:
 class NimbleReader(DataSourceReader):
     def __init__(self, path: str, schema: StructType):
         self.path = path
-        # Root-only on sharded manifests: pages load lazily in
-        # kept_files, and only those the pushed filters can't exclude
-        # at page granularity (folded per-page min/max bounds).
+        # Root-only on sharded manifests: partitions() loads only the
+        # pages the pushed filters can't exclude by their folded
+        # per-page min/max bounds.
         self.manifest = read_manifest(path, materialize=False)
         self.columns = [f.name for f in schema.fields]
         self.part_types = _manifest_partition_types(self.manifest, schema)
@@ -525,54 +468,11 @@ class NimbleReader(DataSourceReader):
             for f in self.manifest["schema"]["fields"]
         }
 
-
-    def _prunable_constraints(self) -> list[tuple[str, str, object]]:
-        """Constraints safe to prune files with. On a pre-STATS_GEN
-        manifest the per-file null counts can be WRONG (all-null row
-        groups skipped at describe time, recorded as nulls=0 —
-        table.STATS_GEN), so null-count kinds are dropped there:
-        pruning degrades to keep-file, Spark's residual stays exact."""
-        if self.manifest.get("stats_gen", 1) >= _STATS_GEN:
-            return self._constraints
-        return [c for c in self._constraints if c[1] not in ("isnull", "notnull")]
-
-    def _iter_entries(self) -> Iterator[dict]:
-        """File entries, loading sharded-manifest pages lazily: a
-        page whose FOLDED [min,max] bounds provably exclude every row
-        a pushed filter accepts is skipped without being read — the
-        folded bounds are a superset range, so _file_might_match's
-        conservative semantics apply verbatim (a page lacking bounds
-        for a column, or any null-count constraint, keeps the page;
-        per-file checks then run on the loaded entries as before)."""
-        m = self.manifest
-        if "files" in m:
-            yield from m["files"]
-            return
-        from nimble_spark.sources.table import MANIFEST_DIR, _load_page
-
-        meta_dir = os.path.join(self.path, MANIFEST_DIR)
-        cons = self._prunable_constraints()
-        for pg in m.get("file_pages", []):
-            pseudo = {"min": pg.get("min") or {}, "max": pg.get("max") or {}}
-            if all(
-                _file_might_match(pseudo, col, kind, value)
-                for col, kind, value in cons
-            ):
-                yield from _load_page(meta_dir, pg["path"])
-
-    def kept_files(self) -> list[str]:
-        keep = []
-        cons = self._prunable_constraints()
-        for entry in self._iter_entries():
-            if all(
-                _file_might_match(entry, col, kind, value)
-                for col, kind, value in cons
-            ):
-                keep.append(os.path.join(self.path, entry["path"]))
-        return keep
-
     def partitions(self) -> list[NimbleFilePartition]:
-        kept = self.kept_files()
+        kept = [
+            os.path.join(self.path, f["path"])
+            for f in _prune_entries(self.manifest, self.path, self._constraints)
+        ]
         if not kept:
             # Stats pruning can exclude EVERY file (filter provably
             # empty). Spark's Python source still plans one task and

@@ -204,7 +204,7 @@ def _read_hits_on_driver(
     cap = _driver_read_cap(spark)
     if cap < 0:
         return None
-    entries = _point_lookup_entries(spark, path, manifest, stored[0], keys) if keys else []
+    entries = _point_lookup_entries(spark, path, manifest, stored[0], keys)[1] if keys else []
     if entries is None:
         entries = read_manifest(path)["files"]
     if sum(f["bytes"] for f in entries) > cap:

@@ -26,8 +26,10 @@ any Hadoop-compatible FS (the manifest is one small JSON object).
 from __future__ import annotations
 
 import bisect
+import datetime
 import hashlib
 import json
+import numbers
 import os
 import re
 import time
@@ -918,7 +920,7 @@ def _describe_parquet_file(
     # from ``nulls`` entirely: a partial sum (e.g. counting only the
     # row groups that carry min/max — an all-null row group has
     # null_count but NO min/max) understates the true count, and
-    # datasource._file_might_match(kind='isnull') would then prune a
+    # _entry_may_match(kind='isnull') below would then prune a
     # file that does contain NULL rows — a wrong-answer, not a
     # perf-only, failure. Absence from the dict degrades both
     # isnull/notnull pruning to keep-file.
@@ -995,6 +997,106 @@ def _describe_parquet_file(
                 entry[key] = val
     return entry
 
+
+def _stat_bounds(entry: dict, col: str, probe: Any) -> tuple | None:
+    """A file or page entry's manifest [min, max] for ``col`` as values
+    that order like ``probe``, or None when they do not compare and the
+    entry must be kept. The one place a manifest bound meets a probe.
+
+    ``_json_safe`` above writes number and string stats as themselves
+    and every other type as ``str(v)``: DATE stats read back as dates
+    for a date probe; timestamp, decimal and binary stats (and any
+    probe of another type) compare with nothing, so they keep the
+    file. A missing or None bound (an all-null file) or a NaN keeps it
+    too."""
+    lo, hi = (entry.get("min") or {}).get(col), (entry.get("max") or {}).get(col)
+    if lo is None or hi is None:
+        return None
+    if isinstance(probe, str):
+        return (lo, hi) if isinstance(lo, str) and isinstance(hi, str) else None
+    if type(probe) is datetime.date:
+        try:
+            return datetime.date.fromisoformat(lo), datetime.date.fromisoformat(hi)
+        except (TypeError, ValueError):
+            return None
+    if isinstance(probe, numbers.Real) and isinstance(lo, numbers.Real) and isinstance(hi, numbers.Real):
+        # Spark orders NaN above every number (and NaN = NaN), and
+        # parquet records it as a bound: NaN orders nothing here
+        return None if lo != lo or hi != hi or probe != probe else (lo, hi)
+    return None
+
+
+def _entry_may_match(entry: dict, col: str, kind: str, value: Any) -> bool:
+    """False only when ``entry``'s stats prove no row of it satisfies
+    the constraint (``value`` of an ``in`` is a sorted list)."""
+    if kind in ("isnull", "notnull"):
+        nulls = (entry.get("nulls") or {}).get(col)
+        if kind == "isnull":
+            return nulls != 0
+        return nulls is None or nulls != entry.get("rows")
+    bounds = _stat_bounds(entry, col, value[0] if kind == "in" else value)
+    if bounds is None:
+        return True
+    lo, hi = bounds
+    if kind == "in":
+        i = bisect.bisect_left(value, lo)
+        return i < len(value) and value[i] <= hi
+    if kind == "startswith":
+        # a value with prefix P sorts >= P, and fmin's own P-length
+        # prefix must not sort above P; safe under parquet's truncated
+        # string stats (min truncates down, max up)
+        return hi >= value and lo[: len(value)] <= value
+    return {
+        "eq": lo <= value <= hi,
+        "gt": hi > value,
+        "ge": hi >= value,
+        "lt": lo < value,
+        "le": lo <= value,
+    }.get(kind, True)
+
+
+def _prune_entries(manifest: dict, root: str, constraints: list) -> list[dict]:
+    """The file entries whose manifest stats may hold a row satisfying
+    every ``(col, kind, value)`` constraint (kinds eq/in/gt/ge/lt/le/
+    isnull/notnull/startswith, as ``pushFilters`` builds them): the
+    file-level analogue of the reference's stats skipping
+    (SelectiveNimbleReader's stripe pruning, ClusterIndex.h:76-197).
+    Conservative: a bound that does not compare keeps the file
+    (``_stat_bounds``). An ``in`` keeps a file only when some probe
+    value falls inside its [min, max], found by bisecting the sorted
+    values; its None values match nothing and drop out.
+
+    On a pre-STATS_GEN manifest the null counts can be wrong, so the
+    null-count kinds are dropped there. ``manifest`` may be a sharded
+    root (``read_manifest(materialize=False)``): a page whose folded
+    bounds exclude a constraint is never read off disk, so at 10⁶ files
+    a point lookup loads the small root and a handful of pages."""
+    cons = []
+    for col, kind, value in constraints:
+        if kind in ("isnull", "notnull") and manifest.get("stats_gen", 1) < STATS_GEN:
+            continue
+        if kind == "in":
+            try:
+                value = sorted(v for v in value if v is not None)
+            except TypeError:  # mixed probe types: nothing to bisect
+                continue
+            if not value or any(v != v for v in value):  # NaN sorts nowhere
+                continue
+        cons.append((col, kind, value))
+
+    def keep(entry: dict) -> bool:
+        return all(_entry_may_match(entry, col, kind, value) for col, kind, value in cons)
+
+    if "files" in manifest:
+        return [f for f in manifest["files"] if keep(f)]
+    meta_dir = os.path.join(root, MANIFEST_DIR)
+    return [
+        f
+        for pg in manifest.get("file_pages", [])
+        if keep(pg)
+        for f in _load_page(meta_dir, pg["path"])
+        if keep(f)
+    ]
 
 
 def _unreferenced_parquet_rels(path: str, referenced: set[str]) -> set[str]:
@@ -1902,92 +2004,61 @@ def _files_fingerprint(manifest: dict) -> str:
     return h.hexdigest()[:16]
 
 
-def _entries_for_bounds(manifest: dict, root: str, key: str, lo: Any, hi: Any) -> list:
-    """File entries possibly intersecting [lo,hi] on ``key``. On a
-    materialized manifest: all entries (per-entry pruning follows).
-    On a sharded ROOT (read_manifest(materialize=False)): load ONLY
-    the pages whose folded bounds intersect — pages provably disjoint
-    are never read off disk. At 10⁶ files a point lookup touches the
-    small root + a handful of pages instead of the whole metadata —
-    the 'locate without parsing everything' property of the
-    reference's paged stripe-group metadata."""
-    if "files" in manifest:
-        return manifest["files"]
-    meta_dir = os.path.join(root, MANIFEST_DIR)
-    out: list = []
-    for pg in manifest.get("file_pages", []):
-        pmin = (pg.get("min") or {}).get(key)
-        pmax = (pg.get("max") or {}).get(key)
-        if pmin is not None and pmax is not None:
-            if (hi is not None and pmin > hi) or (lo is not None and pmax < lo):
-                continue  # page provably disjoint — skip the read
-        out.extend(_load_page(meta_dir, pg["path"]))
-    return out
-
-
-def _prune_files(
-    manifest: dict, root: str, key: str, lo: Any, hi: Any, points: list | None = None
-) -> list[str] | None:
-    """The paths of ``_prune_entries``' kept files."""
-    kept = _prune_entries(manifest, root, key, lo, hi, points)
-    return None if kept is None else [os.path.join(root, f["path"]) for f in kept]
-
-
-def _prune_entries(
-    manifest: dict, root: str, key: str, lo: Any, hi: Any, points: list | None = None
-) -> list[dict] | None:
-    """Cluster/zorder-index pruning: keep the file entries whose [min,max] for
-    `key` intersects [lo,hi] (binary-search-over-boundary-keys
-    analogue, dwio/nimble/index/ClusterIndex.h:76-197). Cluster files
-    have disjoint ranges (exact pruning); zorder files have selective
-    but overlapping ranges on every zorder key. Accepts a sharded
-    ROOT manifest (page-granular skipping via _entries_for_bounds).
-
-    ``points`` (sorted point-lookup values, lo/hi their ends) keeps a
-    file only when some value falls inside its [min,max], found by
-    bisecting the values — so keys 3 and 998 read two files, not every
-    file between them."""
+def _range_index_keys(manifest: dict) -> list[str]:
+    """The columns read_table prunes by stats: cluster and zorder keys.
+    Cluster files have disjoint ranges (exact pruning); zorder files
+    have selective but overlapping ranges on every zorder key."""
     idx = manifest.get("indexes", {})
-    indexed_keys = list((idx.get("cluster") or {}).get("keys", [])) + list(
+    return list((idx.get("cluster") or {}).get("keys", [])) + list(
         (idx.get("zorder") or {}).get("keys", [])
     )
-    if key not in indexed_keys:
+
+
+def _range_constraints(key: str, lo: Any, hi: Any) -> list[tuple]:
+    """``lo <= key <= hi`` (None = open) as ``_prune_entries`` constraints."""
+    return [(key, kind, v) for kind, v in (("ge", lo), ("le", hi)) if v is not None]
+
+
+def _range_scan_entries(manifest: dict, root: str, key: str, lo: Any, hi: Any) -> list[dict] | None:
+    """The file entries ``read_table(range_scan=(key, lo, hi))`` reads,
+    or None when ``key`` is no cluster/zorder key (every file)."""
+    if key not in _range_index_keys(manifest):
         return None
-    keep = []
-    for f in _entries_for_bounds(manifest, root, key, lo, hi):
-        fmin, fmax = f["min"].get(key), f["max"].get(key)
-        if fmin is None or fmax is None:
-            keep.append(f)
-            continue
-        if points is not None:
-            i = bisect.bisect_left(points, fmin)
-            if i < len(points) and points[i] <= fmax:
-                keep.append(f)
-        elif (hi is None or fmin <= hi) and (lo is None or fmax >= lo):
-            keep.append(f)
-    return keep
+    return _prune_entries(manifest, root, _range_constraints(key, lo, hi))
+
+
+def _bucket_ids(manifest: dict, key: str, values: list) -> list:
+    """The hash-bucket ids of the probe ``values`` as literal
+    expressions the optimizer folds, so a scan filtered on them plans
+    with no job; the cast to the declared type matters because
+    xxhash64 is width-sensitive."""
+    n = manifest["indexes"]["hash"]["n_buckets"]
+    key_type = _declared_type(manifest, key)
+    return [F.pmod(F.xxhash64(F.lit(v).cast(key_type)), F.lit(n)) for v in dict.fromkeys(values)]
 
 
 def _point_lookup_entries(
     spark: SparkSession, path: str, manifest: dict, key: str, values: list
-) -> list[dict] | None:
-    """The manifest file entries a point lookup of the non-null
-    ``values`` on the stored column ``key`` must read, or None when no
-    index prunes it (every manifest file). ``manifest`` may be a
-    sharded root: only the sorted-index fence and blooms load every
-    page. Hash buckets prune inside read_table's scan instead. No tier
-    starts a Spark job:
+) -> tuple[str, list[dict] | None]:
+    """The tier that prunes a point lookup of the non-null ``values``
+    on the stored column ``key``, and the manifest file entries it
+    must read (None when no index prunes it: every manifest file).
+    ``manifest`` may be a sharded root: only the sorted-index fence and
+    blooms load every page. Hash buckets prune inside read_table's
+    scan instead. No tier starts a Spark job:
 
-    - a sorted index whose fence matches the manifest: its file entries
-      for the probe keys, read with pyarrow (the index is small, sorted
-      and row-group prunable; it stores the scan's URL-encoded names).
-      A fence mismatch (files appended or compacted since the index was
-      built) falls through to the always-correct tiers below instead of
-      silently missing rows;
-    - a bloom index (BloomFilter.h:34 analogue): on unsorted data every
+    - ``sorted``: a sorted index whose fence matches the manifest: its
+      file entries for the probe keys, read with pyarrow (the index is
+      small, sorted and row-group prunable; it stores the scan's
+      URL-encoded names). A fence mismatch (files appended or compacted
+      since the index was built) falls through to the always-correct
+      tiers below instead of silently missing rows;
+    - ``bloom`` (BloomFilter.h:34 analogue): on unsorted data every
       file's min/max spans the key domain, so blooms are the only
       mechanism that can skip files;
-    - cluster/zorder ranges, per probe value (``_prune_entries``)."""
+    - ``range``: cluster/zorder stats, per probe value
+      (``_prune_entries``), so keys 3 and 998 read two files, not every
+      file between them."""
     idx = manifest.get("indexes", {})
 
     def full() -> dict:
@@ -2008,16 +2079,17 @@ def _point_lookup_entries(
                 f"pruned scan planned against files that are gone (the sorted "
                 f"index on {key!r} names {missing[:3]}; rebuild it)"
             )
-        return [entries[n] for n in names]
+        return "sorted", [entries[n] for n in names]
     if "bloom" in idx:
         from nimble_spark.sources.bloom import bloom_prune_files
 
         kept = bloom_prune_files(spark, full(), path, key, values)
         if kept is not None:
             kept = set(kept)
-            return [f for f in full()["files"] if os.path.join(path, f["path"]) in kept]
-    points = sorted(values)
-    return _prune_entries(manifest, path, key, points[0], points[-1], points)
+            return "bloom", [f for f in full()["files"] if os.path.join(path, f["path"]) in kept]
+    if key not in _range_index_keys(manifest):
+        return "range", None
+    return "range", _prune_entries(manifest, path, [(key, "in", values)])
 
 
 def _in_predicate(key: str, values: list):
@@ -2200,12 +2272,12 @@ def read_table(
         return _project_logical(df, manifest, columns, evolved_types)
     hash_idx = manifest.get("indexes", {}).get("hash")
 
-    file_list: list[str] | None = None
+    kept: list[dict] | None = None
     residual = None
 
     if range_scan is not None:
         key, lo, hi = range_scan
-        file_list = _prune_files(manifest, path, key, lo, hi)
+        kept = _range_scan_entries(manifest, path, key, lo, hi)
         cond = F.lit(True)
         if lo is not None:
             cond = cond & (F.col(key) >= lo)
@@ -2218,30 +2290,22 @@ def read_table(
         values = [v for v in values if v is not None]
         residual = _in_predicate(key, values) if values else None
         if not values:
-            file_list = []
+            kept = []
         elif hash_idx and hash_idx["key"] == key:
             # Bucket pruning via partition-column filter: Spark prunes
             # the __nimble_bucket=N directories before listing files.
-            # The bucket ids are literal expressions the optimizer
-            # folds, so planning starts no job; the cast to the
-            # declared type matters because xxhash64 is width-sensitive.
-            n = hash_idx["n_buckets"]
-            key_type = _declared_type(manifest, key)
-            buckets = [
-                F.pmod(F.xxhash64(F.lit(v).cast(key_type)), F.lit(n)) for v in dict.fromkeys(values)
-            ]
+            buckets = _bucket_ids(manifest, key, values)
             df = _scan_manifest_files(spark, path, _full())
             df = df.filter(F.col(BUCKET_COL).isin(buckets)).filter(residual)
             return _project_logical(df, manifest, columns, evolved_types)
         else:
-            kept = _point_lookup_entries(spark, path, manifest, key, values)
-            if kept is not None:
-                file_list = [os.path.join(path, f["path"]) for f in kept]
+            kept = _point_lookup_entries(spark, path, manifest, key, values)[1]
 
-    if file_list is not None:
-        if file_list:
+    if kept is not None:
+        if kept:
             # basePath keeps Hive partition columns visible when
             # reading a pruned subset of leaf files.
+            file_list = [os.path.join(path, f["path"]) for f in kept]
             df = _plan_parquet(spark, file_list, path, "pruned scan", manifest)
         else:
             df = _empty_df(spark, manifest)

@@ -709,9 +709,10 @@ def explain_pruning_df(
     values: list | None = None,
 ) -> DataFrame:
     """EXPLAIN PRUNING <col> BETWEEN a AND b | IN (v, ...): per-file
-    dry run of the skip decision across index tiers (range min/max,
-    bloom veto) — which files a predicate would read, and why the
-    others are skipped, without touching data."""
+    dry run of read_table's skip decision for that range scan or point
+    lookup — which files it reads, and which tier (range stats, sorted
+    index, bloom, hash buckets) skips each other one, without touching
+    data."""
     from nimble_spark.sources.bloom import explain_pruning
 
     rows = [

@@ -5,13 +5,17 @@ reader vs reference evaluation). Here: hypothesis-generated
 conjunctions of eq/in/range/null predicates over mixed types, run
 through the ``format("nimble")`` pushdown path (file pruning via
 manifest stats + row-exact residual) and through DuckDB over the SAME
-parquet files. Any divergence is a pruning bug: a file wrongly
-skipped drops rows, a wrong residual keeps them.
+parquet files; each single-column predicate on the cluster key also
+runs through ``read_table(range_scan=/point_lookup=)``, which prunes
+by the same stats rule. Any divergence is a pruning bug: a file
+wrongly skipped drops rows, a wrong residual keeps them.
 
 The table is fixed and adversarial (nulls, duplicates, empty strings,
 unicode, negative keys, min/max boundary values, 4 clustered files so
-pruning decisions actually differ per file); hypothesis varies only
-the filters — the generator's reach is the point.
+pruning decisions actually differ per file), written clustered by the
+LONG key k, again with a sharded manifest, and once more clustered by
+the DATE column d; hypothesis varies only the filters — the
+generator's reach is the point.
 """
 
 from __future__ import annotations
@@ -78,12 +82,19 @@ def fuzz_table(spark):
         )
     finally:
         tbl.SHARD_FILE_THRESHOLD, tbl.MANIFEST_PAGE_SIZE = old
+    # DATE-clustered twin: the manifest stores its d stats as strings
+    path_date = f"{d}/t_date"
+    write_table(
+        spark.createDataFrame(rows, _SCHEMA),
+        path_date,
+        WriteOptions(cluster_by=["d"], n_cluster_files=4),
+    )
     from nimble_spark.sources.datasource import register_nimble_source
 
     register_nimble_source(spark)
     con = duckdb.connect()
     con.execute(f"CREATE VIEW t AS SELECT k, cat, v, d FROM '{path}/*.parquet'")
-    yield path, path_sharded, con
+    yield {"k": path, "sharded": path_sharded, "d": path_date}, con
     con.close()
     shutil.rmtree(d, ignore_errors=True)
 
@@ -150,12 +161,33 @@ def _bag(rows):
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 def test_pushdown_filters_match_duckdb(spark, fuzz_table, preds):
-    path, path_sharded, con = fuzz_table
+    import datetime as dt
+
+    from nimble_spark.sources.table import read_table
+
+    paths, con = fuzz_table
     where = " AND ".join(_to_sql(p) for p in preds)
     want = con.sql(f"SELECT k, cat, v, d FROM t WHERE {where}").fetchall()
-    for p in (path, path_sharded):
+    for p in paths.values():
         got = spark.read.format("nimble").option("pushdown", "true").load(p).filter(where).collect()
         assert _bag(got) == _bag(want), f"{p}: {where}"
+    # the cluster key's eq / range / in predicates through read_table
+    for key, p in (("k", paths["k"]), ("k", paths["sharded"]), ("d", paths["d"])):
+        for col, op, val in preds:
+            if col != key or op not in ("=", "<", "<=", ">", ">=", "in"):
+                continue
+            probe = dt.date.fromisoformat if key == "d" else (lambda v: v)
+            if op == "in":
+                df = read_table(spark, p, point_lookup=(key, [probe(v) for v in val]))
+            elif op == "=":
+                df = read_table(spark, p, point_lookup=(key, [probe(val)]))
+            else:
+                lo, hi = (probe(val), None) if op[0] == ">" else (None, probe(val))
+                df = read_table(spark, p, range_scan=(key, lo, hi))
+            single = _to_sql((col, op, val))
+            want1 = con.sql(f"SELECT k, cat, v, d FROM t WHERE {single}").fetchall()
+            got1 = df.filter(single).select("k", "cat", "v", "d").collect()
+            assert _bag(got1) == _bag(want1), f"read_table {p}: {single}"
 
 
 def test_filter_applies_before_arrow_bridge(spark, fuzz_table):
@@ -165,8 +197,8 @@ def test_filter_applies_before_arrow_bridge(spark, fuzz_table):
     count, not the table size."""
     from nimble_spark.plans.scan_metrics import totals
 
-    path, _path_sharded, con = fuzz_table
-    df = spark.read.format("nimble").option("pushdown", "true").load(path).filter("k = 3 AND cat = 'a'")
+    paths, con = fuzz_table
+    df = spark.read.format("nimble").option("pushdown", "true").load(paths["k"]).filter("k = 3 AND cat = 'a'")
     t = totals(df)
     matched = con.sql("SELECT COUNT(*) FROM t WHERE k = 3 AND cat = 'a'").fetchone()[0]
     assert matched > 0

@@ -39,8 +39,29 @@ from nimble_spark.sources.table import (
 pytestmark = pytest.mark.slow
 
 
+@pytest.fixture(autouse=True)
+def _fixed_parallelism(spark):
+    """Split file scans and shuffles into 4 partitions whatever the
+    session's core count (``_df`` slices its rows into 4 too): every
+    write of the drill then makes the same files on every machine, so
+    the sharded variants cross their 4-file threshold as they do on 4
+    cores."""
+    keys = ("spark.sql.leafNodeDefaultParallelism", "spark.sql.shuffle.partitions")
+    old = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "4")
+    yield
+    for k, v in old.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
 def _df(spark, rows):
-    return spark.createDataFrame([(k, v) for k, v in rows], "k LONG, v LONG")
+    # 4 slices whatever the core count (see _fixed_parallelism)
+    rdd = spark.sparkContext.parallelize([(k, v) for k, v in rows], 4)
+    return spark.createDataFrame(rdd, "k LONG, v LONG")
 
 
 def _live(spark, path) -> dict[int, int]:

@@ -38,6 +38,7 @@ ALLOWED = [
     ("sources/datasource.py", "_read_file_batches", "the format(\"nimble\") file reader: runs executor-side, one file per InputPartition (definitions and per-partition calls)"),
     ("sources/datasource.py", "pq.read_table(file_path, columns=file_cols", "the executor-side reader's one-file read, projected and filtered"),
     ("sources/bloom.py", "pa_pq.read_table(sc_path)", "the bloom sidecar: one small metadata file of per-row-group bloom bitsets, no data rows"),
+    ("sources/bloom.py", "_bucket_ids(m, key, values)", "EXPLAIN PRUNING's bucket ids of the caller-supplied probe values: one row of O(len(values)) ints, no data rows"),
     ("sources/serde.py", "pushed = [(stored[0], \"in\"", "serve_lookups' driver read of its hit files: only the files the point-lookup pruning keeps, filtered to the batch's keys, and only while their bytes fit spark.sql.autoBroadcastJoinThreshold (else the Spark read)"),
     ("sources/encoding_report.py", "df.agg(*aggs).first()", "single-row per-column stats (ndv/min/max/bytes) for the encoding-cost report — EncodingSelectionPolicy analogue runs on aggregates, never rows"),
     ("sources/encoding_policy.py", "df.agg(*aggs).first()", "single-row profile pass (one agg row regardless of table size) feeding the policy decision — same bounded shape as encoding_report.py"),

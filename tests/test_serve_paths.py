@@ -52,7 +52,7 @@ def _rows(spark):
 def _assert_pruned(spark, path):
     """The layout's index keeps fewer files than the table has."""
     m = read_manifest(path)
-    assert len(_point_lookup_entries(spark, path, m, "k", [HOT_KEY])) < len(m["files"])
+    assert len(_point_lookup_entries(spark, path, m, "k", [HOT_KEY])[1]) < len(m["files"])
 
 
 def _cluster(spark, path):

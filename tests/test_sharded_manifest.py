@@ -284,7 +284,7 @@ def test_pyds_pushdown_skips_disjoint_pages(spark, tmpdir, monkeypatch):
     )
     assert loads == []  # root-only construction: zero page I/O
     reader.pushFilters([EqualTo(("k",), 7)])
-    kept = reader.kept_files()
+    kept = reader.partitions()
     assert len(kept) == 1 and len(set(loads)) == 1  # 1 of 8 pages read
 
     monkeypatch.setattr(tbl, "_load_page", real)

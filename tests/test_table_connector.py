@@ -368,7 +368,7 @@ def test_zorder_prunes_both_dimensions(spark, tmpdir):
     """Z-order layout: a narrow range scan on EITHER key must skip
     files (1-D clustering can only ever prune on its leading key),
     and pruned scans return exactly the right rows."""
-    from nimble_spark.sources.table import _prune_files, read_manifest
+    from nimble_spark.sources.table import _range_scan_entries, read_manifest
 
     src = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
     path = f"{tmpdir}/orders_z"
@@ -384,7 +384,7 @@ def test_zorder_prunes_both_dimensions(spark, tmpdir):
         ("o_custkey", 1, ck_max // 8),
         ("o_totalprice", 1.0, tp_max / 8),
     ):
-        kept = _prune_files(read_manifest(path), path, key, lo, hi)
+        kept = _range_scan_entries(read_manifest(path), path, key, lo, hi)
         assert kept is not None and len(kept) < len(m["files"]), key
         got = read_table(spark, path, range_scan=(key, lo, hi))
         want = src.filter((F.col(key) >= lo) & (F.col(key) <= hi))
@@ -990,7 +990,7 @@ def test_inverted_index_prunes_posting_files(spark, tmpdir):
         build_inverted_index,
         lookup_token,
     )
-    from nimble_spark.sources.table import _prune_files
+    from nimble_spark.sources.table import _prune_entries
 
     import os
 
@@ -1002,7 +1002,7 @@ def test_inverted_index_prunes_posting_files(spark, tmpdir):
 
     # probe prunes posting files via the token cluster range
     side = os.path.join(path, INVERTED_DIR, "text")
-    kept = _prune_files(m, side, "token", "the", "the")
+    kept = _prune_entries(m, side, [("token", "eq", "the")])
     assert kept is not None and len(kept) <= len(m["files"])
 
     got = {r["doc_id"] for r in lookup_token(spark, path, "the").select("doc_id").collect()}
@@ -1812,6 +1812,124 @@ def test_point_lookup_prunes_cluster_files_per_value(spark, tmpdir):
     df = read_table(spark, path, point_lookup=("k", [998, 3]))
     assert len(df.inputFiles()) == 2
     assert sorted(tuple(r) for r in df.collect()) == [(3, 21), (998, 6986)]
+
+
+@pytest.fixture(scope="module")
+def date_table(spark):
+    """1,000 rows clustered by the DATE column d into 8 files."""
+    d = tempfile.mkdtemp(prefix="nimble_date_key_")
+    path = f"{d}/t"
+    write_table(
+        spark.range(1000).selectExpr("date_add(DATE'2024-01-01', CAST(id % 200 AS INT)) AS d", "id AS v"),
+        path,
+        WriteOptions(cluster_by=["d"], n_cluster_files=8),
+    )
+    yield path
+    shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "entry", ["range_scan", "point_lookup", "serve_lookups", "fast_count", "explain_pruning"]
+)
+def test_date_key_prunes(spark, date_table, entry, monkeypatch):
+    """Every stats-pruning entry point compares DATE stats (stored as
+    ISO strings) with date probes: the answer equals an unpruned read
+    and fewer files than the table has are kept."""
+    import datetime as dt
+
+    import nimble_spark.sources.table as tbl
+    from nimble_spark.sources.bloom import explain_pruning
+    from nimble_spark.sources.compaction import fast_count
+    from nimble_spark.sources.serde import serve_lookups
+
+    path = date_table
+    lo, hi = dt.date(2024, 2, 1), dt.date(2024, 2, 10)
+    n_files = len(read_manifest(path)["files"])
+    full = read_table(spark, path)
+    kept: list = []
+    real = tbl._prune_entries
+    monkeypatch.setattr(tbl, "_prune_entries", lambda *a: kept.append(real(*a)) or kept[-1])
+    if entry == "range_scan":
+        got = read_table(spark, path, range_scan=("d", lo, hi)).count()
+        want = full.filter(F.col("d").between(lo, hi)).count()
+    elif entry == "point_lookup":
+        got = read_table(spark, path, point_lookup=("d", [lo, hi])).count()
+        want = full.filter(F.col("d").isin(lo, hi)).count()
+    elif entry == "serve_lookups":
+        reqs = spark.createDataFrame([(1, lo), (2, hi)], "request_id LONG, d DATE")
+        got = sum(r["n_rows"] for r in serve_lookups(spark, path, reqs, "d", ["v"]).collect())
+        want = full.filter(F.col("d").isin(lo, hi)).count()
+    elif entry == "fast_count":
+        got = fast_count(spark, path, range_filter=("d", lo, hi))
+        want = full.filter(F.col("d").between(lo, hi)).count()
+    else:
+        verdicts = explain_pruning(spark, path, "d", lo=lo, hi=hi)
+        got = {v["file"] for v in verdicts if v["kept"]}
+        want = {f["path"] for f in kept[0]}
+    assert got == want and want
+    assert kept and 0 < len(kept[0]) < n_files
+
+
+def test_stats_bounds_keep_what_does_not_compare():
+    """Timestamp, decimal and binary stats are stored as strings that
+    order unlike their values: no probe compares with them, so every
+    file is kept. Dates parse; numbers and strings compare as stored."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from nimble_spark.sources.table import _stat_bounds
+
+    def entry(lo, hi):
+        return {"min": {"c": lo}, "max": {"c": hi}}
+
+    ts = entry("2024-01-05 00:00:00", "2024-01-05 00:00:00.500000")
+    assert _stat_bounds(ts, "c", dt.datetime(2024, 1, 5)) is None
+    assert _stat_bounds(entry("9.50", "12.00"), "c", Decimal("10")) is None
+    assert _stat_bounds(entry("b'a'", "b'z'"), "c", b"m") is None
+    assert _stat_bounds(entry(1, 9), "c", "5") is None
+    assert _stat_bounds(entry(None, 9), "c", 5) is None
+    assert _stat_bounds(entry("2024-01-05", "2024-02-29"), "c", dt.date(2024, 2, 1)) == (
+        dt.date(2024, 1, 5),
+        dt.date(2024, 2, 29),
+    )
+    assert _stat_bounds(entry(31.0, float("nan")), "c", 30.0) is None
+    assert _stat_bounds(entry(1.0, 9.0), "c", float("nan")) is None
+    assert _stat_bounds(entry(1, 9), "c", 2.5) == (1, 9)
+    assert _stat_bounds(entry("a", "q"), "c", "b") == ("a", "q")
+
+
+def test_nan_bound_keeps_its_file(spark, tmpdir):
+    """Spark orders NaN above every double and parquet records it as
+    a file's max: a file whose max is NaN can hold rows above any
+    probe, so neither read_table nor format("nimble") may skip it."""
+    from nimble_spark.sources.datasource import register_nimble_source
+
+    path = f"{tmpdir}/nan_key"
+    df = spark.range(40).selectExpr(
+        "CASE WHEN id = 5 THEN CAST('NaN' AS DOUBLE) ELSE CAST(id AS DOUBLE) END AS x", "id"
+    )
+    write_table(df, path, WriteOptions(cluster_by=["x"], n_cluster_files=4))
+    assert any(f["max"]["x"] != f["max"]["x"] for f in read_manifest(path)["files"])
+    want = df.filter("x >= 30").count()
+    assert read_table(spark, path, range_scan=("x", 30.0, None)).count() == want
+    register_nimble_source(spark)
+    pushed = spark.read.format("nimble").option("pushdown", "true").load(path)
+    assert pushed.filter("x >= 30").count() == want
+    assert pushed.filter("x = CAST('NaN' AS DOUBLE)").count() == 1
+
+
+def test_fast_count_range_leaves_out_null_keys(spark, tmpdir):
+    """A file whose key bounds lie inside the range but that holds
+    null keys is scanned, not counted whole from its row count."""
+    from nimble_spark.sources.compaction import fast_count
+
+    path = f"{tmpdir}/null_keys"
+    df = spark.range(120).selectExpr("CASE WHEN id < 20 THEN NULL ELSE id END AS k", "id AS v")
+    write_table(df, path, WriteOptions(cluster_by=["k"], n_cluster_files=4))
+    assert any(f["nulls"]["k"] for f in read_manifest(path)["files"])
+    for lo, hi in ((0, 1000), (20, 60), (None, 40)):
+        want = df.filter(F.col("k").between(-1 if lo is None else lo, hi)).count()
+        assert fast_count(spark, path, range_filter=("k", lo, hi)) == want
 
 
 # Logical-view matrix: every layout a read resolves through the

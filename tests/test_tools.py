@@ -209,16 +209,21 @@ def test_show_scan_metrics_pruning(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_explain_pruning(spark, table_path):
-    """EXPLAIN PRUNING dry-runs the skip decision: on the clustered
-    table a narrow BETWEEN marks out-of-range files pruned_by=range
-    without reading data, and verdicts agree with the actual pruned
-    scan."""
-    from nimble_spark.sources.table import read_table
-
+def _scanned(df, root) -> set[str]:
+    """The root-relative files a frame's scan reads."""
     import os
+    from urllib.parse import unquote, urlparse
 
-    from nimble_spark.sources.table import _prune_files, read_manifest
+    return {os.path.relpath(unquote(urlparse(p).path), root) for p in df.inputFiles()}
+
+
+def test_explain_pruning(spark, table_path, tmp_path):
+    """EXPLAIN PRUNING dry-runs the skip decision read_table takes: on
+    the clustered table a narrow BETWEEN marks out-of-range files
+    pruned_by=range without reading data, and the kept set equals the
+    files the scan reads, for ranges and point lists alike."""
+    from nimble_spark.sources.bloom import explain_pruning
+    from nimble_spark.sources.table import read_table
 
     rows = tools.run_command(
         spark, table_path, "EXPLAIN PRUNING o_orderkey BETWEEN 100 AND 200"
@@ -227,14 +232,49 @@ def test_explain_pruning(spark, table_path):
     pruned = [r for r in rows if not r["kept"]]
     assert pruned and all(r["pruned_by"] == "range" for r in pruned)
     assert 1 <= len(kept) < len(rows)
-    # dry-run verdicts equal the real pruning decision
-    real = _prune_files(read_manifest(table_path), table_path, "o_orderkey", 100, 200)
-    assert {os.path.relpath(p, table_path) for p in real} == kept
-    # the kept files cover every matching row
+    # the dry-run kept set is the real scan's file set, which covers
+    # every matching row
     got = read_table(spark, table_path, range_scan=("o_orderkey", 100, 200))
+    assert _scanned(got, table_path) == kept
     assert got.count() == spark.read.parquet(f"{SF_SMALL}/orders.parquet").filter(
         "o_orderkey BETWEEN 100 AND 200"
     ).count()
+
+    # 8 files clustered by k, v = k: a point list at both ends reads
+    # the two files that hold it (not the hull between them), and a
+    # range on the unindexed v reads every file
+    path = str(tmp_path / "kv")
+    write_table(
+        spark.range(1000).selectExpr("id AS k", "id AS v"),
+        path,
+        WriteOptions(cluster_by=["k"], n_cluster_files=8),
+    )
+    for dry, scan in (
+        (
+            explain_pruning(spark, path, "k", values=[3, 998]),
+            read_table(spark, path, point_lookup=("k", [3, 998])),
+        ),
+        (
+            explain_pruning(spark, path, "v", lo=0, hi=10),
+            read_table(spark, path, range_scan=("v", 0, 10)),
+        ),
+    ):
+        assert len(dry) == 8
+        assert {d["file"] for d in dry if d["kept"]} == _scanned(scan, path)
+        assert {d["pruned_by"] for d in dry if not d["kept"]} <= {"range"}
+    assert sum(d["kept"] for d in explain_pruning(spark, path, "k", values=[3, 998])) == 2
+    assert all(d["kept"] for d in explain_pruning(spark, path, "v", lo=0, hi=10))
+
+    # hash buckets prune at execution (the frame lists every file): the
+    # dry run keeps as many files as the executed scan opens
+    from nimble_spark.plans.scan_metrics import totals
+
+    bucketed = str(tmp_path / "bucketed")
+    write_table(spark.range(1000).selectExpr("id AS k"), bucketed, WriteOptions(bucket_by="k", n_buckets=4))
+    dry = explain_pruning(spark, bucketed, "k", values=[3])
+    scan = read_table(spark, bucketed, point_lookup=("k", [3]))
+    assert 0 < sum(d["kept"] for d in dry) == totals(scan)["numFiles"] < len(dry)
+    assert "hash" in {d["pruned_by"] for d in dry if not d["kept"]} <= {"hash", "range"}
 
 
 def test_write_stats_and_checksums(spark, table_path):
